@@ -10207,9 +10207,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     below are the 147 still-never-driver-checked entries in
     alphabetical order -- the r6 gate window should be exactly
     positions 51-100 promoted to 1-50 (they are already ordered), and
-    r7 drains the final 97. Positions 198+ are the 184 entries with
+    r7 drains the final 97. Positions 198+ are the 181 entries with
     r1-r4 driver rows (freshest evidence last to need re-confirmation),
-    kept in their r4 relative order. Every displaced entry remains in
+    kept in their r4 relative order; 3 more names carry r1-r4 driver
+    rows but are no longer registered. Every displaced entry remains in
     the full local sweep artifacts (both sf0.001 and sf0.01 grids,
     committed per round as the compensating control)."""
     return {

@@ -4,8 +4,8 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Reported metrics map to BASELINE.json: rolled-up points/sec per retention
 tier, discord-detection (S2G) wall time, plus per-query seconds for the
-operator suite. Run scripts/scaling_bench.py for the N-vs-4N (local[8] vs
-local[32]) scaling-efficiency evidence.
+operator suite. Per-stage utilisation and straggler ratios come from
+perfbench (python3 perfbench/run.py).
 """
 
 from __future__ import annotations
@@ -22,42 +22,7 @@ def _now() -> float:
     return time.perf_counter()
 
 
-def _steal_kernel(_):
-    # ~2 s of sustained FP work per process (the hypervisor-steal regime
-    # documented in BASELINE.md only engages under SUSTAINED all-core
-    # load; a sub-second burst always reads clean)
-    x = np.random.default_rng(0).standard_normal(200_000)
-    s = 0.0
-    for _ in range(150):
-        s += float(np.convolve(x[:65536], x[:1024], "valid").sum())
-    return s
-
-
-def steal_ratio() -> float:
-    """Self-flagging contamination indicator, stamped into the bench
-    artifact: wall time of the SAME fixed per-process NumPy kernel at 32
-    vs 8 processes (min of 2 runs each). Clean hardware reads ~1.0-1.15;
-    the documented steal regime reads 1.4-20x. Measured BEFORE the Spark
-    session so it never overlaps lane timings, and never subtracted from
-    them — it lets the judge read the per-lane numbers honestly
-    (BENCH_r04's four 'regressed' lanes were exactly this signature,
-    diagnosable only by cross-referencing session artifacts)."""
-    import multiprocessing as mp
-
-    def wall(n: int) -> float:
-        t0 = _now()
-        with mp.Pool(n) as p:
-            p.map(_steal_kernel, range(n))
-        return _now() - t0
-
-    w8 = min(wall(8) for _ in range(2))
-    w32 = min(wall(32) for _ in range(2))
-    return w32 / w8
-
-
 def run_bench(sf_dir: str, cpus: int) -> dict:
-    steal = steal_ratio()
-
     from pyspark.sql import functions as F
 
     import __spark_entry__ as em
@@ -299,10 +264,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": sf_dir,
         "cpus": cpus,
-        "extras": {
-            **{k: round(v, 3) for k, v in extras.items()},
-            "steal_canary_ratio": round(steal, 3),
-        },
+        "extras": {k: round(v, 3) for k, v in extras.items()},
     }
 
 
@@ -323,9 +285,6 @@ def compact_summary(result: dict) -> str:
         "cpus": result["cpus"],
         "lanes": len(result["queries"]),
     }
-    steal = result.get("extras", {}).get("steal_canary_ratio")
-    if steal is not None:
-        compact["steal"] = steal  # clean window ~1.0-1.15 (BASELINE.md)
     line = json.dumps(compact, separators=(",", ":"))
     if len(line.encode()) > 200:
         raise ValueError(f"bench summary line too long ({len(line)} bytes)")
@@ -335,7 +294,7 @@ def compact_summary(result: dict) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     result = run_bench(sf_dir, cpus)
     print(json.dumps(result))
     print(compact_summary(result))

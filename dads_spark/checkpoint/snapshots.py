@@ -70,30 +70,26 @@ class SnapshotStore:
     def _data_path(self, table: str, version: int) -> str:
         return os.path.join(self.root, "data", table, f"v={version}")
 
-    def _stray_versions(self, table: str) -> list[int]:
-        """Data dirs on disk (committed or orphaned by a crash mid-commit)."""
-        base = os.path.join(self.root, "data", table)
+    @staticmethod
+    def _dir_versions(base: str, prefix: str) -> list[int]:
+        """Version numbers of the ``<prefix><int>`` entries under ``base``.
+        Each name is parsed on its own: a malformed one is skipped, never
+        allowed to hide the well-formed orphans beside it."""
         try:
-            return [
-                int(e.split("=", 1)[1])
-                for e in os.listdir(base)
-                if e.startswith("v=")
-            ]
+            entries = os.listdir(base)
         except OSError:
             return []
+        tails = [e[len(prefix):] for e in entries if e.startswith(prefix)]
+        return [int(t) for t in tails if t.isdecimal()]
+
+    def _stray_versions(self, table: str) -> list[int]:
+        """Data dirs on disk (committed or orphaned by a crash mid-commit)."""
+        return self._dir_versions(os.path.join(self.root, "data", table), "v=")
 
     def _stray_sidecar_versions(self, table: str) -> list[int]:
         """MOR-delete sidecar dirs on disk (committed or orphaned by a
         crash between sidecar write and log append)."""
-        base = os.path.join(self.root, table)
-        try:
-            return [
-                int(e.split("_deletes_v", 1)[1])
-                for e in os.listdir(base)
-                if e.startswith("_deletes_v")
-            ]
-        except (OSError, ValueError):
-            return []
+        return self._dir_versions(os.path.join(self.root, table), "_deletes_v")
 
     def commit(
         self, table: str, df: DataFrame, note: str = "", audit=None, extra=None

@@ -18,19 +18,12 @@ executors) and large enough that compute, not per-job driver overhead,
 dominates — a 2-second job cannot demonstrate scaling at any core count.
 Each workload is timed on its SECOND run (JIT/GC-warm) within its JVM, and
 each (workload, level) pair is repeated REPEATS times with levels
-interleaved, keeping the minimum (this VM shares hardware with noisy
-neighbors: the pure-CPU hardware-ceiling probe alone swings 0.62-0.88
-across runs, so single-shot timings are meaningless; the per-pair minimum
-is the least-interfered sample and the interleave stops a slow period from
-biasing one level).
+interleaved, keeping the minimum (on shared hardware single-shot timings
+are noisy; the per-pair minimum is the least-interfered sample and the
+interleave stops a slow period from biasing one level).
 
-Hardware calibration: this sandbox VM does not deliver 32 independent
-cores under full load (frequency scaling / steal). A pure-CPU
-multiprocessing probe measures the achievable 8->32 ceiling, and the report
-includes both raw efficiency and efficiency normalized by that ceiling —
-the normalized number is what a real 4N-executor cluster (4x independent
-machines) would see, since every workload here is partition-parallel with
-no cross-task contention.
+The efficiency is raw: it needs a host with >= 32 cores, since on fewer
+local[32] oversubscribes and the ratio says nothing about scaling.
 
 Usage: python scripts/scaling_bench.py [sf_dir] > scaling.json
 """
@@ -265,12 +258,6 @@ def run_workload(cpus: int, workload: str) -> dict:
 
 REPEATS = int(os.environ.get("SCALING_BENCH_REPEATS", "3"))
 
-# SCALING_BENCH_WORKLOADS=dist (comma-list) re-runs a subset — used when one
-# lane's samples were contaminated and only that lane needs a clean window
-_sel = os.environ.get("SCALING_BENCH_WORKLOADS")
-if _sel:
-    WORKLOADS = {k: v for k, v in WORKLOADS.items() if k in _sel.split(",")}
-
 
 def run_levels(repeats: int = REPEATS) -> tuple[dict, dict, dict]:
     """Run every (workload, level) pair ``repeats`` times, INTERLEAVING the
@@ -304,113 +291,28 @@ def run_levels(repeats: int = REPEATS) -> tuple[dict, dict, dict]:
     return out[8], out[32], samples
 
 
-def _burn(_):
-    s = 0
-    for i in range(20_000_000):
-        s += i % 7
-    return s
-
-
-def _burn_numpy(_):
-    # the workloads' actual resource profile: NumPy elementwise + reduction
-    # passes over arrays far beyond L2, so the probe saturates the same
-    # DRAM bandwidth the S2G/rollup kernels do
-    import numpy as np
-
-    x = np.arange(4_000_000, dtype=np.float64)
-    s = 0.0
-    for _i in range(12):
-        y = np.sqrt(x) * 1.0001 + x
-        s += float(y.sum())
-    return s
-
-
-def _ceiling_with(fn) -> float:
-    import multiprocessing as mp
-    import time
-
-    times = {}
-    for procs in (8, 32):
-        with mp.Pool(procs) as p:
-            t0 = time.perf_counter()
-            p.map(fn, range(procs))
-            times[procs] = time.perf_counter() - t0
-    return times[8] / times[32]
-
-
-def hardware_ceiling() -> tuple[float, float]:
-    """Max achievable 8->32 strong-scaling efficiency on THIS box: run k
-    proportional tasks on k processes; with perfect hardware the wall time
-    is flat. Returns (pure-CPU ceiling, NumPy-array ceiling). The array
-    ceiling is what the S2G/rollup workloads can actually reach here —
-    they stream NumPy arrays through shared DRAM, which a single box does
-    NOT scale 8->32 the way 4x independent cluster machines (4x memory
-    bandwidth) do; the pure-CPU number is kept for transparency."""
-    return _ceiling_with(_burn), _ceiling_with(_burn_numpy)
-
-
 def main() -> None:
     if not os.path.exists(os.path.join(PAGES_PATH, "_SUCCESS")):
         print("preparing pages parquet input...", file=sys.stderr, flush=True)
         run_workload(32, "prepare")
-    # probe BEFORE and AFTER the workload runs: the ceiling is a hardware
-    # property, so the max across probes is the least-steal-contaminated
-    # estimate — and a probe pair that disagrees wildly (one regime each
-    # side) no longer silently normalizes the workloads with a
-    # stolen-window sample (the r4c lesson: array 0.548 vs cpu 1.099 in
-    # one run was two different steal regimes, not hardware)
-    probes = [hardware_ceiling() for _ in range(2)]
     r8, r32, samples = run_levels()
-    probes += [hardware_ceiling() for _ in range(2)]
-    hw_cpu = max(p[0] for p in probes)
-    hw_arr = max(p[1] for p in probes)
     report = {
         "n_cpus": 8,
         "4n_cpus": 32,
-        "hw_ceiling_8_to_32_efficiency": round(hw_cpu, 3),
-        "hw_ceiling_numpy_array_8_to_32": round(hw_arr, 3),
-        "probe_samples": [
-            {"cpu": round(p[0], 3), "arr": round(p[1], 3)} for p in probes
-        ],
-        "normalization": "workloads normalize by the NumPy-array ceiling "
-        "(same DRAM-bandwidth profile as the kernels; 4 independent cluster "
-        "machines scale bandwidth linearly, one box does not); the pure-CPU "
-        "ceiling is reported for transparency",
         "repeats": REPEATS,
         "aggregation": "min time per (workload, level) across repeats, levels interleaved",
         "samples_sec": samples,
         "levels": [r8, r32],
     }
-    raw_effs = []
     for metric in (
         "rollup_sec",
         "s2g_grouped_sec",
         "s2g_grouped_eff_sec",
         "s2g_distributed_sec",
     ):
-        if metric not in r8:  # SCALING_BENCH_WORKLOADS subset run
-            continue
         t8, t32 = r8[metric], r32[metric]
-        raw_effs.append((t8 / t32) / 4.0)
         report[f"{metric}_efficiency"] = round((t8 / t32) / 4.0, 3)
         report[f"{metric}_speedup"] = round(t8 / t32, 2)
-        report[f"{metric}_efficiency_hw_normalized"] = round(
-            (t8 / t32) / 4.0 / hw_arr, 3
-        )
-        report[f"{metric}_efficiency_cpu_normalized"] = round(
-            (t8 / t32) / 4.0 / hw_cpu, 3
-        )
-    # a true hardware ceiling cannot be LOWER than a real workload's raw
-    # efficiency (the workload contains the probe's resource profile plus
-    # more); if the short array probe under-measures it, its normalization
-    # is invalid for this run — say so in the artifact
-    report["array_ceiling_valid"] = bool(hw_arr >= max(raw_effs))
-    if not report["array_ceiling_valid"]:
-        report["normalization"] += (
-            " [THIS RUN: array probe measured below a real workload's raw "
-            "efficiency -> probe sample invalid; use the cpu-normalized "
-            "(conservative) numbers]"
-        )
     print(json.dumps(report, indent=2))
 
 

@@ -38,13 +38,3 @@ def test_summary_is_independent_of_lane_count():
     assert a["value"] == b["value"]
     assert len(compact_summary(_fake_result(500)).encode()) <= 200
 
-
-def test_summary_carries_steal_indicator():
-    r = _fake_result(90)
-    r["extras"]["steal_canary_ratio"] = 1.11
-    line = compact_summary(r)
-    assert len(line.encode()) <= 200
-    assert json.loads(line)["steal"] == 1.11
-    # absent indicator -> key omitted, line still parses
-    line2 = compact_summary(_fake_result(90))
-    assert "steal" not in json.loads(line2)

@@ -291,6 +291,28 @@ def test_mor_delete_retry_skips_orphaned_sidecar(spark, tmp_path):
     )
 
 
+def test_mor_delete_retry_sees_orphan_beside_malformed_sidecar(spark, tmp_path):
+    # a malformed _deletes_v* name must be skipped on its own, not hide
+    # the real orphan next to it (else the retry recomputes v1 and trips
+    # errorifexists on the orphan forever)
+    import os
+
+    store = SnapshotStore(spark, str(tmp_path / "s"))
+    store.commit("t", _df(spark, 6, "x"))
+    table_dir = os.path.join(str(tmp_path / "s"), "t")
+    spark.createDataFrame([(5,)], "k long").write.parquet(
+        os.path.join(table_dir, "_deletes_v1")
+    )
+    os.makedirs(os.path.join(table_dir, "_deletes_vX"))
+    v = store.delete_keys_mor(
+        "t", spark.createDataFrame([(2,)], "k long"), ["k"]
+    )
+    assert v == 2
+    assert {r["k"] for r in store.read("t").collect()} == (
+        set(range(6)) - {2}
+    )
+
+
 def test_vacuum_reclaims_superseded_stacked_sidecars(spark, tmp_path):
     # stacked MOR deletes share one base data path; vacuum with the base
     # path retained by a kept version must still reclaim the superseded
