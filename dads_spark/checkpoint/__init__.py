@@ -1,4 +1,4 @@
 """Checkpoint/resume: per-stage manifests with lineage + row counts."""
 
-from .manifest import CheckpointManager, TieredRollupJob, fingerprint  # noqa: F401
+from .manifest import CheckpointManager, fingerprint  # noqa: F401
 from .snapshots import SnapshotStore  # noqa: F401

@@ -4,17 +4,23 @@ north rule (BASELINE.json:6,14): every rollup stage checkpoints
 per-partition lineage and row counts so a killed job resumes from the last
 committed tier.
 
-Design: each stage commit writes
-- the stage output itself (parquet, atomic via Spark's _SUCCESS semantics)
-- a manifest row table ``<root>/_manifest/stage=<name>/`` holding one row
-  per output partition: (stage, partition_id, row_count, input_fingerprint,
-  committed_at)
+Design: a stage is written exactly once, as the next version of its table
+in a :class:`~dads_spark.checkpoint.snapshots.SnapshotStore`; that
+snapshot commit IS the checkpoint. The commit then writes a manifest
+``<root>/_manifest/stage=<name>/part-0.parquet`` holding one row per output
+partition: (partition_id, row_count, stage, input_fingerprint,
+committed_at), taken from the snapshot entry's ``partition_rows`` with
+pyarrow — no second Spark pass over the data.
 
 ``input_fingerprint`` is a stable hash of the stage's declared inputs
 (paths + parameters), so resuming with *changed* inputs invalidates the
-checkpoint instead of silently reusing it. The runner (``TieredRollupJob``)
-skips any stage whose manifest is present AND fingerprint-matched, giving
-resume-from-last-committed-tier.
+checkpoint instead of silently reusing it. A stage counts as committed
+when its manifest carries exactly the current fingerprint AND the store's
+latest version of the stage carries it too. Order of the two writes: the
+snapshot-log swap first, the manifest second (temp file + ``os.replace``).
+A crash between them leaves a published version without a manifest; the
+rerun recomputes that stage and publishes the next version with the same
+rows.
 """
 
 from __future__ import annotations
@@ -22,9 +28,13 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from pyspark.sql import DataFrame, SparkSession
+
+from .snapshots import SnapshotStore
 
 
 def fingerprint(payload: dict) -> str:
@@ -32,83 +42,54 @@ def fingerprint(payload: dict) -> str:
 
 
 class CheckpointManager:
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(self, spark: SparkSession, root: str, store: SnapshotStore):
         self.spark = spark
         self.root = root
-
-    def _stage_path(self, stage: str) -> str:
-        return os.path.join(self.root, stage)
+        self.store = store
 
     def _manifest_path(self, stage: str) -> str:
         return os.path.join(self.root, "_manifest", f"stage={stage}")
 
     def is_committed(self, stage: str, input_fp: str) -> bool:
-        path = self._manifest_path(stage)
         try:
-            rows = self.spark.read.parquet(path).select("input_fingerprint").distinct().collect()
-        except Exception:
+            fps = pq.read_table(
+                self._manifest_path(stage), columns=["input_fingerprint"]
+            )["input_fingerprint"].to_pylist()
+        except (OSError, pa.ArrowInvalid):
             return False
-        return len(rows) == 1 and rows[0][0] == input_fp
+        if set(fps) != {input_fp}:
+            return False
+        latest = self.store.entry(stage)
+        return latest is not None and latest.get("fp") == input_fp
 
     def commit(self, stage: str, df: DataFrame, input_fp: str) -> DataFrame:
-        """Write stage output + manifest; returns the reloaded output."""
-        out_path = self._stage_path(stage)
-        df.write.mode("overwrite").parquet(out_path)
-        written = self.spark.read.parquet(out_path)
-        manifest = (
-            written.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("row_count"))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("input_fingerprint", F.lit(input_fp))
-            .withColumn("committed_at", F.lit(time.time()))
+        """Publish ``df`` as the stage's next snapshot version, then write
+        its manifest; returns the committed output."""
+        version = self.store.commit(
+            stage, df, note=f"stage {stage}", extra={"fp": input_fp}
         )
-        manifest.write.mode("overwrite").parquet(self._manifest_path(stage))
-        return written
+        entry = self.store.entry(stage, version)
+        # an empty output still gets one (zero-count) row, so it resumes
+        parts = sorted((int(p), n) for p, n in entry["partition_rows"].items())
+        parts = parts or [(0, 0)]
+        table = pa.table(
+            {
+                "partition_id": pa.array([p for p, _ in parts], pa.int32()),
+                "row_count": pa.array([n for _, n in parts], pa.int64()),
+                "stage": [stage] * len(parts),
+                "input_fingerprint": [input_fp] * len(parts),
+                "committed_at": [entry["committed_at"]] * len(parts),
+            }
+        )
+        path = self._manifest_path(stage)
+        os.makedirs(path, exist_ok=True)
+        tmp = os.path.join(path, ".part-0.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, "part-0.parquet"))
+        return self.store.read(stage, version)
 
     def load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._stage_path(stage))
+        return self.store.read(stage)
 
-    def metrics(self, stage: str) -> list:
-        return self.spark.read.parquet(self._manifest_path(stage)).collect()
-
-
-class TieredRollupJob:
-    """Resumable hour->day->week rollup over a raw bucketed source.
-
-    Each tier is one checkpointed stage; a rerun skips committed tiers (same
-    inputs), recomputing only what is missing — the kill/resume contract.
-    """
-
-    def __init__(self, spark: SparkSession, ckpt_root: str, key_cols: list[str]):
-        from ..metrics import StageMetricsCollector
-
-        self.ckpt = CheckpointManager(spark, ckpt_root)
-        self.key_cols = key_cols
-        self.ran_stages: list[str] = []
-        self.skipped_stages: list[str] = []
-        self.metrics = StageMetricsCollector(spark)
-
-    def run(self, raw: DataFrame, ts_col: str, value_col: str | None, input_desc: dict):
-        from ..rollup.tiers import cascade, rollup_from_raw
-
-        fp = fingerprint({**input_desc, "keys": self.key_cols, "value": value_col})
-        outputs = {}
-        prev_tier = None
-        for tier in ("hour", "day", "week"):
-            stage = f"tier_{tier}"
-            if self.ckpt.is_committed(stage, fp):
-                outputs[tier] = self.ckpt.load(stage)
-                self.skipped_stages.append(stage)
-            else:
-                if tier == "hour":
-                    df = rollup_from_raw(raw, self.key_cols, ts_col, value_col, "hour")
-                else:
-                    df = cascade(outputs[prev_tier], self.key_cols, tier)
-                with self.metrics.stage(stage):
-                    outputs[tier] = self.ckpt.commit(stage, df, fp)
-                self.ran_stages.append(stage)
-            prev_tier = tier
-        if self.ran_stages:  # pure-resume reruns keep the prior metrics table
-            self.metrics.write(self.ckpt.root)
-        return outputs
+    def metrics(self, stage: str) -> list[dict]:
+        return pq.read_table(self._manifest_path(stage)).to_pylist()

@@ -1,7 +1,8 @@
 """Versioned tier store: snapshot commits, time-travel reads, vacuum.
 
-The checkpoint manifests (`manifest.py`) give kill/resume for a RUNNING
-job; this module gives the tier STORE a history: every commit writes a
+The checkpoint manifests (`manifest.py`) record lineage over this store's
+commits for kill/resume of a RUNNING job; this module gives the tier
+STORE a history: every commit writes a
 new immutable data directory and appends a snapshot entry, so readers
 can pin "the day tier as of snapshot N" while a writer publishes N+1 —
 the serving contract Iceberg snapshots provide, reduced to its parquet
@@ -63,8 +64,16 @@ class SnapshotStore:
         os.replace(tmp, self._log_path)  # atomic pointer swap
 
     def latest_version(self, table: str) -> int | None:
-        vs = [s["version"] for s in self.history() if s["table"] == table]
-        return max(vs) if vs else None
+        latest = self.entry(table)
+        return None if latest is None else latest["version"]
+
+    def entry(self, table: str, version: int | None = None) -> dict | None:
+        """The log entry of ``table`` at ``version`` (``None`` = the latest
+        version), or ``None`` when there is none. One log parse."""
+        entries = [s for s in self.history() if s["table"] == table]
+        if version is None:
+            return max(entries, key=lambda s: s["version"], default=None)
+        return next((s for s in entries if s["version"] == version), None)
 
     # -- commit / read / vacuum -------------------------------------------
     def _data_path(self, table: str, version: int) -> str:
@@ -151,30 +160,23 @@ class SnapshotStore:
     def read(self, table: str, version: int | None = None) -> DataFrame:
         """The table at ``version`` (time travel), or at the latest
         snapshot. Raises if the version was never committed or vacuumed."""
-        if version is None:
-            version = self.latest_version(table)
-            if version is None:
-                raise ValueError(f"no snapshots for table {table!r}")
-        entries = [
-            s
-            for s in self.history()
-            if s["table"] == table and s["version"] == version
-        ]
-        if not entries:
-            raise ValueError(f"unknown snapshot {table!r} v{version}")
-        path = entries[0]["path"]
-        if not os.path.exists(path):
+        entry = self.entry(table, version)
+        if entry is None:
             raise ValueError(
-                f"snapshot {table!r} v{version} was vacuumed (data gone)"
+                f"no snapshots for table {table!r}"
+                if version is None
+                else f"unknown snapshot {table!r} v{version}"
             )
-        df = self.spark.read.parquet(path)
-        if entries[0].get("delete_path"):
+        if not os.path.exists(entry["path"]):
+            raise ValueError(
+                f"snapshot {table!r} v{entry['version']} was vacuumed (data gone)"
+            )
+        df = self.spark.read.parquet(entry["path"])
+        if entry.get("delete_path"):
             from pyspark.sql import functions as F
 
-            dels = self.spark.read.parquet(entries[0]["delete_path"])
-            df = df.join(
-                F.broadcast(dels), entries[0]["delete_keys"], "left_anti"
-            )
+            dels = self.spark.read.parquet(entry["delete_path"])
+            df = df.join(F.broadcast(dels), entry["delete_keys"], "left_anti")
         return df
 
     def diff(
@@ -274,13 +276,10 @@ class SnapshotStore:
         """
         from pyspark.sql import functions as F
 
-        prev = self.latest_version(table)
-        if prev is None:
+        entry = self.entry(table)
+        if entry is None:
             raise ValueError(f"no snapshots for table {table!r}")
-        entry = [
-            s for s in self.history()
-            if s["table"] == table and s["version"] == prev
-        ][0]
+        prev = entry["version"]
         if entry.get("delete_path") and entry["delete_keys"] != key_cols:
             raise ValueError("stacked MOR deletes must share key columns")
         pending = keys.select(*key_cols).distinct()
@@ -290,7 +289,6 @@ class SnapshotStore:
                     self.spark.read.parquet(entry["delete_path"])
                 ).distinct()
             )
-        floor = -1 if prev is None else prev
         # fold orphan SIDECAR dirs into the version floor too: a crash
         # between the sidecar write below and the log append would
         # otherwise make the retry recompute the same version (no new
@@ -299,7 +297,7 @@ class SnapshotStore:
         # on this table (same crash-retry numbering contract as commit())
         version = (
             max(
-                [floor]
+                [prev]
                 + self._stray_versions(table)
                 + self._stray_sidecar_versions(table)
             )
@@ -334,13 +332,11 @@ class SnapshotStore:
         no sidecar reference. Readers see identical rows before and
         after; the fold means subsequent reads stop paying the
         anti-join."""
-        latest = self.latest_version(table)
-        entry = [
-            s for s in self.history()
-            if s["table"] == table and s["version"] == latest
-        ][0]
+        entry = self.entry(table)
+        if entry is None:
+            raise ValueError(f"no snapshots for table {table!r}")
         if not entry.get("delete_path"):
-            return latest
+            return entry["version"]
         return self.commit(table, self.read(table), note=note)
 
     def rollback(self, table: str, version: int, note: str = "") -> int:
@@ -350,14 +346,9 @@ class SnapshotStore:
         deleted. Readers of "latest" immediately see the old data; the
         rolled-back-PAST versions stay in the history for audit/time
         travel until vacuumed. Returns the new version number."""
-        entries = [
-            s
-            for s in self.history()
-            if s["table"] == table and s["version"] == version
-        ]
-        if not entries:
+        src = self.entry(table, version)
+        if src is None:
             raise ValueError(f"unknown snapshot {table!r} v{version}")
-        src = entries[0]
         if not os.path.exists(src["path"]):
             raise ValueError(
                 f"snapshot {table!r} v{version} was vacuumed (data gone)"

@@ -46,21 +46,20 @@ from pyspark.sql.types import (
 from .deltadelta import decode_timestamps, encode_timestamps
 from .gorilla import decode_values, encode_values
 
-__all__ = ["write_compressed_tier", "read_compressed_tier"]
+__all__ = ["compressed_tier_blobs", "write_compressed_tier", "read_compressed_tier"]
 
 
-def write_compressed_tier(
+def compressed_tier_blobs(
     tier_df: DataFrame,
     key_cols: list[str],
-    path: str,
-    ts_col: str = "bucket_ts",
-    value_col: str = "value_sum",
-    chunk_points: int = 1024,
-) -> None:
+    ts_col: str,
+    value_col: str,
+    chunk_points: int,
+) -> DataFrame:
     """Encode each key's (ts, value) series into ``chunk_points``-sized
-    Gorilla/delta-of-delta blob rows with [t_min_us, t_max_us] pruning
-    columns, written as parquet sorted by (keys, t_min_us) so row-group
-    stats are tight."""
+    Gorilla/delta-of-delta blob rows (keys..., t_min_us, t_max_us,
+    n_points, ts_blob, val_blob, crc) — the row format
+    :func:`read_compressed_tier` serves."""
     fields = [tier_df.schema[k] for k in key_cols]
     out_schema = StructType(
         fields
@@ -97,9 +96,21 @@ def write_compressed_tier(
             )
         return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
 
+    return tier_df.groupBy(*key_cols).applyInPandas(enc, out_schema)
+
+
+def write_compressed_tier(
+    tier_df: DataFrame,
+    key_cols: list[str],
+    path: str,
+    ts_col: str = "bucket_ts",
+    value_col: str = "value_sum",
+    chunk_points: int = 1024,
+) -> None:
+    """:func:`compressed_tier_blobs` written as parquet sorted by
+    (keys, t_min_us) so row-group stats are tight."""
     (
-        tier_df.groupBy(*key_cols)
-        .applyInPandas(enc, out_schema)
+        compressed_tier_blobs(tier_df, key_cols, ts_col, value_col, chunk_points)
         .sortWithinPartitions(*key_cols, "t_min_us")
         .write.mode("overwrite")
         .parquet(path)

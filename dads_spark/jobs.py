@@ -7,21 +7,20 @@ pages(url, warc_ts, html, text, lang)
   -> Gorilla/delta-of-delta compressed tier blobs per domain
   -> sequential-anomaly scoring per domain series (S2G) + DRAG discord ranges
 
-Every tier stage commits a checkpoint manifest (per-partition row counts +
-input fingerprint); a rerun resumes from the last committed tier. The text
-column is never touched (byte-identity invariant, verifiable with
-rollup.text_identity_fingerprint).
+Every stage is written once, as a snapshot version plus a checkpoint
+manifest (per-partition row counts + input fingerprint); a rerun resumes
+from the last committed stage. The text column is never touched
+(byte-identity invariant, verifiable with rollup.text_identity_fingerprint).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import CheckpointManager, SnapshotStore, fingerprint
-from .compress import encode_timestamps, encode_values
+from .compress.blobstore import compressed_tier_blobs
 from .metrics import StageMetricsCollector
 from .ops.sketch import digest, digest_quantiles, merge_digests
 from .rollup import bucket_expr, cascade, gap_fill_linear, pelt_grouped
@@ -35,51 +34,20 @@ from .s2g.discord import discord_series_grouped
 from .s2g.pipeline import score_series_grouped
 
 
-def compress_tier_blobs(
-    tier_df: DataFrame, key_cols: list[str], bucket_col: str, value_col: str
-) -> DataFrame:
-    """Per-key Gorilla/delta-of-delta blobs: (keys..., n_points, ts_blob,
-    value_blob, raw_bytes, blob_bytes). Vectorized bit packing per series."""
-    key_fields = [f for f in tier_df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + ["n_points long", "ts_blob binary, value_blob binary",
-           "raw_bytes long", "blob_bytes long"]
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col)
-        ts = pdf[bucket_col].astype("datetime64[ns]").astype("int64").to_numpy() // 10**9
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        ts_blob = encode_timestamps(ts)
-        v_blob = encode_values(vals)
-        out = {c: [pdf[c].iloc[0]] for c in key_cols}
-        out["n_points"] = [len(vals)]
-        out["ts_blob"] = [ts_blob]
-        out["value_blob"] = [v_blob]
-        out["raw_bytes"] = [len(vals) * 16]
-        out["blob_bytes"] = [len(ts_blob) + len(v_blob)]
-        return pd.DataFrame(out)
-
-    return tier_df.groupBy(*key_cols).applyInPandas(pack, out_schema)
-
-
 class PagesRollupJob:
     """Resumable pages -> tiers -> gap-fill -> anomaly job.
 
-    With ``publish_root`` set, every stage additionally publishes through
-    the versioned SnapshotStore under write-audit-publish: the staged
-    copy is audited against the checkpoint manifest's row count BEFORE
-    the snapshot-log swap makes it visible, so a bad write can never
-    reach readers. Resume composes with publication: a stage that is
-    checkpoint-committed but unpublished (crash between commit and
-    publish) is healed on the next run; a stage whose latest published
-    snapshot already carries the current input fingerprint is left
-    untouched — in particular, an operator ``rollback()`` (which
-    re-publishes an older version of the same fingerprint) SURVIVES a
-    re-run instead of being clobbered. Readers go through
-    :meth:`read_published` (time travel via ``version=``). The publish
-    is a copy-on-write parquet write; on a warehouse filesystem the seam
+    Every stage is written once: as the next version of its table in a
+    versioned :class:`SnapshotStore` (``publish_root``, or
+    ``<ckpt_root>/_snapshots`` without one), followed by a lineage manifest
+    under ``<ckpt_root>/_manifest`` (checkpoint/manifest.py). A rerun skips
+    a stage when its manifest and the store's latest version both carry
+    the current input fingerprint; anything else recomputes the stage and
+    publishes a new version. In particular, an operator ``rollback()``
+    (which re-publishes an older version of the same fingerprint) SURVIVES
+    a re-run instead of being clobbered. Readers go through
+    :meth:`read_published` (time travel via ``version=``). The publish is
+    a copy-on-write parquet write; on a warehouse filesystem the seam
     swaps to an Iceberg snapshot commit / directory rename (README)."""
 
     def __init__(
@@ -91,66 +59,28 @@ class PagesRollupJob:
         publish_root: str | None = None,
     ):
         self.spark = spark
-        self.ckpt = CheckpointManager(spark, ckpt_root)
+        self.store = SnapshotStore(
+            spark, publish_root or os.path.join(ckpt_root, "_snapshots")
+        )
+        self.ckpt = CheckpointManager(spark, ckpt_root, self.store)
         self.s2g_params = s2g_params
         self.discord_m = discord_m
         self.ran_stages: list[str] = []
         self.skipped_stages: list[str] = []
-        self.published_stages: list[str] = []
-        self.store = (
-            SnapshotStore(spark, publish_root) if publish_root else None
-        )
         # statistics-protocol counterpart: one duration/bytes row per
         # executed stage, persisted next to the manifests after run()
         self.metrics = StageMetricsCollector(spark)
 
-    def _is_published(self, name: str, fp: str) -> bool:
-        """True when the LATEST published snapshot of ``name`` carries
-        fingerprint ``fp`` (whether an original publish or a rollback
-        entry restoring one)."""
-        latest = self.store.latest_version(name)
-        if latest is None:
-            return False
-        return any(
-            s.get("fp") == fp
-            for s in self.store.history()
-            if s["table"] == name and s["version"] == latest
-        )
-
-    def _publish(self, name: str, fp: str, df: DataFrame) -> None:
-        expected = sum(r["row_count"] for r in self.ckpt.metrics(name))
-
-        def audit(staged: DataFrame) -> None:
-            n = staged.count()
-            if n != expected:
-                raise ValueError(
-                    f"staged row count {n} != checkpoint manifest {expected}"
-                )
-
-        # fingerprint travels in the snapshot entry so resume can tell
-        # "already published for this input" from "needs healing"
-        self.store.commit(
-            name, df, note=f"stage {name}", audit=audit, extra={"fp": fp}
-        )
-        self.published_stages.append(name)
-
     def read_published(self, name: str, version: int | None = None) -> DataFrame:
         """A stage's PUBLISHED output (latest snapshot, or time travel)."""
-        if self.store is None:
-            raise ValueError("job has no publish_root")
         return self.store.read(name, version)
 
     def _stage(self, name: str, fp: str, build):
         if self.ckpt.is_committed(name, fp):
             self.skipped_stages.append(name)
-            df = self.ckpt.load(name)
-            if self.store is not None and not self._is_published(name, fp):
-                self._publish(name, fp, df)  # heal commit-then-crash
-            return df
+            return self.ckpt.load(name)
         with self.metrics.stage(name):
             out = self.ckpt.commit(name, build(), fp)
-        if self.store is not None:
-            self._publish(name, fp, out)
         self.ran_stages.append(name)
         return out
 
@@ -238,7 +168,9 @@ class PagesRollupJob:
         out["compressed"] = self._stage(
             "compress_hour",
             fp,
-            lambda: compress_tier_blobs(out["gapfilled"], ["domain"], "bucket_ts", "v"),
+            lambda: compressed_tier_blobs(
+                out["gapfilled"], ["domain"], "bucket_ts", "v", 1024
+            ),
         )
 
         out["s2g_scores"] = self._stage(
@@ -297,7 +229,7 @@ class PagesRollupJob:
         # SPC chart rules over the committed hour tier: out-of-control
         # LEVELS and RUNS per domain (integer-exact WE/Nelson tests)
         # beside the S2G/discord SHAPE anomalies — the 15th stage, also
-        # checkpoint-resumable and published through WAP when enabled.
+        # checkpoint-resumable and published like every other stage.
         out["chart_rules"] = self._stage(
             "chart_rules",
             fp,
@@ -326,15 +258,15 @@ class PagesRollupJob:
         late_desc: dict,
     ) -> dict[str, DataFrame]:
         """Late-data maintenance: the invalidation refresh of
-        rollup/refresh.py composed with the checkpoint/WAP machinery.
+        rollup/refresh.py composed with the checkpoint machinery.
 
         Refreshes ONLY the (domain, bucket) groups the late rows touch —
         hour from a broadcast-semi pruned rescan of pages ∪ late, day
         from the refreshed hour tier, week from the refreshed day tier —
         and commits them as ``refresh_hour/day/week`` stages under a
         fingerprint covering BOTH inputs, so a killed maintenance run
-        resumes like any other stage and (with a publish_root) each
-        refreshed tier goes through write-audit-publish. Output tiers
+        resumes like any other stage and each refreshed tier is published
+        as a new snapshot version. Output tiers
         are bit-identical to rerunning the whole job over pages ∪ late
         (asserted in test_jobs): untouched buckets carry the committed
         bytes forward, touched buckets recompute from scratch.

@@ -32,7 +32,7 @@ METRICS_SCHEMA = (
     "stage string, wall_sec double, executor_run_ms long, n_jobs int, "
     "n_spark_stages int, n_stages_skipped int, n_tasks long, "
     "input_bytes long, output_bytes long, shuffle_read_bytes long, "
-    "shuffle_write_bytes long, started_at double"
+    "shuffle_write_bytes long, started_at double, error string"
 )
 
 
@@ -73,10 +73,25 @@ class StageMetricsCollector:
             self._rows.append(row)
 
     def _group_stats(self, group: str) -> dict:
-        """Sum AppStatusStore stage metrics over every job in the group."""
-        zero = {
+        """Sum AppStatusStore stage metrics over every job in the group.
+        When any part of the status store cannot be read, the row is
+        flagged with ``error`` and its counters stay null — never zeros or
+        a partial sum."""
+        try:
+            return self._sum_group(group)
+        except Exception as e:  # e.g. a non-py4j backend, an evicted job
+            return {"error": f"{type(e).__name__}: {e}"}
+
+    def _sum_group(self, group: str) -> dict:
+        sc = self.spark.sparkContext
+        job_ids = sc.statusTracker().getJobIdsForGroup(group)
+        store = sc._jsc.sc().statusStore()
+        gw = sc._gateway
+        empty_list = gw.jvm.java.util.ArrayList()
+        no_quantiles = gw.new_array(gw.jvm.double, 0)
+        out = {
             "executor_run_ms": 0,
-            "n_jobs": 0,
+            "n_jobs": len(job_ids),
             "n_spark_stages": 0,
             "n_stages_skipped": 0,
             "n_tasks": 0,
@@ -85,33 +100,15 @@ class StageMetricsCollector:
             "shuffle_read_bytes": 0,
             "shuffle_write_bytes": 0,
         }
-        sc = self.spark.sparkContext
-        try:
-            job_ids = sc.statusTracker().getJobIdsForGroup(group)
-            store = sc._jsc.sc().statusStore()
-            gw = sc._gateway
-            empty_list = gw.jvm.java.util.ArrayList()
-            no_quantiles = gw.new_array(gw.jvm.double, 0)
-        except Exception:
-            return zero  # non-py4j backend: keep wall-clock-only rows
-        out = dict(zero)
-        out["n_jobs"] = len(job_ids)
         seen: set[int] = set()
         for jid in job_ids:
-            try:
-                stage_ids = store.job(jid).stageIds()
-                it = stage_ids.iterator()
-            except Exception:
-                continue
+            it = store.job(jid).stageIds().iterator()
             while it.hasNext():
                 sid = it.next()
                 if sid in seen:  # stages shared between jobs count once
                     continue
                 seen.add(sid)
-                try:
-                    seq = store.stageData(sid, False, empty_list, False, no_quantiles)
-                except Exception:
-                    continue
+                seq = store.stageData(sid, False, empty_list, False, no_quantiles)
                 for i in range(seq.size()):
                     sd = seq.apply(i)
                     if str(sd.status()) == "SKIPPED":
@@ -147,15 +144,15 @@ class StageMetricsCollector:
         path = os.path.join(ckpt_root, "_metrics")
         new_df = self.to_df()
         out = new_df
-        try:
+        if os.path.exists(path):  # first run: nothing to merge
             prior = self.spark.read.parquet(path)
             fresh = {r["stage"] for r in self._rows}
             kept = prior.filter(~prior["stage"].isin(list(fresh)))
-            out = kept.unionByName(new_df)
-        except Exception:
-            pass  # first run: nothing to merge
-        pdf = out.toPandas()  # tiny; staged via driver so the overwrite
-        # never reads the files it is replacing
+            # a table written before the ``error`` column reads it as null
+            out = kept.unionByName(new_df, allowMissingColumns=True)
+        # tiny; staged in pandas so the overwrite never reads the files it
+        # is replacing
+        pdf = out.select(*new_df.columns).toPandas()
         self.spark.createDataFrame(pdf, new_df.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)

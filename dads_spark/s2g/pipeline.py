@@ -494,23 +494,6 @@ def run_s2g_distributed(
     return raw.groupBy("slice_id").applyInPandas(finalize, _FINAL_SCHEMA)
 
 
-def _slot_lists_from_frame(pdf: pd.DataFrame) -> list[list[tuple[int, int, int, int]]]:
-    """Per-slot edge-key lists, slots ascending, creation order inside."""
-    out = []
-    for _, grp in pdf.groupby("slot", sort=True):
-        out.append(
-            list(
-                zip(
-                    grp["from_seg"].astype(int),
-                    grp["from_idx"].astype(int),
-                    grp["to_seg"].astype(int),
-                    grp["to_idx"].astype(int),
-                )
-            )
-        )
-    return out
-
-
 # ---------------------------------------------------------------------------
 # grouped scoring: many independent series at once (the 100-TB-shaped path)
 # ---------------------------------------------------------------------------

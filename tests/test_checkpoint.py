@@ -1,4 +1,4 @@
-"""Checkpoint manifest + resume-from-last-committed-tier."""
+"""Checkpoint manifest: lineage row counts + fingerprint-gated commits."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from dads_spark.checkpoint import CheckpointManager, TieredRollupJob, fingerprint
+from dads_spark.checkpoint import CheckpointManager, SnapshotStore, fingerprint
 from dads_spark.fixtures.pages import pages_table
 
 
@@ -16,7 +16,8 @@ def raw(spark):
 
 
 def test_manifest_metrics(spark, raw, tmp_path):
-    ckpt = CheckpointManager(spark, str(tmp_path / "ck"))
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    ckpt = CheckpointManager(spark, str(tmp_path / "ck"), store)
     fp = fingerprint({"x": 1})
     out = ckpt.commit("tier_hour", raw.limit(100), fp)
     assert out.count() == 100
@@ -25,41 +26,8 @@ def test_manifest_metrics(spark, raw, tmp_path):
     assert all(r["input_fingerprint"] == fp for r in rows)
     assert ckpt.is_committed("tier_hour", fp)
     assert not ckpt.is_committed("tier_hour", fingerprint({"x": 2}))
-
-
-def test_resume_skips_committed_tiers(spark, raw, tmp_path):
-    root = str(tmp_path / "job")
-    desc = {"source": "pages-fixture", "n": 2000}
-
-    job1 = TieredRollupJob(spark, root, ["lang"])
-    out1 = job1.run(raw, "warc_ts", "tb", desc)
-    assert job1.ran_stages == ["tier_hour", "tier_day", "tier_week"]
-    week_total = out1["week"].agg(F.sum("doc_count")).collect()[0][0]
-
-    # "kill" + rerun: everything committed -> all skipped
-    job2 = TieredRollupJob(spark, root, ["lang"])
-    out2 = job2.run(raw, "warc_ts", "tb", desc)
-    assert job2.skipped_stages == ["tier_hour", "tier_day", "tier_week"]
-    assert job2.ran_stages == []
-    assert out2["week"].agg(F.sum("doc_count")).collect()[0][0] == week_total
-
-    # changed inputs invalidate the checkpoint
-    job3 = TieredRollupJob(spark, root, ["lang"])
-    job3.run(raw, "warc_ts", "tb", {"source": "pages-fixture", "n": 2001})
-    assert job3.ran_stages == ["tier_hour", "tier_day", "tier_week"]
-
-
-def test_partial_commit_resumes_midway(spark, raw, tmp_path):
-    """Simulate a kill after the day tier: hour+day skipped, week recomputed."""
-    root = str(tmp_path / "partial")
-    desc = {"source": "p", "n": 2000}
-    job1 = TieredRollupJob(spark, root, ["lang"])
-    job1.run(raw, "warc_ts", "tb", desc)
-    # wipe only the week tier (as if the job died before committing it)
-    import shutil
-
-    shutil.rmtree(root + "/_manifest/stage=tier_week")
-    job2 = TieredRollupJob(spark, root, ["lang"])
-    job2.run(raw, "warc_ts", "tb", desc)
-    assert job2.skipped_stages == ["tier_hour", "tier_day"]
-    assert job2.ran_stages == ["tier_week"]
+    # an empty stage output is still a resumable commit
+    empty = ckpt.commit("empty_stage", raw.limit(0), fp)
+    assert empty.count() == 0
+    assert sum(r["row_count"] for r in ckpt.metrics("empty_stage")) == 0
+    assert ckpt.is_committed("empty_stage", fp)

@@ -3,6 +3,10 @@ resumable, text bytes untouched."""
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import numpy as np
 import pytest
 
@@ -38,12 +42,14 @@ def test_full_pipeline_and_resume(spark, pages, tmp_path_factory):
     gf = out["gapfilled"]
     assert gf.filter(F.col("gap_filled")).count() > 0
 
-    # compressed blobs round-trip for one domain
+    # compressed blobs (the read_compressed_tier format) round-trip for
+    # one domain chunk
     row = out["compressed"].orderBy(F.col("n_points").desc()).first()
     ts = decode_timestamps(bytes(row["ts_blob"]), row["n_points"])
-    vals = decode_values(bytes(row["value_blob"]), row["n_points"])
-    assert len(ts) == len(vals) == row["n_points"]
-    assert (np.diff(ts) == 3600).all()  # dense after gap-fill
+    vals = decode_values(bytes(row["val_blob"]), row["n_points"])
+    assert len(ts) == len(vals) == row["n_points"] > 1
+    assert (np.diff(ts) == 3_600_000_000).all()  # dense hourly µs after gap-fill
+    assert (ts[0], ts[-1]) == (row["t_min_us"], row["t_max_us"])
 
     # anomaly outputs exist for long-enough series
     assert out["s2g_scores"].count() > 0
@@ -113,9 +119,10 @@ def test_full_pipeline_and_resume(spark, pages, tmp_path_factory):
 
 
 def test_wap_publish_rollback_and_resume(spark, pages, tmp_path_factory):
-    """SnapshotStore wiring (r4): every stage publishes through WAP; a
-    rolled-back-past version is invisible to the job's readers; a re-run
-    resumes from the last PUBLISHED snapshot (the rollback survives)."""
+    """SnapshotStore wiring: every stage is written once, as a snapshot
+    version; a rolled-back-past version is invisible to the job's readers;
+    a re-run resumes from the last PUBLISHED snapshot (the rollback
+    survives) and heals a lost log entry or a lost manifest."""
     root = str(tmp_path_factory.mktemp("jobwap"))
     params = S2GParams(m=20, c=6, S=30, ell=30)
     desc = {"source": "pages-fixture", "n": 8000}
@@ -123,7 +130,12 @@ def test_wap_publish_rollback_and_resume(spark, pages, tmp_path_factory):
 
     job = PagesRollupJob(spark, f"{root}/ckpt", s2g_params=params, publish_root=pub)
     out = job.run(pages, desc)
-    assert len(job.published_stages) == 15
+    assert len(job.ran_stages) == 15
+    # each stage's rows are written once: one snapshot version per stage,
+    # and the checkpoint root holds only lineage manifests + metrics
+    versions = [s["table"] for s in job.store.history()]
+    assert sorted(versions) == sorted(job.ran_stages)
+    assert sorted(os.listdir(f"{root}/ckpt")) == ["_manifest", "_metrics"]
     # published latest == the stage output, row for row
     assert job.read_published("tier_day").count() == out["day"].count()
     v0 = job.store.latest_version("tier_day")
@@ -145,21 +157,34 @@ def test_wap_publish_rollback_and_resume(spark, pages, tmp_path_factory):
     job2 = PagesRollupJob(spark, f"{root}/ckpt", s2g_params=params, publish_root=pub)
     job2.run(pages, desc)
     assert len(job2.skipped_stages) == 15 and not job2.ran_stages
-    assert not job2.published_stages
     assert job2.store.latest_version("tier_day") == v2
 
-    # heal path: wipe ONE stage's snapshot history (simulates a crash
-    # between checkpoint-commit and publish); the next run republishes
-    # exactly that stage without recomputing anything
-    import json as _json
-
+    # heal path: wipe ONE stage's snapshot history; the next run
+    # recomputes exactly that stage (numbering around its orphaned data)
     hist = [s for s in job2.store.history() if s["table"] != "tier_week"]
     with open(job2.store._log_path, "w") as fh:
-        _json.dump(hist, fh)
+        json.dump(hist, fh)
     job3 = PagesRollupJob(spark, f"{root}/ckpt", s2g_params=params, publish_root=pub)
     job3.run(pages, desc)
-    assert job3.published_stages == ["tier_week"] and not job3.ran_stages
+    assert job3.ran_stages == ["tier_week"]
     assert job3.read_published("tier_week").count() == out["week"].count()
+
+    # crash after the snapshot-log swap but before the manifest write:
+    # the rerun recomputes only that stage and publishes v+1 with the same
+    # rows; the previous version stays readable
+    def week(j, version=None):
+        pdf = j.read_published("tier_week", version).toPandas()
+        return pdf.sort_values(["domain", "bucket_ts"]).reset_index(drop=True)
+
+    week_v = job3.store.latest_version("tier_week")
+    week_before = week(job3)
+    shutil.rmtree(f"{root}/ckpt/_manifest/stage=tier_week")
+    job4 = PagesRollupJob(spark, f"{root}/ckpt", s2g_params=params, publish_root=pub)
+    job4.run(pages, desc)
+    assert job4.ran_stages == ["tier_week"]
+    assert job4.store.latest_version("tier_week") == week_v + 1
+    assert week(job4).equals(week_before)
+    assert week(job4, week_v).equals(week_before)
 
     # WAP: an audit rejection never becomes visible
     before = job3.store.latest_version("tier_day")

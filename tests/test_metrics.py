@@ -32,6 +32,50 @@ def test_collector_one_row_per_stage_with_spark_metrics(spark):
     assert "executor_run_ms" in df.columns
 
 
+def test_unreadable_status_store_flags_row_not_zeros(spark, tmp_path, monkeypatch):
+    """A failed measurement is flagged in its row, never written as 0."""
+    mc = StageMetricsCollector(spark)
+
+    def broken():
+        raise RuntimeError("status store gone")
+
+    monkeypatch.setattr(spark.sparkContext, "statusTracker", broken)
+    with mc.stage("blind"):
+        spark.range(0, 1000).collect()
+    monkeypatch.undo()
+    with mc.stage("seen"):
+        spark.range(0, 1000).collect()
+    blind, seen = mc.rows()
+    assert blind["error"] == "RuntimeError: status store gone"
+    assert blind["wall_sec"] > 0
+    for col in ("executor_run_ms", "n_jobs", "n_tasks", "shuffle_write_bytes"):
+        assert blind.get(col) is None
+    assert seen.get("error") is None and seen["n_tasks"] >= 1
+
+    # persisted (and merged on a second write) with the flag + nulls intact
+    mc.write(str(tmp_path))
+    mc.write(str(tmp_path))
+    got = {r["stage"]: r for r in spark.read.parquet(f"{tmp_path}/_metrics").collect()}
+    assert got["blind"]["error"] == "RuntimeError: status store gone"
+    assert got["blind"]["n_tasks"] is None
+    assert got["seen"]["error"] is None and got["seen"]["n_tasks"] >= 1
+
+
+def test_metrics_merge_reads_table_without_error_column(spark, tmp_path):
+    """A table written before the ``error`` column still merges."""
+    old = StageMetricsCollector(spark)
+    with old.stage("old_stage"):
+        spark.range(0, 100).collect()
+    old.to_df().drop("error").write.parquet(f"{tmp_path}/_metrics")
+    mc = StageMetricsCollector(spark)
+    with mc.stage("new_stage"):
+        spark.range(0, 100).collect()
+    mc.write(str(tmp_path))
+    got = {r["stage"]: r for r in spark.read.parquet(f"{tmp_path}/_metrics").collect()}
+    assert set(got) == {"old_stage", "new_stage"}
+    assert got["old_stage"]["error"] is None and got["old_stage"]["n_tasks"] >= 1
+
+
 def test_job_persists_metrics_next_to_manifests(spark, tmp_path):
     from dads_spark.fixtures.pages import pages_table
     from dads_spark.jobs import PagesRollupJob

@@ -43,5 +43,3 @@ def test_readme_quickstart_runs_verbatim(capsys):
     assert ns["job2"].ran_stages == []
     # one SPC metrics row per executed stage
     assert ns["metrics"].count() == 15
-    # every stage published exactly one snapshot version
-    assert len(ns["job"].published_stages) == 15
