@@ -2,12 +2,14 @@
 
 A t-digest-style centroid sketch built with the partial -> merge contract
 every warehouse-scale approximate aggregate needs: each partition reduces
-its values to ``compression`` weighted centroids (one mapInPandas pass, no
-sort shuffle of raw values), the per-key merge re-clusters the concatenated
-centroids (at most partitions x compression rows per key cross the wire —
+its values to ``compression`` weighted centroids per key (no sort shuffle
+of raw values), the per-key merge re-clusters the concatenated centroids
+(at most partitions x compression rows per key cross the wire —
 independent of row count), and quantiles interpolate the merged cumulative
 weights. Associative and order-insensitive by construction, so the result
-is reproducible under any partitioning.
+is reproducible under any partitioning. Each phase runs one NumPy kernel
+(``_merge``) behind ``mapInArrow`` on whole Arrow batches of groups: the
+partial on each input batch, the merges on key-sorted partitions.
 
 Complements ``approx_aggregates`` (Spark's built-in approx_percentile):
 this one exposes the sketch itself as DATA — ``digest`` emits one
@@ -21,7 +23,8 @@ quantiles need a mergeable sketch, and this is it).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -54,113 +57,112 @@ def _sketch_schema(key_cols: list[str]) -> str:
     )
 
 
-def _merge_rows_to_sketch(pdf: pd.DataFrame, compression: int) -> tuple[np.ndarray, np.ndarray]:
-    v = np.concatenate([np.asarray(c, dtype=np.float64) for c in pdf["centroids"]])
-    w = np.concatenate([np.asarray(c, dtype=np.float64) for c in pdf["weights"]])
-    order = np.argsort(v, kind="stable")
+def _merge(gid: np.ndarray, v: np.ndarray, w: np.ndarray, n_groups: int, limit: float):
+    """The sketch kernel: stably sort (v, w) by value within each group id
+    in ``[0, n_groups)`` and re-cluster each group over ``limit`` centroids.
+    Returns list offsets and the flat values and weights, in id order."""
+    order = np.lexsort((v, gid))
     v, w = v[order], w[order]
-    if len(v) > 4 * compression:
-        # bound merge-state for very wide inputs; one extra level costs one
-        # more 1/compression of rank error
-        v, w = _cluster(v, w, 4 * compression)
-    return v, w
+    lens = np.bincount(gid, minlength=n_groups)
+    ends = np.cumsum(lens)
+    vs, ws, prev = [], [], 0
+    for g in np.flatnonzero(lens > limit):
+        s, e = ends[g] - lens[g], ends[g]
+        cv, cw = _cluster(v[s:e], w[s:e], int(limit))
+        vs += [v[prev:s], cv]
+        ws += [w[prev:s], cw]
+        lens[g], prev = len(cv), e
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    return offsets, np.concatenate(vs + [v[prev:]]), np.concatenate(ws + [w[prev:]])
 
 
-def digest(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    compression: int = 256,
-) -> DataFrame:
+def _groups(t: pa.Table, key_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Group id of each row of a key-sorted table and each group's first row.
+    A group ends where any key column's run of equal values ends; nulls are
+    equal within a run, so null keys form one group, as in Spark's groupBy."""
+    new = np.arange(t.num_rows) == 0
+    for k in key_cols:
+        new[pc.run_end_encode(t.column(k).combine_chunks()).run_ends.to_numpy()[:-1]] = True
+    return np.cumsum(new) - 1, np.flatnonzero(new)
+
+
+def _sketches(t: pa.Table, key_cols: list[str], rep, offsets, v, w) -> list:
+    """One sketch row per group: its keys (at row ``rep``), centroids and weights."""
+    cols = [t.column(k).take(rep) for k in key_cols]
+    cols += [pa.ListArray.from_arrays(offsets, x) for x in (v, w)]
+    return pa.table(cols, names=[*key_cols, "centroids", "weights"]).to_batches()
+
+
+def _map_merged(sketches: DataFrame, key_cols: list[str], limit: float, emit, schema: str):
+    """Merge each key's sketch rows on key-sorted partitions; yield ``emit(
+    table, key_cols, rep, offsets, v, w)`` per run of whole groups. Each
+    batch's trailing group is carried, zero-copy, into the next batch."""
+
+    def merged(t, gid, rep):
+        lens = pc.list_value_length(t.column("centroids")).to_numpy()
+        v, w = (pc.list_flatten(t.column(c)).to_numpy() for c in ("centroids", "weights"))
+        return emit(t, key_cols, rep, *_merge(np.repeat(gid, lens), v, w, len(rep), limit))
+
+    def run(batches):
+        carry = []
+        for b in batches:
+            if b.num_rows:
+                t = pa.Table.from_batches(carry + [b])
+                gid, rep = _groups(t, key_cols)
+                cut = int(rep[-1])  # the trailing group starts here
+                if cut:
+                    yield from merged(t.slice(0, cut), gid[:cut], rep[:-1])
+                carry = t.slice(cut).to_batches()
+        if carry:
+            t = pa.Table.from_batches(carry)
+            yield from merged(t, *_groups(t, key_cols))
+
+    keyed = sketches.select(*key_cols, "centroids", "weights").repartition(*key_cols)
+    return keyed.sortWithinPartitions(*key_cols).mapInArrow(run, schema)
+
+
+def digest(df: DataFrame, key_cols: list[str], value_col: str, compression: int = 256) -> DataFrame:
     """Build one persisted-form sketch row per key:
     (keys..., centroids array<double>, weights array<double>)."""
 
-    def partial(it):
-        rows = {k: [] for k in key_cols} | {"centroids": [], "weights": []}
-        for pdf in it:
-            for keys, grp in pdf.groupby(key_cols, sort=False):
-                if not isinstance(keys, tuple):
-                    keys = (keys,)
-                v = np.sort(grp[value_col].to_numpy(dtype=np.float64))
-                means, wts = _cluster(v, np.ones(len(v)), compression)
-                for k, kv in zip(key_cols, keys):
-                    rows[k].append(kv)
-                rows["centroids"].append(means.tolist())
-                rows["weights"].append(wts.tolist())
-        yield pd.DataFrame(rows)
+    def partial(batches):
+        for b in batches:
+            t = pa.Table.from_batches([b]).sort_by([(k, "ascending") for k in key_cols])
+            (gid, rep), v = _groups(t, key_cols), t.column(value_col).to_numpy()
+            merged = _merge(gid, v, np.ones(len(v)), len(rep), compression)
+            yield from _sketches(t, key_cols, rep, *merged)
 
-    partials = df.select(*key_cols, value_col).mapInPandas(
-        partial, _sketch_schema(key_cols)
-    )
-
-    def merge(keys, pdf):
-        v, w = _merge_rows_to_sketch(pdf, compression)
-        return pd.DataFrame(
-            {
-                **{k: [kv] for k, kv in zip(key_cols, keys)},
-                "centroids": [v.tolist()],
-                "weights": [w.tolist()],
-            }
-        )
-
-    return partials.groupBy(*key_cols).applyInPandas(merge, _sketch_schema(key_cols))
+    values = df.select(*key_cols, F.col(value_col).cast("double").alias(value_col))
+    return merge_digests(values.mapInArrow(partial, _sketch_schema(key_cols)), key_cols, compression)
 
 
-def merge_digests(
-    sketches: DataFrame,
-    key_cols: list[str],
-    compression: int = 256,
-) -> DataFrame:
+def merge_digests(sketches: DataFrame, key_cols: list[str], compression: int = 256) -> DataFrame:
     """Re-key stored sketch rows to a coarser grouping (e.g. drop the hour
     column to cascade hour sketches into day sketches). Input rows need
     (centroids, weights) plus at least ``key_cols``."""
-
-    def merge(keys, pdf):
-        v, w = _merge_rows_to_sketch(pdf, compression)
-        return pd.DataFrame(
-            {
-                **{k: [kv] for k, kv in zip(key_cols, keys)},
-                "centroids": [v.tolist()],
-                "weights": [w.tolist()],
-            }
-        )
-
-    return sketches.groupBy(*key_cols).applyInPandas(merge, _sketch_schema(key_cols))
+    # 4x bounds merge-state for wide inputs at one more 1/compression of rank error
+    return _map_merged(sketches, key_cols, 4 * compression, _sketches, _sketch_schema(key_cols))
 
 
-def digest_quantiles(
-    sketches: DataFrame,
-    key_cols: list[str],
-    probs: list[float],
-) -> DataFrame:
+def digest_quantiles(sketches: DataFrame, key_cols: list[str], probs: list[float]) -> DataFrame:
     """Interpolate quantiles from sketch rows: (keys..., prob, value)."""
     probs = sorted(float(p) for p in probs)
-    out_schema = ", ".join(
-        [f"{k} string" for k in key_cols] + ["prob double", "value double"]
-    )
+    out_schema = ", ".join([f"{k} string" for k in key_cols] + ["prob double", "value double"])
 
-    def quant(keys, pdf):
-        v, w = _merge_rows_to_sketch(pdf, 1 << 30)
-        cum = np.cumsum(w) - w / 2.0  # centroid midpoints
-        total = w.sum()
-        qs = np.interp([p * total for p in probs], cum, v)
-        return pd.DataFrame(
-            {
-                **{k: kv for k, kv in zip(key_cols, keys)},
-                "prob": np.asarray(probs, dtype=np.float64),
-                "value": qs,
-            }
-        )
+    def quant(t, key_cols, rep, offsets, v, w):
+        qs = []
+        for s, e in zip(offsets[:-1], offsets[1:]):
+            cum = np.cumsum(w[s:e]) - w[s:e] / 2.0  # centroid midpoints
+            qs.append(np.interp([p * w[s:e].sum() for p in probs], cum, v[s:e]))
+        cols = [t.column(k).take(np.repeat(rep, len(probs))) for k in key_cols]
+        cols += [np.tile(probs, len(qs)), np.concatenate(qs)]
+        return pa.table(cols, names=[*key_cols, "prob", "value"]).to_batches()
 
-    return sketches.groupBy(*key_cols).applyInPandas(quant, out_schema)
+    return _map_merged(sketches, key_cols, np.inf, quant, out_schema)
 
 
 def quantile_digest(
-    df: DataFrame,
-    key_cols: list[str],
-    value_col: str,
-    probs: list[float],
-    compression: int = 256,
+    df: DataFrame, key_cols: list[str], value_col: str, probs: list[float], compression: int = 256
 ) -> DataFrame:
     """Approximate per-key quantiles via mergeable centroid sketches
     (digest -> digest_quantiles in one call).
@@ -169,9 +171,7 @@ def quantile_digest(
     test asserts the realized rank of each reported quantile.
     Output: (keys..., prob, value).
     """
-    return digest_quantiles(
-        digest(df, key_cols, value_col, compression), key_cols, probs
-    )
+    return digest_quantiles(digest(df, key_cols, value_col, compression), key_cols, probs)
 
 
 def ams_f2(
