@@ -8,6 +8,9 @@ Layout
 - ``s2g``        : the Series2Graph anomaly pipeline — a pure-NumPy oracle
                    (``s2g.core`` / ``s2g.oracle``) plus the distributed Spark
                    implementation (``s2g.pipeline``) built on applyInPandas.
+- ``groups``     : the whole-group ``mapInArrow`` runner that the per-series
+                   operators (grouped S2G, discords, PELT, gap-fill, blob
+                   encoding, matrix profile) and the t-digest merges run on.
 - ``rollup``     : per-key series derivation, hour/day/week continuous
                    aggregates, linear-interpolation gap-fill.
 - ``compress``   : Gorilla XOR float compression + delta-of-delta timestamps

@@ -34,15 +34,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
 
+from ..groups import per_series
 from .deltadelta import decode_timestamps, encode_timestamps
 from .gorilla import decode_values, encode_values
 
@@ -60,43 +54,26 @@ def compressed_tier_blobs(
     Gorilla/delta-of-delta blob rows (keys..., t_min_us, t_max_us,
     n_points, ts_blob, val_blob, crc) — the row format
     :func:`read_compressed_tier` serves."""
-    fields = [tier_df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        fields
-        + [
-            StructField("t_min_us", LongType()),
-            StructField("t_max_us", LongType()),
-            StructField("n_points", LongType()),
-            StructField("ts_blob", BinaryType()),
-            StructField("val_blob", BinaryType()),
-            StructField("crc", LongType()),
-        ]
-    )
 
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        ts_us = pdf[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-        vals = pdf[value_col].to_numpy(np.float64)
+    def enc(ts_us, vals):
         rows = []
         for lo in range(0, len(ts_us), chunk_points):
             t, v = ts_us[lo : lo + chunk_points], vals[lo : lo + chunk_points]
             tb, vb = encode_timestamps(t), encode_values(v)
-            rows.append(
-                {
-                    **{k: pdf[k].iloc[0] for k in key_cols},
-                    "t_min_us": int(t[0]),
-                    "t_max_us": int(t[-1]),
-                    "n_points": len(t),
-                    "ts_blob": tb,
-                    "val_blob": vb,
-                    # integrity seal over both streams: cold blobs outlive
-                    # parquet-level checks once copied/re-tiered
-                    "crc": zlib.crc32(tb) ^ (zlib.crc32(vb) << 1),
-                }
-            )
-        return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            # integrity seal over both streams: cold blobs outlive
+            # parquet-level checks once copied/re-tiered
+            crc = zlib.crc32(tb) ^ (zlib.crc32(vb) << 1)
+            rows.append((int(t[0]), int(t[-1]), len(t), tb, vb, crc))
+        return list(zip(*rows))
 
-    return tier_df.groupBy(*key_cols).applyInPandas(enc, out_schema)
+    return per_series(
+        tier_df,
+        key_cols,
+        ts_col,
+        [value_col],
+        enc,
+        "t_min_us long, t_max_us long, n_points long, ts_blob binary, val_blob binary, crc long",
+    )
 
 
 def write_compressed_tier(

@@ -34,6 +34,19 @@ from .s2g.discord import discord_series_grouped
 from .s2g.pipeline import score_series_grouped
 
 
+def _hour_metric(hour: DataFrame) -> DataFrame:
+    """The hour tier as the (count, sum, min, max) metric the tier cascade
+    rolls up: the value is each hour's text bytes."""
+    return hour.select(
+        "domain",
+        "bucket_ts",
+        "doc_count",
+        F.col("text_bytes").alias("value_sum"),
+        F.col("text_bytes").alias("value_min"),
+        F.col("text_bytes").alias("value_max"),
+    )
+
+
 class PagesRollupJob:
     """Resumable pages -> tiers -> gap-fill -> anomaly job.
 
@@ -90,14 +103,7 @@ class PagesRollupJob:
 
         out["hour"] = self._stage("tier_hour", fp, lambda: domain_hourly_series(pages))
 
-        hour_metric = out["hour"].select(
-            "domain",
-            "bucket_ts",
-            F.col("doc_count").alias("doc_count"),
-            F.col("text_bytes").alias("value_sum"),
-            F.col("text_bytes").alias("value_min"),
-            F.col("text_bytes").alias("value_max"),
-        )
+        hour_metric = _hour_metric(out["hour"])
         out["day"] = self._stage(
             "tier_day", fp, lambda: cascade(hour_metric, ["domain"], "day")
         )
@@ -298,14 +304,7 @@ class PagesRollupJob:
 
         out["hour"] = self._stage("refresh_hour", fp, refresh_hour)
 
-        hour_metric = out["hour"].select(
-            "domain",
-            "bucket_ts",
-            F.col("doc_count").alias("doc_count"),
-            F.col("text_bytes").alias("value_sum"),
-            F.col("text_bytes").alias("value_min"),
-            F.col("text_bytes").alias("value_max"),
-        )
+        hour_metric = _hour_metric(out["hour"])
 
         def refresh_cascade(src_metric, stale_name: str, to_tier: str):
             def build():

@@ -28,6 +28,10 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..groups import key_groups, keyed_schema, map_key_runs
+
+_SKETCH = "centroids array<double>, weights array<double>"
+
 
 def _cluster(values: np.ndarray, weights: np.ndarray, c: int) -> tuple[np.ndarray, np.ndarray]:
     """Reduce sorted (values, weights) to <= c equal-weight clusters
@@ -50,13 +54,6 @@ def _cluster(values: np.ndarray, weights: np.ndarray, c: int) -> tuple[np.ndarra
     return np.asarray(means), np.asarray(wts)
 
 
-def _sketch_schema(key_cols: list[str]) -> str:
-    return ", ".join(
-        [f"{k} string" for k in key_cols]
-        + ["centroids array<double>", "weights array<double>"]
-    )
-
-
 def _merge(gid: np.ndarray, v: np.ndarray, w: np.ndarray, n_groups: int, limit: float):
     """The sketch kernel: stably sort (v, w) by value within each group id
     in ``[0, n_groups)`` and re-cluster each group over ``limit`` centroids.
@@ -76,16 +73,6 @@ def _merge(gid: np.ndarray, v: np.ndarray, w: np.ndarray, n_groups: int, limit: 
     return offsets, np.concatenate(vs + [v[prev:]]), np.concatenate(ws + [w[prev:]])
 
 
-def _groups(t: pa.Table, key_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Group id of each row of a key-sorted table and each group's first row.
-    A group ends where any key column's run of equal values ends; nulls are
-    equal within a run, so null keys form one group, as in Spark's groupBy."""
-    new = np.arange(t.num_rows) == 0
-    for k in key_cols:
-        new[pc.run_end_encode(t.column(k).combine_chunks()).run_ends.to_numpy()[:-1]] = True
-    return np.cumsum(new) - 1, np.flatnonzero(new)
-
-
 def _sketches(t: pa.Table, key_cols: list[str], rep, offsets, v, w) -> list:
     """One sketch row per group: its keys (at row ``rep``), centroids and weights."""
     cols = [t.column(k).take(rep) for k in key_cols]
@@ -93,32 +80,18 @@ def _sketches(t: pa.Table, key_cols: list[str], rep, offsets, v, w) -> list:
     return pa.table(cols, names=[*key_cols, "centroids", "weights"]).to_batches()
 
 
-def _map_merged(sketches: DataFrame, key_cols: list[str], limit: float, emit, schema: str):
+def _map_merged(sketches: DataFrame, key_cols: list[str], limit: float, emit, fields: str):
     """Merge each key's sketch rows on key-sorted partitions; yield ``emit(
-    table, key_cols, rep, offsets, v, w)`` per run of whole groups. Each
-    batch's trailing group is carried, zero-copy, into the next batch."""
+    table, key_cols, rep, offsets, v, w)`` per run of whole groups, typed as
+    the key columns and then the DDL ``fields``."""
 
     def merged(t, gid, rep):
         lens = pc.list_value_length(t.column("centroids")).to_numpy()
         v, w = (pc.list_flatten(t.column(c)).to_numpy() for c in ("centroids", "weights"))
         return emit(t, key_cols, rep, *_merge(np.repeat(gid, lens), v, w, len(rep), limit))
 
-    def run(batches):
-        carry = []
-        for b in batches:
-            if b.num_rows:
-                t = pa.Table.from_batches(carry + [b])
-                gid, rep = _groups(t, key_cols)
-                cut = int(rep[-1])  # the trailing group starts here
-                if cut:
-                    yield from merged(t.slice(0, cut), gid[:cut], rep[:-1])
-                carry = t.slice(cut).to_batches()
-        if carry:
-            t = pa.Table.from_batches(carry)
-            yield from merged(t, *_groups(t, key_cols))
-
-    keyed = sketches.select(*key_cols, "centroids", "weights").repartition(*key_cols)
-    return keyed.sortWithinPartitions(*key_cols).mapInArrow(run, schema)
+    keyed = sketches.select(*key_cols, "centroids", "weights")
+    return map_key_runs(keyed, key_cols, merged, keyed_schema(keyed, key_cols, fields))
 
 
 def digest(df: DataFrame, key_cols: list[str], value_col: str, compression: int = 256) -> DataFrame:
@@ -128,12 +101,13 @@ def digest(df: DataFrame, key_cols: list[str], value_col: str, compression: int 
     def partial(batches):
         for b in batches:
             t = pa.Table.from_batches([b]).sort_by([(k, "ascending") for k in key_cols])
-            (gid, rep), v = _groups(t, key_cols), t.column(value_col).to_numpy()
+            (gid, rep), v = key_groups(t, key_cols), t.column(value_col).to_numpy()
             merged = _merge(gid, v, np.ones(len(v)), len(rep), compression)
             yield from _sketches(t, key_cols, rep, *merged)
 
     values = df.select(*key_cols, F.col(value_col).cast("double").alias(value_col))
-    return merge_digests(values.mapInArrow(partial, _sketch_schema(key_cols)), key_cols, compression)
+    partials = values.mapInArrow(partial, keyed_schema(values, key_cols, _SKETCH))
+    return merge_digests(partials, key_cols, compression)
 
 
 def merge_digests(sketches: DataFrame, key_cols: list[str], compression: int = 256) -> DataFrame:
@@ -141,13 +115,12 @@ def merge_digests(sketches: DataFrame, key_cols: list[str], compression: int = 2
     column to cascade hour sketches into day sketches). Input rows need
     (centroids, weights) plus at least ``key_cols``."""
     # 4x bounds merge-state for wide inputs at one more 1/compression of rank error
-    return _map_merged(sketches, key_cols, 4 * compression, _sketches, _sketch_schema(key_cols))
+    return _map_merged(sketches, key_cols, 4 * compression, _sketches, _SKETCH)
 
 
 def digest_quantiles(sketches: DataFrame, key_cols: list[str], probs: list[float]) -> DataFrame:
     """Interpolate quantiles from sketch rows: (keys..., prob, value)."""
     probs = sorted(float(p) for p in probs)
-    out_schema = ", ".join([f"{k} string" for k in key_cols] + ["prob double", "value double"])
 
     def quant(t, key_cols, rep, offsets, v, w):
         qs = []
@@ -158,7 +131,7 @@ def digest_quantiles(sketches: DataFrame, key_cols: list[str], probs: list[float
         cols += [np.tile(probs, len(qs)), np.concatenate(qs)]
         return pa.table(cols, names=[*key_cols, "prob", "value"]).to_batches()
 
-    return _map_merged(sketches, key_cols, np.inf, quant, out_schema)
+    return _map_merged(sketches, key_cols, np.inf, quant, "prob double, value double")
 
 
 def quantile_digest(

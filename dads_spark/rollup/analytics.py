@@ -2206,11 +2206,14 @@ def funnel_with_exclusion(
     )
     # deterministic frame membership under equal timestamps: the
     # secondary type sort is mirrored by the oracle, so an equal-time
-    # B counts as "following" iff its type sorts after A's
+    # B counts as "following" iff its type sorts after A's. The rows
+    # following in (_t, _ty) order are the rows preceding in reversed
+    # order: a frame growing from the partition start is O(n), while
+    # Spark re-aggregates a (1, unboundedFollowing) frame per row, O(n^2)
     w = (
         W.partitionBy("_u")
-        .orderBy("_t", "_ty")
-        .rowsBetween(1, W.unboundedFollowing)
+        .orderBy(F.col("_t").desc(), F.col("_ty").desc())
+        .rowsBetween(W.unboundedPreceding, -1)
     )
     next_b = F.min(F.when(F.col("_ty") == step_b, F.col("_t"))).over(w)
     next_x = F.min(

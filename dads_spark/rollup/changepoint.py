@@ -14,8 +14,9 @@ in ``dads_spark/oracles.py:pelt_oracle`` uses, so the two implementations
 agree BITWISE, not just approximately (both build costs from the identical
 cumsum expressions; float ops are elementwise IEEE in each).
 
-Spark shape: one ``groupBy(keys).applyInPandas`` over tier-sized series —
-the same grouped-kernel contract as holt/CUSUM/matrix-profile: shuffle
+Spark shape: one ``mapInArrow`` over tier-sized series through the
+per-series runner ``dads_spark.groups.per_series`` — the same grouped-kernel
+contract as the S2G, discord and matrix-profile operators: shuffle
 carries rolled-up points (orders below raw), each task segments its own
 series with a vectorized candidate scan, output is just the changepoint
 rows. At 10^12 raw docs the hour tier is ~10^4 points/series — the DP is
@@ -30,9 +31,10 @@ series: regime boundaries separate "level changed" from "point outlier").
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 __all__ = ["auto_penalty", "pelt_changepoints", "pelt_grouped"]
 
@@ -99,23 +101,11 @@ def pelt_grouped(
     ``order_col`` order) where a new segment begins, cp_rank its 1-based
     ordinal, n the series length. All-integer output columns.
     ``penalty=None`` -> per-series :func:`auto_penalty`."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols] + ["cp_rank long", "cp_idx long", "n long"]
+
+    def segments(_, x):
+        cps = pelt_changepoints(x, auto_penalty(x) if penalty is None else penalty)
+        return np.arange(1, len(cps) + 1), cps, np.full(len(cps), len(x))
+
+    return per_series(
+        df, key_cols, order_col, [value_col], segments, "cp_rank long, cp_idx long, n long"
     )
-
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
-        cps = pelt_changepoints(
-            x, auto_penalty(x) if penalty is None else penalty
-        )
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "cp_rank": np.arange(1, len(cps) + 1, dtype=np.int64),
-                "cp_idx": np.array(cps, dtype=np.int64),
-                "n": np.full(len(cps), len(pdf), dtype=np.int64),
-            }
-        )
-
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)

@@ -2,18 +2,36 @@
 
 Per (key) group: re-index onto the dense bucket grid between the series'
 first and last observed buckets, then ``np.interp`` the missing values
-(north rule: BASELINE.json:6). Runs as ``groupBy(keys).applyInPandas`` — one
-series per task, NumPy-vectorized inside, no cross-task coordination.
+(north rule: BASELINE.json:6). Runs behind ``mapInArrow`` through the
+per-series runner ``dads_spark.groups.per_series`` — one whole series per
+kernel call, NumPy-vectorized inside, no cross-task coordination.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from ..groups import per_series
+
 TIER_SECONDS = {"hour": 3600, "day": 86400, "week": 604800}
+
+
+def _gap_fill(df, key_cols, bucket_col, value_cols, step_seconds, fill) -> DataFrame:
+    """Densify each series onto its whole-second ``step_seconds`` grid;
+    ``fill(dense, ts, observed)`` gives one value column on the grid."""
+
+    def densify(t_us, *observed):
+        ts = t_us // 10**6
+        dense = np.arange(ts[0], ts[-1] + 1, step_seconds)
+        filled = [fill(dense, ts, v) for v in observed]
+        return dense * 10**6, *filled, ~np.isin(dense, ts)
+
+    fields = ", ".join(
+        [f"{bucket_col} timestamp"] + [f"{c} double" for c in value_cols] + ["gap_filled boolean"]
+    )
+    return per_series(df, key_cols, bucket_col, value_cols, densify, fields)
 
 
 def gap_fill_linear(
@@ -29,29 +47,12 @@ def gap_fill_linear(
     neighbors (np.interp semantics; a series with one observation stays as
     is — nothing to interpolate toward).
     """
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + [f"{bucket_col} timestamp"]
-        + [f"{c} double" for c in value_cols]
-        + ["gap_filled boolean"]
-    )
+    return _gap_fill(df, key_cols, bucket_col, value_cols, step_seconds, np.interp)
 
-    def fill(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col)
-        ts = pdf[bucket_col].astype("datetime64[ns]").astype("int64").to_numpy() // 10**9
-        lo, hi = ts[0], ts[-1]
-        dense = np.arange(lo, hi + 1, step_seconds)
-        present = np.isin(dense, ts)
-        out = {c: np.repeat(pdf[c].iloc[0], len(dense)) for c in key_cols}
-        out[bucket_col] = pd.to_datetime(dense, unit="s")
-        for c in value_cols:
-            observed = pdf[c].to_numpy(dtype=np.float64)
-            out[c] = np.interp(dense, ts, observed)
-        out["gap_filled"] = ~present
-        return pd.DataFrame(out)
 
-    return df.groupBy(*key_cols).applyInPandas(fill, out_schema)
+def _locf(dense: np.ndarray, ts: np.ndarray, observed: np.ndarray) -> np.ndarray:
+    # index of the latest observation at-or-before each dense bucket
+    return observed[np.searchsorted(ts, dense, side="right") - 1]
 
 
 def gap_fill_locf(
@@ -64,30 +65,7 @@ def gap_fill_locf(
     """LOCF (last-observation-carried-forward) gap-fill — the other
     standard continuous-aggregate fill besides linear interpolation:
     missing buckets repeat the most recent observed value. Same dense
-    reindex + ``applyInPandas`` shape as :func:`gap_fill_linear`; fully
+    reindex + per-series runner shape as :func:`gap_fill_linear`; fully
     ANSI-SQL-expressible (last_value IGNORE NULLS), so it carries an exact
     oracle."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + [f"{bucket_col} timestamp"]
-        + [f"{c} double" for c in value_cols]
-        + ["gap_filled boolean"]
-    )
-
-    def fill(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col)
-        ts = pdf[bucket_col].astype("datetime64[ns]").astype("int64").to_numpy() // 10**9
-        lo, hi = ts[0], ts[-1]
-        dense = np.arange(lo, hi + 1, step_seconds)
-        # index of the latest observation at-or-before each dense bucket
-        prev = np.searchsorted(ts, dense, side="right") - 1
-        present = np.isin(dense, ts)
-        out = {c: np.repeat(pdf[c].iloc[0], len(dense)) for c in key_cols}
-        out[bucket_col] = pd.to_datetime(dense, unit="s")
-        for c in value_cols:
-            out[c] = pdf[c].to_numpy(dtype=np.float64)[prev]
-        out["gap_filled"] = ~present
-        return pd.DataFrame(out)
-
-    return df.groupBy(*key_cols).applyInPandas(fill, out_schema)
+    return _gap_fill(df, key_cols, bucket_col, value_cols, step_seconds, _locf)

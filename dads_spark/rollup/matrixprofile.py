@@ -8,8 +8,9 @@ reference's Series2Graph/DRAG pipeline scores (dads_spark/s2g/discord.py),
 computed by an independent method. Complements S2G: MP is exact and
 parameter-light, S2G is graph-based and streaming-friendly.
 
-Distribution shape: one vectorized NumPy kernel per series via
-``groupBy().applyInPandas`` — identical to the grouped S2G scorer. Each
+Distribution shape: one vectorized NumPy kernel per series behind
+``mapInArrow``, through the per-series runner ``dads_spark.groups.per_series``
+— identical to the grouped S2G scorer. Each
 series must fit one task (true post-rollup: a year of hourly buckets is
 8,760 points); millions of series parallelize across tasks. The kernel is
 O(n^2) with O(n) memory via the STOMP dot-product recurrence (no n^2
@@ -19,9 +20,10 @@ matrix is ever materialized).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 
 def sliding_stats(x: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray]:
@@ -120,33 +122,16 @@ def matrix_profile_grouped(
     Series shorter than m+ceil(m/2)+1 points yield no rows (no non-trivial
     neighbor exists).
     """
-    out_schema = ", ".join(
-        [f"{k} string" for k in key_cols] + ["idx long", "mp double", "mp_idx long"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+    def profile(_, x):
         mp, mpi = matrix_profile(x, m, exclusion)
         if len(mp) == 0 or not np.isfinite(mp).any():
-            return pd.DataFrame(
-                {
-                    **{k: pd.Series(dtype="object") for k in key_cols},
-                    "idx": pd.Series(dtype="int64"),
-                    "mp": pd.Series(dtype="float64"),
-                    "mp_idx": pd.Series(dtype="int64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                **{k: v for k, v in zip(key_cols, keys)},
-                "idx": np.arange(len(mp), dtype=np.int64),
-                "mp": mp,
-                "mp_idx": mpi,
-            }
-        )
+            return None
+        return np.arange(len(mp)), mp, mpi
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(
+        df, key_cols, order_col, [value_col], profile, "idx long, mp double, mp_idx long"
+    )
 
 
 def discords_grouped(
@@ -160,34 +145,15 @@ def discords_grouped(
 ) -> DataFrame:
     """Top-k non-overlapping discords per series:
     (keys..., rank, idx, mp)."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols] + ["rank long", "idx long", "mp double"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+    def discords(_, x):
         mp, _ = matrix_profile(x, m, exclusion)
         picks = top_discords(mp, m, k, exclusion) if len(mp) else []
-        if not picks:
-            return pd.DataFrame(
-                {
-                    **{c: pd.Series(dtype="object") for c in key_cols},
-                    "rank": pd.Series(dtype="int64"),
-                    "idx": pd.Series(dtype="int64"),
-                    "mp": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "rank": np.arange(1, len(picks) + 1, dtype=np.int64),
-                "idx": np.asarray(picks, dtype=np.int64),
-                "mp": mp[picks],
-            }
-        )
+        return np.arange(1, len(picks) + 1), picks, mp[picks]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(
+        df, key_cols, order_col, [value_col], discords, "rank long, idx long, mp double"
+    )
 
 
 def top_motifs(
@@ -239,39 +205,22 @@ def motifs_grouped(
     """Top-k non-overlapping motif pairs per series:
     (keys..., rank, idx_a, idx_b, mp) — idx_a the picked window, idx_b
     its nearest neighbor, mp their z-normalized distance."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["rank long", "idx_a long", "idx_b long", "mp double"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+    def motifs(_, x):
         mp, mpi = matrix_profile(x, m, exclusion)
         picks = top_motifs(mp, mpi, m, k, exclusion) if len(mp) else []
-        if not picks:
-            return pd.DataFrame(
-                {
-                    **{c: pd.Series(dtype="object") for c in key_cols},
-                    "rank": pd.Series(dtype="int64"),
-                    "idx_a": pd.Series(dtype="int64"),
-                    "idx_b": pd.Series(dtype="int64"),
-                    "mp": pd.Series(dtype="float64"),
-                }
-            )
         # a motif pair is unordered (the members are mutual neighbors up
         # to float noise) — canonicalize to (min, max) and report the
         # profile at the min index so the emitted row is orientation-free
         lo = [min(p) for p in picks]
         hi = [max(p) for p in picks]
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "rank": np.arange(1, len(picks) + 1, dtype=np.int64),
-                "idx_a": np.asarray(lo, dtype=np.int64),
-                "idx_b": np.asarray(hi, dtype=np.int64),
-                "mp": mp[lo],
-            }
-        )
+        return np.arange(1, len(picks) + 1), lo, hi, mp[lo]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(
+        df,
+        key_cols,
+        order_col,
+        [value_col],
+        motifs,
+        "rank long, idx_a long, idx_b long, mp double",
+    )

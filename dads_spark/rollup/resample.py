@@ -6,9 +6,10 @@ with linear interpolation or LOCF between the enclosing observations. This
 generalizes the fixed-tier gap-fill (gapfill.py): gap-fill densifies the
 series' OWN bucket grid; resample projects onto ANY grid.
 
-Unlike the applyInPandas gap-fill kernels, this operator is fully
+Unlike the Python gap-fill kernels, this operator is fully
 relational — grid generation is ``sequence()`` + ``explode``, neighbor
-lookup is two window passes (last/first ignoreNulls) over ONE sort, and the
+lookup is two growing-frame window passes (last ignoreNulls, forward for
+the previous observation and reversed for the next one), and the
 interpolation arithmetic is codegen expressions — so Catalyst owns the
 whole plan: one shuffle on the series key, no Python stage, and the same
 formulation runs as ANSI SQL in the correctness oracle. At warehouse scale
@@ -66,15 +67,20 @@ def resample_grid(
     w_prev = (
         W.partitionBy(*key_cols).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
     )
+    # the next observation is the last one up to this row in REVERSED order:
+    # a frame that grows from the partition start is evaluated in O(n), while
+    # Spark re-aggregates a (0, unboundedFollowing) frame per row, O(n^2)
     w_next = (
-        W.partitionBy(*key_cols).orderBy(*order).rowsBetween(0, W.unboundedFollowing)
+        W.partitionBy(*key_cols)
+        .orderBy(*[c.desc() for c in order])
+        .rowsBetween(W.unboundedPreceding, 0)
     )
     st = F.when(~F.col("_isg"), F.col("_t"))
     enriched = (
         union.withColumn("_pv", F.last("_sv", ignorenulls=True).over(w_prev))
         .withColumn("_pt", F.last(st, ignorenulls=True).over(w_prev))
-        .withColumn("_nv", F.first("_sv", ignorenulls=True).over(w_next))
-        .withColumn("_nt", F.first(st, ignorenulls=True).over(w_next))
+        .withColumn("_nv", F.last("_sv", ignorenulls=True).over(w_next))
+        .withColumn("_nt", F.last(st, ignorenulls=True).over(w_next))
         .filter(F.col("_isg"))
     )
     if method == "locf":

@@ -18,15 +18,17 @@ Implementation is pure vectorized NumPy:
 - discord ranges overlapping or adjacent are merged.
 
 Spark surface: ``discord_series_grouped`` — same shape as
-``score_series_grouped`` (one rolled-up series per task).
+``score_series_grouped`` (one rolled-up series per kernel call, behind the
+``mapInArrow`` runner ``dads_spark.groups.per_series``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 
 def _sliding_stats(x: np.ndarray, m: int):
@@ -173,24 +175,10 @@ def discord_series_grouped(
     r can saturate EXACTLY at the flat-window ceiling sqrt(2m) on short or
     heavily gap-filled series, where a raw >= flips on ulps.
     """
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + ["range_start long", "range_end long", "peak_nn_dist double"]
-    )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=np.float64)
-        empty = pd.DataFrame(
-            {
-                **{c: pdf[c].iloc[:0] for c in key_cols},
-                "range_start": [],
-                "range_end": [],
-                "peak_nn_dist": [],
-            }
-        )
+    def ranges(_, x):
         if len(x) < 4 * m:
-            return empty
+            return None
         n_win = len(x) - m + 1
         step = max(1, n_win // 200)  # ~200 sampled profiles for calibration
         sample = matrix_profile_self_sampled(x, m, step)
@@ -200,23 +188,20 @@ def discord_series_grouped(
             r = (np.floor(r / decision_quantum + 0.5) - 0.5) * decision_quantum
         found = drag_discords(x, m, r)
         if not found:
-            return empty
+            return None
         nn_by_idx = dict(found)
-        ranges = merge_ranges([i for i, _ in found], m)
-        rows = {
-            c: np.repeat(pdf[c].iloc[0], len(ranges)) for c in key_cols
-        }
-        rows["range_start"] = np.array([s for s, _ in ranges], dtype=np.int64)
-        rows["range_end"] = np.array([e for _, e in ranges], dtype=np.int64)
-        rows["peak_nn_dist"] = np.array(
-            [
-                max(v for i, v in nn_by_idx.items() if s <= i < e)
-                for s, e in ranges
-            ]
-        )
-        return pd.DataFrame(rows)
+        spans = merge_ranges([i for i, _ in found], m)
+        peaks = [max(v for i, v in nn_by_idx.items() if s <= i < e) for s, e in spans]
+        return [s for s, _ in spans], [e for _, e in spans], peaks
 
-    return df.groupBy(*key_cols).applyInPandas(run, out_schema)
+    return per_series(
+        df,
+        key_cols,
+        order_col,
+        [value_col],
+        ranges,
+        "range_start long, range_end long, peak_nn_dist double",
+    )
 
 
 def matrix_profile_self_sampled(x: np.ndarray, m: int, step: int) -> np.ndarray:

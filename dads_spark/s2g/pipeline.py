@@ -4,9 +4,10 @@ Two entry points:
 
 - :func:`score_series_grouped` — the production-shaped operator for the
   north-rule flow: thousands of independent (rolled-up, per-domain) series
-  scored in parallel, one series per task, via
-  ``groupBy(keys).applyInPandas``. Each task runs the shared NumPy core at
-  P=1; Spark parallelism comes from the number of series.
+  scored in parallel, one whole series per kernel call, via the
+  ``mapInArrow`` runner ``dads_spark.groups.per_series``. Each call runs
+  the shared NumPy core at P=1; Spark parallelism comes from the number of
+  series.
 
 - :func:`run_s2g_distributed` — slice-parallel scoring of ONE large series,
   replicating the reference's multi-processor dataflow (overlapped slices,
@@ -25,7 +26,8 @@ that point locally — window sums are per-window independent
 sequential cross-partition dependency entirely. The oracle computes the
 padded projection the same way, so parity is by construction.
 
-No per-row Python anywhere: all UDFs are Arrow-batched pandas functions over
+No per-row Python anywhere: the slice stages are Arrow-batched pandas
+functions and the grouped operators run behind ``mapInArrow``, all over
 NumPy-vectorized kernels.
 """
 
@@ -38,6 +40,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..groups import per_series
 from . import core
 from .params import S2GParams
 
@@ -515,39 +518,27 @@ def score_series_grouped(
 
     This is the scale path for the north rule: rolled-up per-domain series
     are small (10^3-10^6 points) while the number of series is huge, so
-    parallelism comes from ``groupBy(keys)`` and each task runs the shared
-    NumPy core end-to-end — zero cross-task coordination, no shuffle beyond
-    the initial group-by. Output: key columns + (window_idx, score).
+    parallelism comes from the keys and each task runs the shared NumPy
+    core end-to-end — zero cross-task coordination, no shuffle beyond the
+    one on the keys. Output: key columns + (window_idx, score).
     """
     from .oracle import s2g_oracle
 
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + ["window_idx long", "score double"]
-    )
     min_len = min_series_length(params)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=np.float64)
+    def scores(_, x):
         if len(x) < min_len:
-            return pd.DataFrame(
-                {**{c: pdf[c].iloc[:0] for c in key_cols}, "window_idx": [], "score": []}
-            )
-        res = s2g_oracle(x, params, n_slices=1)
-        n = len(res.scores)
-        if n == 0 or not np.isfinite(res.scores).all():
+            return None
+        s = s2g_oracle(x, params, n_slices=1).scores
+        if len(s) == 0 or not np.isfinite(s).all():
             # degenerate series (constant values -> singular rotation):
             # the reference propagates NaN; we emit nothing for the key
-            return pd.DataFrame(
-                {**{c: pdf[c].iloc[:0] for c in key_cols}, "window_idx": [], "score": []}
-            )
-        out = {c: np.repeat(pdf[c].iloc[0], n) for c in key_cols}
-        out["window_idx"] = np.arange(n, dtype=np.int64)
-        out["score"] = res.scores
-        return pd.DataFrame(out)
+            return None
+        return np.arange(len(s), dtype=np.int64), s
 
-    return df.groupBy(*key_cols).applyInPandas(run, out_schema)
+    return per_series(
+        df, key_cols, order_col, [value_col], scores, "window_idx long, score double"
+    )
 
 
 def graph_edges_grouped(
@@ -565,154 +556,27 @@ def graph_edges_grouped(
     queryable/joinable — the reference only ever logs it (Graph.java) —
     while reusing the bit-parity core untouched. Same distribution shape
     as ``score_series_grouped``: one series per task, no shuffle beyond
-    the group-by.
+    the one on the keys.
     """
     from .oracle import s2g_oracle
 
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + ["from_seg int", "from_idx int", "to_seg int", "to_idx int", "weight long"]
-    )
     min_len = min_series_length(params)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                **{c: pdf[c].iloc[:0] for c in key_cols},
-                "from_seg": pd.Series(dtype="int32"),
-                "from_idx": pd.Series(dtype="int32"),
-                "to_seg": pd.Series(dtype="int32"),
-                "to_idx": pd.Series(dtype="int32"),
-                "weight": pd.Series(dtype="int64"),
-            }
-        )
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=np.float64)
+    def edges(_, x):
         if len(x) < min_len:
-            return empty
+            return None
         res = s2g_oracle(x, params, n_slices=1)
         if not res.edge_weights:
-            return empty
+            return None
         keys = np.array(list(res.edge_weights.keys()), dtype=np.int32)
         w = np.fromiter(res.edge_weights.values(), dtype=np.int64, count=len(keys))
-        out = {c: np.repeat(pdf[c].iloc[0], len(keys)) for c in key_cols}
-        out["from_seg"], out["from_idx"] = keys[:, 0], keys[:, 1]
-        out["to_seg"], out["to_idx"] = keys[:, 2], keys[:, 3]
-        out["weight"] = w
-        return pd.DataFrame(out)
+        return (*keys.T, w)
 
-    return df.groupBy(*key_cols).applyInPandas(run, out_schema)
-
-
-def score_series_partitioned(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    value_col: str,
-    params: S2GParams,
-    assume_partitioned: bool = False,
-) -> DataFrame:
-    """Grouped scoring via ``mapInPandas`` with partition-local grouping.
-
-    At warehouse scale the pages/tier tables are bucketed by domain
-    (Iceberg ``bucket(domain)`` hidden partitioning), so every series is
-    already complete within one partition — pass
-    ``assume_partitioned=True`` and the whole job is ONE embarrassingly
-    parallel stage with zero exchange. By default the input is hash-
-    repartitioned by key first, because a series split across partitions
-    would be silently scored as independent fragments (wrong answers, not
-    an error).
-    """
-    from .oracle import s2g_oracle
-
-    if not assume_partitioned:
-        df = df.repartition(key_col)
-
-    key_field = next(f for f in df.schema.fields if f.name == key_col)
-    out_schema = (
-        f"{key_col} {key_field.dataType.simpleString()}, window_idx long, score double"
-    )
-    min_len = min_series_length(params)
-
-    def run(it):
-        # a partition may stream in several Arrow batches: concatenate per
-        # partition, then score each complete series
-        chunks = list(it)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        for key, grp in pdf.groupby(key_col, sort=False):
-            x = grp.sort_values(order_col)[value_col].to_numpy(dtype=np.float64)
-            if len(x) < min_len:
-                continue
-            res = s2g_oracle(x, params, n_slices=1)
-            n = len(res.scores)
-            if n == 0 or not np.isfinite(res.scores).all():
-                continue  # degenerate series, see score_series_grouped
-            yield pd.DataFrame(
-                {
-                    key_col: np.repeat(key, n),
-                    "window_idx": np.arange(n, dtype=np.int64),
-                    "score": res.scores,
-                }
-            )
-
-    return df.select(key_col, order_col, value_col).mapInPandas(run, out_schema)
-
-
-def score_series_balanced(
-    df: DataFrame,
-    key_col: str,
-    order_col: str,
-    value_col: str,
-    params: S2GParams,
-    n_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Grouped scoring with LPT (longest-processing-time-first) task
-    balancing for skewed series lengths.
-
-    Hash grouping gives every series a random task slot, so with few waves
-    per core the heaviest series sets the stage's makespan (measured: at 32
-    cores / 8 waves a 5x per-series cost spread costs ~1/3 of the ideal
-    speedup — BASELINE.md, W2 decomposition). This variant first collects
-    the per-key ROW COUNTS (one tiny aggregate — K rows for K series),
-    greedily assigns series to ``n_partitions`` bins largest-first onto the
-    currently lightest bin (classic LPT, guaranteed within 4/3 of optimal
-    makespan), range-repartitions on the bin id, and scores partition-
-    locally — same zero-coordination execution as
-    :func:`score_series_partitioned`, same scores, balanced stages.
-
-    Length is the weight proxy (at warehouse scale cost scales with series
-    length; content-dependent variance remains, but LPT on length removes
-    the dominant imbalance for variable-length per-domain series).
-    """
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
-    sizes = df.groupBy(key_col).count().collect()  # K rows, tiny
-    # greedy LPT: heaviest first onto the lightest bin
-    import heapq
-
-    bins = [(0, pid) for pid in range(n_partitions)]
-    heapq.heapify(bins)
-    assign: dict = {}
-    for row in sorted(sizes, key=lambda r: -r["count"]):
-        load, pid = heapq.heappop(bins)
-        assign[row[key_col]] = pid
-        heapq.heappush(bins, (load + row["count"], pid))
-    key_type = next(
-        f.dataType.simpleString() for f in df.schema.fields if f.name == key_col
-    )
-    assign_df = spark.createDataFrame(
-        list(assign.items()), f"{key_col} {key_type}, _pid int"
-    )
-    balanced = (
-        df.join(F.broadcast(assign_df), key_col)  # JVM-side pid lookup
-        .repartitionByRange(n_partitions, "_pid")
-        .drop("_pid")
-    )
-    return score_series_partitioned(
-        balanced, key_col, order_col, value_col, params, assume_partitioned=True
+    return per_series(
+        df,
+        key_cols,
+        order_col,
+        [value_col],
+        edges,
+        "from_seg int, from_idx int, to_seg int, to_idx int, weight long",
     )

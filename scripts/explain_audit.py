@@ -14,8 +14,6 @@ Checked properties (each is an assertion, not just prose):
 - A4 partial aggregation: the hour rollup plans map-side partial
   HashAggregate before the exchange (the shuffle carries one row per
   (key, bucket), not one per input row).
-- A5 shuffle-free grouped scoring: ``score_series_partitioned`` with
-  ``assume_partitioned=True`` contains NO Exchange at all.
 - A6 whole-stage codegen: the q1 aggregate runs inside WholeStageCodegen.
 
 Usage: python scripts/explain_audit.py [sf_dir]  (writes EXPLAIN.md)
@@ -51,8 +49,6 @@ def main() -> None:
     import __spark_entry__ as em
     from dads_spark.fixtures.pages import pages_table
     from dads_spark.rollup import domain_hourly_series, rollup_from_raw, write_tier
-    from dads_spark.s2g import ROLLUP
-    from dads_spark.s2g.pipeline import score_series_partitioned
     from dads_spark.session import get_spark
 
     spark = get_spark(
@@ -119,23 +115,6 @@ def main() -> None:
         f"PASS — {n_hash_agg} HashAggregate stages (partial before the exchange, final after): the shuffle carries one row per (event_type, bucket)",
         "\n".join(l for l in p4.splitlines() if "HashAggregate" in l or "Exchange" in l)[:800],
     ))
-
-    # --- A5: zero-shuffle grouped scoring ----------------------------------
-    gdf = spark.createDataFrame(
-        [("d0", i, float(i)) for i in range(300)], "domain string, t long, value double"
-    ).repartition(2, "domain")
-    p5 = plan_of(
-        score_series_partitioned(gdf, "domain", "t", "value", ROLLUP, assume_partitioned=True)
-    )
-    body = p5[p5.index("== Physical Plan =="):]
-    pre_shuffle = body.split("Exchange RoundRobin")[0]  # the input repartition itself
-    assert "Exchange hashpartitioning" not in body, "grouped scorer added a shuffle"
-    sections.append((
-        "A5 shuffle-free grouped scoring (score_series_partitioned)",
-        "PASS — no hash Exchange anywhere: with domain-bucketed input the whole scoring job is one embarrassingly parallel stage",
-        "\n".join(body.splitlines()[:12]),
-    ))
-    _ = pre_shuffle
 
     # --- A6: whole-stage codegen on q1 --------------------------------------
     # simple-mode explain marks codegen stages with `*(n)`; formatted mode

@@ -163,11 +163,10 @@ out["rollup_rows_per_sec"] = n_raw / out["rollup_sec"]
 """
 
 # W2: grouped S2G over N_SERIES independent series, synthesized ON EXECUTORS
-# (deterministic per series id) and scored with the SHUFFLE-FREE partitioned
-# scorer — the 100-TB-shaped path (tables bucketed by domain at warehouse
-# scale carry each series complete within a partition)
+# (deterministic per series id) and scored with score_series_grouped — the
+# 100-TB-shaped path: one whole series per kernel call behind mapInArrow
 _W_GROUPED = r"""
-from dads_spark.s2g.pipeline import score_series_partitioned
+from dads_spark.s2g.pipeline import score_series_grouped
 # range partitioning: exactly one series per partition (hash would collide)
 ids = spark.range(N_SERIES).repartitionByRange(N_SERIES, "id")
 def gen(it):
@@ -181,7 +180,7 @@ gdf = ids.mapInPandas(gen, "domain string, t long, value double").cache()
 gdf.count()
 for _warm in range(2):
     t0 = time.perf_counter()
-    score_series_partitioned(gdf, "domain", "t", "value", CANONICAL, assume_partitioned=True).count()
+    score_series_grouped(gdf, ["domain"], "t", "value", CANONICAL).count()
     out["s2g_grouped_sec"] = time.perf_counter() - t0
 out["s2g_grouped_points"] = N_SERIES * SERIES_LEN
 out["s2g_grouped_points_per_sec"] = out["s2g_grouped_points"] / out["s2g_grouped_sec"]

@@ -1,0 +1,309 @@
+"""The whole-group Arrow runner behind every per-series operator.
+
+Each operator routed through ``dads_spark.groups`` is checked on a string
+key and on a long key: output key types equal input key types, the
+executed plan runs one ``MapInArrow`` and no pandas node, and every output
+row equals the operator's NumPy kernel applied to each series (exact
+``==``). Gap-fill and blob encoding have no kernel-level function, so the
+pandas paths they replaced are kept below as their reference. The frame
+holds a null key and series that span many 3-row Arrow batches.
+"""
+
+from __future__ import annotations
+
+from collections import Counter
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from pyspark.sql import functions as F
+
+from dads_spark.compress.blobstore import compressed_tier_blobs
+from dads_spark.fixtures import benchmark_series
+from dads_spark.ops.sketch import digest, digest_quantiles
+from dads_spark.rollup import (
+    auto_penalty,
+    discords_grouped,
+    gap_fill_linear,
+    gap_fill_locf,
+    matrix_profile_grouped,
+    motifs_grouped,
+    pelt_changepoints,
+    pelt_grouped,
+)
+from dads_spark.rollup.matrixprofile import matrix_profile, top_discords, top_motifs
+from dads_spark.s2g import S2GParams, s2g_oracle
+from dads_spark.s2g.discord import (
+    discord_series_grouped,
+    drag_discords,
+    matrix_profile_self_sampled,
+    merge_ranges,
+)
+from dads_spark.s2g.pipeline import (
+    graph_edges_grouped,
+    min_series_length,
+    score_series_grouped,
+)
+
+PARAMS = S2GParams(m=10, c=4, S=10, ell=10)
+M = 8
+PROBS = [0.1, 0.5, 0.9]
+LENGTHS = {"a": 200, "b": 120, None: 150, "c": 12}  # "c" is too short for most kernels
+LONG_KEYS = {"a": 1, "b": 2, "c": 3, None: None}
+T0 = pd.Timestamp("2024-01-01")
+
+
+@pytest.fixture(scope="module")
+def series():
+    """Per key: (hour offsets with gaps, values, second values)."""
+    rng = np.random.default_rng(23)
+    out = {}
+    for i, (key, n) in enumerate(LENGTHS.items()):
+        hours = np.arange(n + n // 10)
+        keep = np.sort(rng.choice(hours[1:-1], n - 2, replace=False))
+        hours = np.concatenate(([hours[0]], keep, [hours[-1]]))
+        v = benchmark_series(n, seed=i) + np.where(np.arange(n) > n // 2, 3.0, 0.0)
+        out[key] = (hours, v, np.round(rng.gamma(2.0, 5.0, n)))
+    return out
+
+
+@pytest.fixture(scope="module")
+def frames(spark, series):
+    pdf = pd.concat(
+        pd.DataFrame({"k": key, "ts": T0 + pd.to_timedelta(h, unit="h"), "v": v, "w": w})
+        for key, (h, v, w) in series.items()
+    ).sample(frac=1.0, random_state=5)
+    df = spark.createDataFrame(pdf, "k string, ts timestamp, v double, w double").repartition(3)
+    as_long = F.expr("CASE k WHEN 'a' THEN 1 WHEN 'b' THEN 2 WHEN 'c' THEN 3 END")
+    return {"string": df, "long": df.withColumn("k", as_long.cast("long"))}
+
+
+# --- per-series expectations from the NumPy kernels ------------------------
+
+
+def _scores(x):
+    if len(x) < min_series_length(PARAMS):
+        return []
+    s = s2g_oracle(x, PARAMS, n_slices=1).scores
+    if len(s) == 0 or not np.isfinite(s).all():
+        return []
+    return [(i, float(v)) for i, v in enumerate(s)]
+
+
+def _edges(x):
+    if len(x) < min_series_length(PARAMS):
+        return []
+    weights = s2g_oracle(x, PARAMS, n_slices=1).edge_weights
+    return [(*map(int, e), int(w)) for e, w in weights.items()]
+
+
+def _drag(x):
+    if len(x) < 4 * M:
+        return []
+    n_win = len(x) - M + 1
+    sample = matrix_profile_self_sampled(x, M, max(1, n_win // 200))
+    found = drag_discords(x, M, float(np.quantile(sample[np.isfinite(sample)], 0.995)))
+    spans = merge_ranges([i for i, _ in found], M)
+    return [(s, e, max(v for i, v in found if s <= i < e)) for s, e in spans]
+
+
+def _pelt(x):
+    cps = pelt_changepoints(x, auto_penalty(x))
+    return [(r + 1, cp, len(x)) for r, cp in enumerate(cps)]
+
+
+def _profile(x):
+    mp, mpi = matrix_profile(x, M)
+    if len(mp) == 0 or not np.isfinite(mp).any():
+        return []
+    return [(i, float(mp[i]), int(mpi[i])) for i in range(len(mp))]
+
+
+def _discords(x):
+    mp, _ = matrix_profile(x, M)
+    picks = top_discords(mp, M, 2) if len(mp) else []
+    return [(r + 1, i, float(mp[i])) for r, i in enumerate(picks)]
+
+
+def _motifs(x):
+    mp, mpi = matrix_profile(x, M)
+    picks = top_motifs(mp, mpi, M, 2) if len(mp) else []
+    return [(r + 1, min(p), max(p), float(mp[min(p)])) for r, p in enumerate(picks)]
+
+
+def _digest(x):
+    return [(tuple(np.sort(x).tolist()), (1.0,) * len(x))]
+
+
+def _quantiles(x):
+    v, w = np.sort(x), np.ones(len(x))
+    qs = np.interp([p * w.sum() for p in PROBS], np.cumsum(w) - w / 2.0, v)
+    return list(zip(PROBS, qs.tolist()))
+
+
+KERNEL_OPS = {
+    "score_series_grouped": (
+        lambda df: score_series_grouped(df, ["k"], "ts", "v", PARAMS),
+        _scores,
+    ),
+    "graph_edges_grouped": (
+        lambda df: graph_edges_grouped(df, ["k"], "ts", "v", PARAMS),
+        _edges,
+    ),
+    "discord_series_grouped": (
+        lambda df: discord_series_grouped(df, ["k"], "ts", "v", m=M),
+        _drag,
+    ),
+    "pelt_grouped": (lambda df: pelt_grouped(df, ["k"], "ts", "v"), _pelt),
+    "matrix_profile_grouped": (
+        lambda df: matrix_profile_grouped(df, ["k"], "ts", "v", M),
+        _profile,
+    ),
+    "discords_grouped": (
+        lambda df: discords_grouped(df, ["k"], "ts", "v", m=M, k=2),
+        _discords,
+    ),
+    "motifs_grouped": (
+        lambda df: motifs_grouped(df, ["k"], "ts", "v", m=M, k=2),
+        _motifs,
+    ),
+    "digest": (lambda df: digest(df, ["k"], "v"), _digest),
+    "digest_quantiles": (
+        lambda df: digest_quantiles(digest(df, ["k"], "v"), ["k"], PROBS),
+        _quantiles,
+    ),
+}
+
+
+# --- reference: the per-group pandas paths gap-fill and blobs replaced -----
+
+
+def _reference_paths():
+    """gap_fill_linear, gap_fill_locf and compressed_tier_blobs as they ran
+    before the runner: one ``groupBy().applyInPandas`` call per series.
+    Closures, so Spark pickles them by value to the workers."""
+    import zlib
+
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from dads_spark.compress.deltadelta import encode_timestamps
+    from dads_spark.compress.gorilla import encode_values
+
+    def gap_fill(df, key_cols, bucket_col, value_cols, step_seconds, locf):
+        key_fields = [f for f in df.schema.fields if f.name in key_cols]
+        out_schema = ", ".join(
+            [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
+            + [f"{bucket_col} timestamp"]
+            + [f"{c} double" for c in value_cols]
+            + ["gap_filled boolean"]
+        )
+
+        def fill(pdf):
+            pdf = pdf.sort_values(bucket_col)
+            ts = pdf[bucket_col].astype("datetime64[ns]").astype("int64").to_numpy() // 10**9
+            dense = np.arange(ts[0], ts[-1] + 1, step_seconds)
+            prev = np.searchsorted(ts, dense, side="right") - 1
+            out = {c: np.repeat(pdf[c].iloc[0], len(dense)) for c in key_cols}
+            out[bucket_col] = pd.to_datetime(dense, unit="s")
+            for c in value_cols:
+                observed = pdf[c].to_numpy(dtype=np.float64)
+                out[c] = observed[prev] if locf else np.interp(dense, ts, observed)
+            out["gap_filled"] = ~np.isin(dense, ts)
+            return pd.DataFrame(out)
+
+        return df.groupBy(*key_cols).applyInPandas(fill, out_schema)
+
+    def blobs(tier_df, key_cols, ts_col, value_col, chunk_points):
+        out_schema = StructType(
+            [tier_df.schema[k] for k in key_cols]
+            + [
+                StructField("t_min_us", LongType()),
+                StructField("t_max_us", LongType()),
+                StructField("n_points", LongType()),
+                StructField("ts_blob", BinaryType()),
+                StructField("val_blob", BinaryType()),
+                StructField("crc", LongType()),
+            ]
+        )
+
+        def enc(pdf):
+            pdf = pdf.sort_values(ts_col)
+            ts_us = pdf[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
+            vals = pdf[value_col].to_numpy(np.float64)
+            rows = []
+            for lo in range(0, len(ts_us), chunk_points):
+                t, v = ts_us[lo : lo + chunk_points], vals[lo : lo + chunk_points]
+                tb, vb = encode_timestamps(t), encode_values(v)
+                rows.append(
+                    {
+                        **{k: pdf[k].iloc[0] for k in key_cols},
+                        "t_min_us": int(t[0]),
+                        "t_max_us": int(t[-1]),
+                        "n_points": len(t),
+                        "ts_blob": tb,
+                        "val_blob": vb,
+                        "crc": zlib.crc32(tb) ^ (zlib.crc32(vb) << 1),
+                    }
+                )
+            return pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+
+        return tier_df.groupBy(*key_cols).applyInPandas(enc, out_schema)
+
+    return {
+        "gap_fill_linear": lambda df: gap_fill(df, ["k"], "ts", ["v", "w"], 3600, False),
+        "gap_fill_locf": lambda df: gap_fill(df, ["k"], "ts", ["v", "w"], 3600, True),
+        "compressed_tier_blobs": lambda df: blobs(df, ["k"], "ts", "v", 16),
+    }
+
+
+REFERENCE_OPS = {
+    "gap_fill_linear": lambda df: gap_fill_linear(df, ["k"], "ts", ["v", "w"], 3600),
+    "gap_fill_locf": lambda df: gap_fill_locf(df, ["k"], "ts", ["v", "w"], 3600),
+    "compressed_tier_blobs": lambda df: compressed_tier_blobs(df, ["k"], "ts", "v", 16),
+}
+
+
+def _rows(df):
+    """The collected rows as a multiset; binary columns as bytes, arrays as tuples."""
+    hashable = {bytearray: bytes, list: tuple}
+    return Counter(tuple(hashable.get(type(c), lambda c: c)(c) for c in r) for r in df.collect())
+
+
+@pytest.fixture
+def small_batches(spark):
+    # 3-row Arrow batches: every series spans many batches, so the runner
+    # carries each batch's trailing group into the next
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("key_type", ["string", "long"])
+@pytest.mark.parametrize("op", sorted([*KERNEL_OPS, *REFERENCE_OPS]))
+def test_runner_keeps_key_type_and_matches_kernel(
+    spark, series, frames, small_batches, op, key_type
+):
+    df = frames[key_type]
+    out = (KERNEL_OPS[op][0] if op in KERNEL_OPS else REFERENCE_OPS[op])(df)
+    assert out.schema["k"].dataType == df.schema["k"].dataType
+
+    got = _rows(out)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan, plan
+
+    if op in KERNEL_OPS:
+        kernel = KERNEL_OPS[op][1]
+        keys = LONG_KEYS if key_type == "long" else {k: k for k in LONG_KEYS}
+        want = Counter(
+            (keys[key], *row) for key, (_, v, _) in series.items() for row in kernel(v)
+        )
+    else:
+        want = _rows(_reference_paths()[op](df))
+    assert got == want
+    assert any(r[0] is None for r in got)  # the null key is one series

@@ -101,3 +101,25 @@ def test_pattern_grouped(spark):
                        pat.tolist(), k=2).toPandas()
     assert len(out) == 2
     assert out.loc[out["rank"] == 1, "window_idx"].iloc[0] == 100
+
+
+def test_neighbour_frames_grow_from_partition_start(spark):
+    # Spark re-aggregates an (n, unboundedFollowing) frame for every row,
+    # O(n^2) per series; both "next" lookups must run over reversed order
+    from dads_spark.rollup import funnel_with_exclusion
+
+    df = _series_df(spark, [0, 5000, 9000], [1.0, 2.0, 4.0])
+    events = spark.createDataFrame(
+        [(1, 100, "click"), (1, 150, "error"), (1, 200, "purchase")],
+        "user_id long, sec long, event_type string",
+    ).selectExpr("user_id", "timestamp_seconds(sec) AS ts", "event_type")
+    for out in (
+        resample_grid(df, ["k"], "sec", "v", 3600, method="linear"),
+        funnel_with_exclusion(
+            events, "user_id", "ts", "event_type", "click", "purchase", "error", 3600
+        ),
+    ):
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString().lower()
+        assert "specifiedwindowframe" in plan, plan
+        assert "unboundedfollowing" not in plan, plan

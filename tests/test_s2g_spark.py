@@ -124,56 +124,6 @@ def test_distributed_heterogeneous_bit_parity(spark, series):
     assert (out["score"].to_numpy() == ora.scores).all()
 
 
-def test_balanced_scorer_matches_grouped_and_balances(spark):
-    """score_series_balanced: identical scores to the grouped scorer, and
-    LPT packing bounds the heaviest partition near total/P even with a 10x
-    series-length skew."""
-    from dads_spark.s2g.pipeline import score_series_balanced
-
-    lengths = {"big": 4000, "mid1": 1200, "mid2": 1100, "s1": 400, "s2": 400,
-               "s3": 400, "s4": 400, "s5": 400}
-    rows = []
-    for i, (k, L) in enumerate(lengths.items()):
-        x = benchmark_series(L, seed=i)
-        rows += [(k, t, float(v)) for t, v in enumerate(x)]
-    df = spark.createDataFrame(rows, "domain string, t long, value double")
-
-    got = (
-        score_series_balanced(df, "domain", "t", "value", PARAMS, n_partitions=4)
-        .toPandas()
-        .sort_values(["domain", "window_idx"])
-        .reset_index(drop=True)
-    )
-    want = (
-        score_series_grouped(df, ["domain"], "t", "value", PARAMS)
-        .toPandas()
-        .sort_values(["domain", "window_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want) > 0
-    assert (got["domain"].to_numpy() == want["domain"].to_numpy()).all()
-    assert (got["score"].to_numpy() == want["score"].to_numpy()).all()
-
-    # balance check on the LPT assignment itself (deterministic, driver-side)
-    import heapq
-
-    sizes = sorted(lengths.items(), key=lambda kv: -kv[1])
-    bins = [(0, p) for p in range(4)]
-    heapq.heapify(bins)
-    loads = {p: 0 for p in range(4)}
-    for k, L in sizes:
-        load, p = heapq.heappop(bins)
-        loads[p] = load + L
-        heapq.heappush(bins, (loads[p], p))
-    total = sum(lengths.values())
-    # LPT guarantee: makespan <= 4/3 of optimal; optimal >= max(mean load,
-    # heaviest single indivisible series)
-    opt_floor = max(total / 4, max(lengths.values()))
-    assert max(loads.values()) <= opt_floor * (4 / 3)
-    # and the heavy series must NOT share a bin with the mid-size ones
-    assert max(loads.values()) == max(lengths.values())
-
-
 def test_graph_edges_grouped_matches_oracle(spark):
     """The exposed per-series edge list equals the oracle's merged graph."""
     import numpy as np

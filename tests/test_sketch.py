@@ -95,7 +95,13 @@ def _reference_paths():
     """(digest, merge_digests, digest_quantiles) as they ran before the
     Arrow kernel: a mapInPandas partial per partition and one pandas call
     per group. Closures, so Spark pickles them by value to the workers."""
-    from dads_spark.ops.sketch import _cluster, _sketch_schema
+    from dads_spark.ops.sketch import _cluster
+
+    def _sketch_schema(key_cols):
+        return ", ".join(
+            [f"{k} string" for k in key_cols]
+            + ["centroids array<double>", "weights array<double>"]
+        )
 
     def merge_rows(pdf, compression):
         v = np.concatenate([np.asarray(c, dtype=np.float64) for c in pdf["centroids"]])
