@@ -136,7 +136,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         # matrix_profile_discord retired r5 (verdict #4 named it): the
         # rows-only lane beside the driver-pinned twin
         # (matrix_profile_pinned, gate-checked); its STOMP kernel is the
-        # same applyInPandas shape pattern_search times
+        # same per-series Arrow runner shape pattern_search times
         "q9_product_profit",
         # q13/q21 dropped r3s2: TPC-H shape coverage in bench stays with
         # q1/q3/q5/q7/q9/q18; the correctness gate still runs all 22

@@ -22,8 +22,9 @@ boundaries are bit-reproducible on any engine and any partitioning, with
 no epsilon-of-an-epsilon float ambiguity at cone-collapse points. That is
 the property the staged scalar oracle pins.
 
-Scale shape: one kernel task per POST-ROLLUP series under
-``groupBy().applyInPandas`` (the grouped-S2G layout); O(n) per series,
+Scale shape: one kernel call per POST-ROLLUP series behind ``mapInArrow``,
+through the per-series runner ``dads_spark.groups.per_series`` (the
+grouped-S2G layout); O(n) per series,
 no cross-task traffic. At 100 TB the segment table IS the compressed
 tier: reads reconstruct by join-free interpolation between knots.
 """
@@ -31,9 +32,10 @@ tier: reads reconstruct by join-free interpolation between knots.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 
 def swing_segments(
@@ -101,37 +103,13 @@ def pla_segments_grouped(
 ) -> DataFrame:
     """Per-series swing-filter PLA: keys..., seg_idx, t_start, v_start,
     t_end, v_end, n_points — all exact integers."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + [
-            "seg_idx long",
-            "t_start long",
-            "v_start long",
-            "t_end long",
-            "v_end long",
-            "n_points long",
-        ]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(ts_col)
-        t = pdf[ts_col].to_numpy(dtype=np.int64)
-        v = pdf[value_col].to_numpy(dtype=np.int64)
-        segs = swing_segments(t, v, eps)
-        arr = np.array(segs, dtype=np.int64).reshape(len(segs), 5)
-        return pd.DataFrame(
-            {
-                **{c: [k] * len(segs) for c, k in zip(key_cols, keys)},
-                "seg_idx": np.arange(len(segs), dtype=np.int64),
-                "t_start": arr[:, 0],
-                "v_start": arr[:, 1],
-                "t_end": arr[:, 2],
-                "v_end": arr[:, 3],
-                "n_points": arr[:, 4],
-            }
-        )
+    def f(t, v):
+        segs = swing_segments(t, v.astype(np.int64), eps)
+        return np.arange(len(segs)), *zip(*segs)
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    fields = "seg_idx long, t_start long, v_start long, t_end long, v_end long, n_points long"
+    return per_series(df, key_cols, ts_col, [value_col], f, fields)
 
 
 def pla_max_error(

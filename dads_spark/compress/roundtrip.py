@@ -7,19 +7,20 @@ rows.  The entry-point query compares the result against the *uncompressed*
 DuckDB rollup oracle — hash equality shows the codecs are lossless end to
 end under real Spark partitioning.
 
-Scale shape: one Arrow batch per key (tier series are small — one row per
-bucket), embarrassingly parallel, no shuffle beyond the rollup's own
-groupBy.  At warehouse scale this is exactly how tier blobs are produced
-for cold storage (see ``write_tier``): the codec runs where the data sits.
+Scale shape: one kernel call per key behind ``mapInArrow``, through the
+per-series runner ``dads_spark.groups.per_series`` (tier series are small
+— one row per bucket), embarrassingly parallel, one shuffle to gather
+each key's series.  At warehouse scale this is exactly how tier blobs are
+produced for cold storage (see ``write_tier``): the codec runs where the
+data sits.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
 
+from ..groups import per_series
 from . import alp, chimp, gorilla, rle
 from .deltadelta import decode_timestamps, encode_timestamps
 
@@ -43,24 +44,13 @@ def compressed_tier_roundtrip(
     the named XOR value ``codec`` — gorilla or chimp), decode, and emit
     the decoded points.  Lossless: output rows equal input rows exactly."""
     encode_values, decode_values = VALUE_CODECS[codec]
-    fields = [tier_df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        fields
-        + [StructField(ts_col, TimestampType()), StructField(value_col, DoubleType())]
-    )
 
-    def rt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        ts_us = pdf[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
-        vals = pdf[value_col].to_numpy(np.float64)
+    def rt(ts_us, vals):
         ts_dec = decode_timestamps(encode_timestamps(ts_us), len(ts_us))
-        val_dec = decode_values(encode_values(vals), len(vals))
-        cols = {k: np.repeat(pdf[k].iloc[0], len(ts_dec)) for k in key_cols}
-        cols[ts_col] = pd.to_datetime(ts_dec, unit="us")
-        cols[value_col] = val_dec
-        return pd.DataFrame(cols)
+        return ts_dec, decode_values(encode_values(vals), len(vals))
 
-    return tier_df.groupBy(*key_cols).applyInPandas(rt, out_schema)
+    fields = f"{ts_col} timestamp, {value_col} double"
+    return per_series(tier_df, key_cols, ts_col, [value_col], rt, fields)
 
 
 def simple8b_tier_roundtrip(
@@ -74,33 +64,13 @@ def simple8b_tier_roundtrip(
     AND its integer counts go through simple-8b, decode, and come back
     as rows. The word-aligned integer path beside the bit-granular
     delta-of-delta; lossless by the same gate discipline."""
-    from pyspark.sql.types import LongType
-
     from . import simple8b as s8
 
-    fields = [tier_df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        fields
-        + [
-            StructField(ts_col, TimestampType()),
-            StructField(count_col, LongType()),
-        ]
-    )
-
-    def rt(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        ts_us = pdf[ts_col].to_numpy().astype("datetime64[us]").astype(np.int64)
+    def rt(ts_us, counts):
         deltas = np.diff(ts_us, prepend=0).astype(np.uint64)
-        counts = pdf[count_col].to_numpy(np.int64).astype(np.uint64)
-        ts_dec = np.cumsum(
-            s8.decode_ints(s8.encode_ints(deltas), len(deltas)).astype(np.int64)
-        )
-        c_dec = s8.decode_ints(s8.encode_ints(counts), len(counts)).astype(
-            np.int64
-        )
-        cols = {k: np.repeat(pdf[k].iloc[0], len(ts_dec)) for k in key_cols}
-        cols[ts_col] = pd.to_datetime(ts_dec, unit="us")
-        cols[count_col] = c_dec
-        return pd.DataFrame(cols)
+        counts = counts.astype(np.int64).astype(np.uint64)
+        ts_dec = np.cumsum(s8.decode_ints(s8.encode_ints(deltas), len(deltas)).astype(np.int64))
+        return ts_dec, s8.decode_ints(s8.encode_ints(counts), len(counts)).astype(np.int64)
 
-    return tier_df.groupBy(*key_cols).applyInPandas(rt, out_schema)
+    fields = f"{ts_col} timestamp, {count_col} long"
+    return per_series(tier_df, key_cols, ts_col, [count_col], rt, fields)

@@ -7,8 +7,12 @@ batches into runs of whole groups, carrying only each batch's trailing
 every group whole with no pandas conversion and no per-group Python call on
 the Spark side. ``ops/sketch.py`` merges its t-digest centroids over these
 runs in one vectorised pass; :func:`per_series` runs a kernel once per
-key's series and is the shape of every grouped time-series operator
-(S2G, DRAG discords, PELT, gap-fill, blob encoding, matrix profile).
+key's series and is the shape of every grouped time-series operator:
+S2G, DRAG discords, PELT, gap-fill, blob encoding, matrix profile,
+forecasting (Holt, Holt-Winters, CUSUM, Croston), LTTB/EWMA/ASAP,
+Theil-Sen and Mann-Kendall trends, seasonal ESD, V-optimal and Haar
+synopses, PLA, ACF period, pattern search, codec round-trips and
+isotonic calibration.
 
 Key columns keep the type they have in the input: the runner reads them
 from the input schema and takes the output keys from the input rows, so no
@@ -80,7 +84,9 @@ def per_series(
 
     ``kernel(order, *values)`` gets the series' ``order_col`` (timestamps as
     int64 epoch microseconds) and each of ``value_cols`` as float64 (nulls
-    as NaN), all as NumPy arrays sorted by ``order_col``. It returns one
+    as NaN), all as NumPy arrays sorted by ``order_col``. An integer kernel
+    takes its values back with ``.astype(np.int64)``, which is exact for
+    magnitudes below 2^53. It returns one
     array per field of the DDL string ``out_fields``, all of one length, or
     None for no rows. Output: the key columns, typed as in ``df``, then
     ``out_fields``, each cast to its declared type; NaN becomes null, as it

@@ -31,7 +31,12 @@ Reference analog: none in DADS (pure web-corpus op); SURVEY §2.4 suite.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from ..groups import per_series
 
 
 def quantile_normalize(
@@ -133,14 +138,15 @@ def isotonic_fit(
 
     Exact integer construction end-to-end: ties on x pool first (one
     hash aggregation), then pool-adjacent-violators runs per group in
-    an Arrow batch with means compared by CROSS-MULTIPLICATION (never
-    divided), so the fitted value of each x is an exact rational
-    (yhat_num / yhat_den) plus its half-up micro-unit quantize. Output
+    one :func:`dads_spark.groups.per_series` kernel call with means
+    compared by CROSS-MULTIPLICATION (never divided), so the fitted
+    value of each x is an exact rational (yhat_num / yhat_den) plus its
+    half-up micro-unit quantize. Output
     one row per distinct (group, x).
 
     Scale shape: the corpus collapses to |group| x |distinct scores|
     aggregate rows BEFORE the Python stage; PAV is O(levels) per group
-    over that small frame (the legitimate applyInPandas case: an
+    over that small frame (the legitimate per-series kernel case: an
     order-dependent sequential fit per group). Gated against a staged
     oracle computing the minimax characterization ``max_{j<=i}
     min_{k>=i} avg(y[j..k])`` — a different algorithm entirely.
@@ -148,37 +154,22 @@ def isotonic_fit(
     Reference analog: none; SURVEY §2.4 curation suite (Barlow et al.
     1972 PAV; public method).
     """
-    import pandas as pd
-
     pooled = df.groupBy(
         *group_cols, F.col(x_col).cast("long").alias("x")
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col(y_col).cast("long")).alias("y_sum"),
     )
-    schema = (
-        ", ".join(f"{c} string" for c in group_cols)
-        + ", x long, n long, y_sum long, yhat_num long, yhat_den long,"
-        " yhat_q6 long"
-    )
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-
-        pdf = pdf.sort_values("x").reset_index(drop=True)
-        pairs = _pav_blocks(
-            pdf["x"].tolist(), pdf["n"].tolist(), pdf["y_sum"].tolist()
-        )
+    def fit(x, n, y_sum):
+        n, y_sum = n.astype(np.int64), y_sum.astype(np.int64)
+        pairs = _pav_blocks(x.tolist(), n.tolist(), y_sum.tolist())
         # lowest terms, so the representation matches the minimax
         # oracle's reduced fractions exactly
         red = [(s // math.gcd(s, n) if s else 0,
                 n // math.gcd(s, n) if s else 1) for s, n in pairs]
-        pdf["yhat_num"] = [p[0] for p in red]
-        pdf["yhat_den"] = [p[1] for p in red]
-        pdf["yhat_q6"] = [
-            int((10**6 * s) // n + (1 if (10**6 * s) % n * 2 >= n else 0))
-            for s, n in red
-        ]
-        return pdf
+        q6 = [(10**6 * s) // n + (1 if (10**6 * s) % n * 2 >= n else 0) for s, n in red]
+        return x, n, y_sum, *zip(*red), q6
 
-    return pooled.groupBy(*group_cols).applyInPandas(fit, schema=schema)
+    fields = "x long, n long, y_sum long, yhat_num long, yhat_den long, yhat_q6 long"
+    return per_series(pooled, group_cols, "x", ["n", "y_sum"], fit, fields)

@@ -39,6 +39,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..groups import keyed_schema
+
 __all__ = ["token_bucket"]
 
 _MICRO = 1_000_000
@@ -71,9 +73,8 @@ def token_bucket(
         F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
         F.col(id_col).alias("id"),
     )
-    schema = (
-        "key string, id long, ts_us long, admitted long, "
-        "tokens_after_micro long"
+    schema = keyed_schema(
+        staged, ["key"], "id long, ts_us long, admitted long, tokens_after_micro long"
     )
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -12,8 +12,9 @@ operators beyond the tier cascade (which is the aggregate downsample):
   per-domain series.
 
 Both are per-series sequential recurrences, so they run as one vectorized
-NumPy/pandas kernel per series inside ``groupBy().applyInPandas`` — the
-same zero-coordination many-series shape as the grouped S2G scorer: at
+NumPy kernel per series behind ``mapInArrow``, through the per-series
+runner ``dads_spark.groups.per_series`` — the same zero-coordination
+many-series shape as the grouped S2G scorer: at
 10^12 docs there are millions of (domain) series, each small after rollup,
 and Spark schedules one task per series group with no cross-task traffic.
 """
@@ -25,6 +26,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
+
+from ..groups import per_series
 
 
 def lttb_indices(t: np.ndarray, v: np.ndarray, n_out: int) -> np.ndarray:
@@ -74,25 +78,17 @@ def lttb_downsample(
     n_out: int,
 ) -> DataFrame:
     """Per-series LTTB to ``n_out`` points: (keys..., bucket, value) rows,
-    order-stable (sorted by bucket inside each series)."""
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {fields[c]}" for c in key_cols]
-        + [f"{bucket_col} {fields[bucket_col]}", f"{value_col} double"]
-    )
+    order-stable (sorted by bucket inside each series). A timestamp
+    bucket enters the triangle areas as epoch nanoseconds."""
+    bucket = df.schema[bucket_col].dataType
+    ns = 1000 if isinstance(bucket, (TimestampType, TimestampNTZType)) else 1
 
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col).reset_index(drop=True)
-        t = pdf[bucket_col].astype("datetime64[ns]").astype("int64").to_numpy()
-        v = pdf[value_col].to_numpy(dtype=np.float64)
-        idx = lttb_indices(t, v, n_out)
-        out = pdf.iloc[idx][[*key_cols, bucket_col]].copy()
-        out[value_col] = v[idx]
-        return out
+    def pick(t, v):
+        idx = lttb_indices(t * ns, v, n_out)
+        return t[idx], v[idx]
 
-    return df.select(*key_cols, bucket_col, value_col).groupBy(
-        *key_cols
-    ).applyInPandas(pick, out_schema)
+    fields = f"{bucket_col} {bucket.simpleString()}, {value_col} double"
+    return per_series(df, key_cols, bucket_col, [value_col], pick, fields)
 
 
 def m4_downsample(
@@ -107,7 +103,7 @@ def m4_downsample(
     exactly the point set a width-w line plot needs for pixel-perfect
     rendering, and the standard visualization downsample next to LTTB.
 
-    Unlike LTTB (sequential per-series recurrence -> applyInPandas), M4 is
+    Unlike LTTB (sequential per-series recurrence -> per_series), M4 is
     a plain grouped aggregation: 100% JVM codegen, ONE shuffle on
     (keys, pixel), partial aggregation map-side — at 10^12 docs the shuffle
     carries one row per (series, pixel), i.e. the OUTPUT size, not the
@@ -161,30 +157,16 @@ def ewma_smooth(
     """Per-series EWMA (pandas ``ewm(alpha, adjust=True)`` semantics) +
     absolute residual: (keys..., bucket, value, ewma, abs_resid). The
     residual column is the input for threshold anomaly flags."""
-    fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        [f"{c} {fields[c]}" for c in key_cols]
-        + [
-            f"{bucket_col} {fields[bucket_col]}",
-            f"{value_col} double",
-            "ewma double",
-            "abs_resid double",
-        ]
+
+    def smooth(t, v):
+        ew = pd.Series(v).ewm(alpha=alpha, adjust=True).mean().to_numpy()
+        return t, v, ew, np.abs(v - ew)
+
+    fields = (
+        f"{bucket_col} {df.schema[bucket_col].dataType.simpleString()}, "
+        f"{value_col} double, ewma double, abs_resid double"
     )
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col).reset_index(drop=True)
-        v = pdf[value_col].astype(np.float64)
-        ew = v.ewm(alpha=alpha, adjust=True).mean()
-        out = pdf[[*key_cols, bucket_col]].copy()
-        out[value_col] = v
-        out["ewma"] = ew
-        out["abs_resid"] = (v - ew).abs()
-        return out
-
-    return df.select(*key_cols, bucket_col, value_col).groupBy(
-        *key_cols
-    ).applyInPandas(smooth, out_schema)
+    return per_series(df, key_cols, bucket_col, [value_col], smooth, fields)
 
 
 def ohlc_bars(
@@ -276,35 +258,26 @@ def asap_smooth_params(
     quantized to integer micro-units (q6, sign*floor(|x|*1e6+0.5)).
 
     Same zero-coordination many-series shape as the grouped S2G scorer:
-    one task per series, the search a vectorized cumsum sweep inside
-    ``applyInPandas``. Output: (keys..., n_points, w_opt, roughness_q6,
-    kurtosis_q6).
+    one task per series, the search a vectorized cumsum sweep inside one
+    :func:`dads_spark.groups.per_series` kernel call. Output: (keys...,
+    n_points, w_opt, roughness_q6, kurtosis_q6).
     """
     from .tiers import rollup_from_raw
 
     hourly = rollup_from_raw(df, key_cols, ts_col, value_col, tier)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket_ts")
-        v = pdf["doc_count"].to_numpy(np.float64)
+    def q6(x: float) -> int:
+        return int(np.sign(x) * np.floor(abs(x) * 1e6 + 0.5))
+
+    def run(_, v):
         w, r, k = asap_window_search(v, max_window)
+        return [len(v)], [w], [q6(r)], [q6(k)]
 
-        def q6(x: float) -> int:
-            return int(np.sign(x) * np.floor(abs(x) * 1e6 + 0.5))
-
-        return pd.DataFrame(
-            {
-                **{c: [pdf[c].iloc[0]] for c in key_cols},
-                "n_points": [len(v)],
-                "w_opt": [w],
-                "roughness_q6": [q6(r)],
-                "kurtosis_q6": [q6(k)],
-            }
-        )
-
-    key_schema = ", ".join(f"{c} string" for c in key_cols)
-    return hourly.groupBy(*key_cols).applyInPandas(
+    return per_series(
+        hourly,
+        key_cols,
+        "bucket_ts",
+        ["doc_count"],
         run,
-        f"{key_schema}, n_points long, w_opt long, "
-        "roughness_q6 long, kurtosis_q6 long",
+        "n_points long, w_opt long, roughness_q6 long, kurtosis_q6 long",
     )

@@ -34,9 +34,10 @@ anchor the quantile function against textbook t-table values — so the
 oracle sharing the constant generator is sharing an input parameter,
 not arithmetic.
 
-Scale shape: one ``groupBy(keys).applyInPandas`` — each series is one
-task, zero cross-task coordination (the grouped-S2G discipline); the
-ESD loop is K <= 10 re-medians of an in-memory array.
+Scale shape: one :func:`dads_spark.groups.per_series` kernel call per
+series behind ``mapInArrow``, zero cross-task coordination (the
+grouped-S2G discipline); the ESD loop is K <= 10 re-medians of an
+in-memory array.
 
 Reference analog: none; spec source is BASELINE.json:6 (per-tier
 series diagnostics) — the robust multi-outlier complement of
@@ -48,8 +49,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 __all__ = ["esd_lambdas_q6", "seasonal_esd_grouped", "t_quantile"]
 
@@ -212,35 +214,24 @@ def seasonal_esd_grouped(
     ESD step: (keys..., step, t, v, u, md, significant) with the exact
     integer decision operands; ``significant`` = 1 for every step up
     to the LAST passing test (the ESD rule)."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["step long", "t long", "v long", "u long", "md long",
-           "sum_u long", "n_active long", "significant long"]
-    )
 
-    def f(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        t = pdf[order_col].to_numpy(dtype=np.int64)
-        v = pdf[value_col].to_numpy(dtype=np.int64)
+    def f(t, v):
+        v = v.astype(np.int64)
         phase = t % season
         sm2 = {}
         for ph in np.unique(phase):
             sm2[int(ph)] = _median2_int(np.sort(v[phase == ph]))
         r2 = 2 * v - np.array([sm2[int(p)] for p in phase], dtype=np.int64)
-        lambdas = esd_lambdas_q6(len(v), k, alpha)
-        steps = _esd_steps(r2, lambdas)
-        last_pass = max((s[0] for s in steps if s[6]), default=0)
-        rows = {
-            **{c: [kv] * len(steps) for c, kv in zip(key_cols, keys)},
-            "step": [s[0] for s in steps],
-            "t": [int(t[s[1]]) for s in steps],
-            "v": [int(v[s[1]]) for s in steps],
-            "u": [s[2] for s in steps],
-            "md": [s[3] for s in steps],
-            "sum_u": [s[4] for s in steps],
-            "n_active": [s[5] for s in steps],
-            "significant": [1 if s[0] <= last_pass else 0 for s in steps],
-        }
-        return pd.DataFrame(rows)
+        steps = _esd_steps(r2, esd_lambdas_q6(len(v), k, alpha))
+        if not steps:
+            return None
+        step, cand, u, md, sum_u, n_act, passed = map(np.array, zip(*steps))
+        last_pass = step[passed].max() if passed.any() else 0
+        significant = (step <= last_pass).astype(np.int64)
+        return step, t[cand], v[cand], u, md, sum_u, n_act, significant
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    fields = (
+        "step long, t long, v long, u long, md long, sum_u long, n_active long, "
+        "significant long"
+    )
+    return per_series(df, key_cols, order_col, [value_col], f, fields)

@@ -2,21 +2,25 @@
 changepoint detection per series.
 
 Both recursions are inherently sequential (state_t depends on state_{t-1})
-so they run as one NumPy/Python loop per series inside
-``groupBy().applyInPandas`` — the grouped-kernel shape shared with the S2G
-scorer and the matrix profile: a post-rollup series is thousands of
-points (one task), millions of series parallelize across tasks. Rows-only
-operators (the recursions are not ANSI SQL); semantics are pinned by sharp
-property tests (exact-linear series -> zero residuals; planted mean shift
--> alarm within steps of the shift, none before).
+so they run as one NumPy/Python loop per series behind ``mapInArrow``,
+through the per-series runner ``dads_spark.groups.per_series`` — the
+grouped-kernel shape shared with the S2G scorer and the matrix profile:
+a post-rollup series is thousands of points (one task), millions of
+series parallelize across tasks. Rows-only operators (the recursions are
+not ANSI SQL); semantics are pinned by sharp property tests (exact-linear
+series -> zero residuals; planted mean shift -> alarm within steps of the
+shift, none before).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from ..groups import per_series
+
+_POINT_FIELDS = "idx long, value double, forecast double, residual double"
 
 
 def holt_forecast(
@@ -108,27 +112,13 @@ def holt_winters_grouped(
     """Per-series Holt-Winters one-step forecasts + residuals for every
     index past the first season: (keys..., idx, value, forecast, residual).
     Same grouped-kernel scale shape as :func:`holt_residuals_grouped`."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["idx long", "value double", "forecast double", "residual double"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+    def f(_, x):
         fc, resid = holt_winters(x, m, alpha, beta, gamma)
-        ok = np.isfinite(fc)
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "idx": np.nonzero(ok)[0].astype(np.int64),
-                "value": x[ok],
-                "forecast": fc[ok],
-                "residual": resid[ok],
-            }
-        )
+        ok = np.flatnonzero(np.isfinite(fc))
+        return ok, x[ok], fc[ok], resid[ok]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(df, key_cols, order_col, [value_col], f, _POINT_FIELDS)
 
 
 def cusum_changepoints(
@@ -182,29 +172,17 @@ def holt_residuals_grouped(
     (keys..., idx, value, forecast, residual) for |residual| >
     n_sigma * residual sigma of the series. ``phi`` < 1 damps the
     trend (Gardner-McKenzie); 1.0 is classic Holt."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["idx long", "value double", "forecast double", "residual double"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        x = pdf[value_col].to_numpy(dtype=np.float64)
+    def f(_, x):
         fc, resid = holt_forecast(x, alpha, beta, phi)
         ok = np.isfinite(resid)
         sd = resid[ok].std() if ok.any() else 0.0
-        sel = ok & (np.abs(resid) > n_sigma * sd) if sd > 0 else np.zeros(len(x), bool)
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "idx": np.nonzero(sel)[0].astype(np.int64),
-                "value": x[sel],
-                "forecast": fc[sel],
-                "residual": resid[sel],
-            }
-        )
+        if sd <= 0:
+            return None
+        sel = np.flatnonzero(ok & (np.abs(resid) > n_sigma * sd))
+        return sel, x[sel], fc[sel], resid[sel]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(df, key_cols, order_col, [value_col], f, _POINT_FIELDS)
 
 
 def cusum_grouped(
@@ -216,24 +194,12 @@ def cusum_grouped(
     h: float = 5.0,
 ) -> DataFrame:
     """Per-series CUSUM changepoints: (keys..., idx, direction)."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols] + ["idx long", "direction string"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        alarms = cusum_changepoints(
-            pdf[value_col].to_numpy(dtype=np.float64), k, h
-        )
-        return pd.DataFrame(
-            {
-                **{c: v for c, v in zip(key_cols, keys)},
-                "idx": np.array([a[0] for a in alarms], dtype=np.int64),
-                "direction": [a[1] for a in alarms],
-            }
-        )
+    def f(_, x):
+        alarms = cusum_changepoints(x, k, h)
+        return [a[0] for a in alarms], [a[1] for a in alarms]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(df, key_cols, order_col, [value_col], f, "idx long, direction string")
 
 
 def rolling_backtest(
@@ -376,38 +342,21 @@ def croston_grouped(
 
     Returns (keys..., n_demands, size_level, interval_level, forecast).
     """
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + [
-            "n_demands long",
-            "size_level double",
-            "interval_level double",
-            "forecast double",
-        ]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(bucket_col)
-        s, v, fc = croston(
-            pdf[demand_col].to_numpy(), pdf[bucket_col].to_numpy(), alpha
-        )
+    def f(d, q):
+        s, v, fc = croston(q, d, alpha)
         if not np.isfinite(fc):
-            return pd.DataFrame(
-                {c: [] for c in
-                 [*key_cols, "n_demands", "size_level",
-                  "interval_level", "forecast"]}
-            )
-        return pd.DataFrame(
-            {
-                **{c: [v2] for c, v2 in zip(key_cols, keys)},
-                "n_demands": [len(pdf)],
-                "size_level": [s],
-                "interval_level": [v],
-                "forecast": [fc],
-            }
-        )
+            return None
+        return [len(q)], [s], [v], [fc]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(
+        df,
+        key_cols,
+        bucket_col,
+        [demand_col],
+        f,
+        "n_demands long, size_level double, interval_level double, forecast double",
+    )
 
 
 def conformal_interval(

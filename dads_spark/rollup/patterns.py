@@ -8,8 +8,9 @@ FFT-based algorithm, the same public kernel the DRAG operator calibrates
 with). The classic "find me days that look like this outage" query over
 rolled-up per-domain series.
 
-Distribution shape: one kernel per series via ``groupBy().applyInPandas``
-(the grouped zero-coordination shape shared with the S2G scorer); each
+Distribution shape: one kernel per series behind ``mapInArrow``, through
+the per-series runner ``dads_spark.groups.per_series`` (the grouped
+zero-coordination shape shared with the S2G scorer); each
 task emits only its top-k rows, so the shuffle is k rows per series no
 matter how long the series is.
 
@@ -22,10 +23,10 @@ agree to ~1e-12 at these magnitudes) produce identical top-k lists.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from ..groups import per_series
 from ..s2g.discord import mass_distance_profile
 
 
@@ -53,22 +54,10 @@ def pattern_topk(
     """Per-series top-k best-matching windows:
     (keys..., rank, window_idx, dist_q6)."""
     pat = np.asarray(pattern, dtype=np.float64)
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    out_schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in key_fields]
-        + ["rank long", "window_idx long", "dist_q6 long"]
-    )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = pdf.sort_values(order_col)[value_col].to_numpy(dtype=np.float64)
+    def run(_, x):
         top = pattern_topk_kernel(x, pat, k)
-        return pd.DataFrame(
-            {
-                **{c: np.repeat(pdf[c].iloc[0], len(top)) for c in key_cols},
-                "rank": np.arange(1, len(top) + 1, dtype=np.int64),
-                "window_idx": np.array([t[0] for t in top], dtype=np.int64),
-                "dist_q6": np.array([t[1] for t in top], dtype=np.int64),
-            }
-        )
+        return np.arange(1, len(top) + 1), *zip(*top)
 
-    return df.groupBy(*key_cols).applyInPandas(run, out_schema)
+    fields = "rank long, window_idx long, dist_q6 long"
+    return per_series(df, key_cols, order_col, [value_col], run, fields)

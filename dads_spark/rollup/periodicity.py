@@ -19,10 +19,11 @@ enters the operator, so the DuckDB oracle twin matches by construction.
 
 Distribution shape: the hourly counts are one groupBy over the fact
 table (the rollup shuffle); the dense per-series vector and the O(n*B)
-lag products run inside one Arrow batch per series via applyInPandas —
-series are the parallelism unit, exactly like the matrix-profile and
-S2G kernels in this engine (a rolled-up series is ~10^3-10^5 points:
-driver-free, executor-local NumPy). Band size B is a constant (<=168).
+lag products run in one :func:`dads_spark.groups.per_series` kernel call
+per series behind ``mapInArrow`` — series are the parallelism unit,
+exactly like the matrix-profile and S2G kernels in this engine (a
+rolled-up series is ~10^3-10^5 points: driver-free, executor-local
+NumPy). Band size B is a constant (<=168).
 
 Oracle twin: ``acf_period`` in __spark_entry__.py.
 """
@@ -30,8 +31,9 @@ Oracle twin: ``acf_period`` in __spark_entry__.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..groups import per_series
 
 
 def acf_dominant_period(
@@ -56,41 +58,25 @@ def acf_dominant_period(
     span = counts.agg(F.max(idx_col).alias("_max_idx"))
     with_span = counts.crossJoin(F.broadcast(span))
 
-    out_schema = (
-        ", ".join(f"{c} string" for c in key_cols)
-        + ", n_buckets long, period long, acf_num long, acf_den long"
-    )
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = int(pdf["_max_idx"].iloc[0]) + 1
+    def score(idx, cnt, max_idx):
+        n = int(max_idx[0]) + 1
         x = np.zeros(n, dtype=np.int64)
-        x[pdf[idx_col].to_numpy(dtype=np.int64)] = pdf[value_col].to_numpy(
-            dtype=np.int64
-        )
+        x[idx] = cnt.astype(np.int64)
         s = np.int64(x.sum())
         y = np.int64(n) * x - s
         d = np.int64(np.dot(y, y))
         hi = min(lag_hi, n - 1)
         if d <= 0 or hi < lag_lo:  # constant series or too short: no period
-            return pd.DataFrame(
-                columns=[*key_cols, "n_buckets", "period", "acf_num", "acf_den"]
-            )
+            return None
         nums = np.array(
             [np.dot(y[:-k], y[k:]) for k in range(lag_lo, hi + 1)],
             dtype=np.int64,
         )
         best = int(np.argmax(nums))  # first occurrence = smallest lag
-        return pd.DataFrame(
-            {
-                **{c: [pdf[c].iloc[0]] for c in key_cols},
-                "n_buckets": [n],
-                "period": [lag_lo + best],
-                "acf_num": [int(nums[best])],
-                "acf_den": [int(d)],
-            }
-        )
+        return [n], [lag_lo + best], [nums[best]], [d]
 
-    return with_span.groupBy(*key_cols).applyInPandas(score, out_schema)
+    fields = "n_buckets long, period long, acf_num long, acf_den long"
+    return per_series(with_span, key_cols, idx_col, [value_col, "_max_idx"], score, fields)
 
 
 # cos(2*pi*a/24) * 1e6, half-up, a = 0..23 — the 15-degree grid every

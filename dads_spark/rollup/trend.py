@@ -16,13 +16,14 @@ Two operators a time-series retention engine needs once tiers exist:
 
 Scale shape: both are per-series/per-pair kernels over POST-ROLLUP series
 (thousands of points each after tier aggregation, regardless of raw input
-size), running under ``groupBy().applyInPandas`` — one task per series or
-pair, zero cross-task traffic, the same many-small-kernels layout as the
-grouped S2G scorer. Theil-Sen is O(n^2) pairs per series: bounded because n
-is the TIER length (e.g. 8,760 hourly points/year -> 38M slopes, one
-NumPy partition per task); for longer series swap in the repeated-median
-variant or a pair sample. DTW is O(n*band) per pair via the Sakoe-Chiba
-window.
+size): Theil-Sen behind ``mapInArrow`` through the per-series runner
+``dads_spark.groups.per_series``, DTW in one ``mapInPandas`` kernel per
+pair row — one task per series or pair, zero cross-task traffic, the
+same many-small-kernels layout as the grouped S2G scorer. Theil-Sen is
+O(n^2) pairs per series: bounded because n is the TIER length (e.g.
+8,760 hourly points/year -> 38M slopes, one NumPy partition per task);
+for longer series swap in the repeated-median variant or a pair sample.
+DTW is O(n*band) per pair via the Sakoe-Chiba window.
 """
 
 from __future__ import annotations
@@ -31,6 +32,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from ..groups import per_series
 
 
 def theil_sen_slope(t_sec: np.ndarray, v: np.ndarray) -> tuple[float, int]:
@@ -60,29 +63,16 @@ def theil_sen_grouped(
 ) -> DataFrame:
     """Per-series Theil-Sen trend: (keys..., n_points, n_pairs, slope_per_hr).
 
-    ``ts_col`` must be epoch seconds (long) or castable; series are sorted
-    by it inside the kernel so the result is partition-order invariant.
+    ``ts_col`` must be epoch seconds (long); series are sorted by it
+    before the kernel runs, so the result is partition-order invariant.
     """
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["n_points long", "n_pairs long", "slope_per_hr double"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(ts_col)
-        t = pdf[ts_col].to_numpy(dtype=np.int64)
-        v = pdf[value_col].to_numpy(dtype=np.float64)
+    def f(t, v):
         slope, n_pairs = theil_sen_slope(t, v)
-        return pd.DataFrame(
-            {
-                **{c: [k] for c, k in zip(key_cols, keys)},
-                "n_points": np.array([len(v)], dtype=np.int64),
-                "n_pairs": np.array([n_pairs], dtype=np.int64),
-                "slope_per_hr": np.array([slope], dtype=np.float64),
-            }
-        )
+        return [len(v)], [n_pairs], [slope]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    fields = "n_points long, n_pairs long, slope_per_hr double"
+    return per_series(df, key_cols, ts_col, [value_col], f, fields)
 
 
 def dtw_banded(a: np.ndarray, b: np.ndarray, band: int) -> float:
@@ -301,26 +291,13 @@ def mann_kendall_grouped(
     Scale shape: one kernel task per POST-ROLLUP series (same layout as
     theil_sen_grouped); O(n log n) per series, no cross-task traffic.
     """
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["n long", "s_stat long", "var18 long", "tie_pairs long"]
-    )
 
-    def f(keys, pdf):
-        pdf = pdf.sort_values(order_col)
-        v = pdf[value_col].to_numpy(dtype=np.int64)
-        s, var18, tie_pairs = mann_kendall_stats(v)
-        return pd.DataFrame(
-            {
-                **{c: [k] for c, k in zip(key_cols, keys)},
-                "n": np.array([len(v)], dtype=np.int64),
-                "s_stat": np.array([s], dtype=np.int64),
-                "var18": np.array([var18], dtype=np.int64),
-                "tie_pairs": np.array([tie_pairs], dtype=np.int64),
-            }
-        )
+    def f(_, v):
+        s, var18, tie_pairs = mann_kendall_stats(v.astype(np.int64))
+        return [len(v)], [s], [var18], [tie_pairs]
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    fields = "n long, s_stat long, var18 long, tie_pairs long"
+    return per_series(df, key_cols, order_col, [value_col], f, fields)
 
 
 def hurst_rs(

@@ -21,10 +21,10 @@ bit-reproducible under any engine and any partitioning.
 Caller bound: n^2 * max(v)^2 * 1000 < 2^63 — bucketed count series by
 construction (e.g. n = 10^4 hourly points of counts up to 10^5).
 
-Scale shape: one ``groupBy(keys).applyInPandas`` — each series is one
-task (the grouped-S2G discipline); the DP is O(B n^2) with
-vectorized NumPy rows (prefix-sum segment costs, one argmin per
-(k, j) row).
+Scale shape: one :func:`dads_spark.groups.per_series` kernel call per
+series behind ``mapInArrow`` (the grouped-S2G discipline); the DP is
+O(B n^2) with vectorized NumPy rows (prefix-sum segment costs, one
+argmin per (k, j) row).
 
 Reference analog: none; spec source is §2.3 (tier summaries /
 profiling) — composes with ops/profile.py's per-key histograms, which
@@ -34,8 +34,9 @@ are equi-width; this is the optimal-boundary upgrade.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 __all__ = ["vopt_histogram_grouped", "vopt_boundaries"]
 
@@ -97,35 +98,20 @@ def vopt_histogram_grouped(
     """Per-series V-optimal histogram: one row per bucket with exact
     moment columns — (keys..., bucket, t_start, t_end, n, sum_v,
     sum2_v, cost_q3). ``order_col`` must be a unique-per-key long."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["bucket long", "t_start long", "t_end long", "n long",
-           "sum_v long", "sum2_v long", "cost_q3 long"]
+
+    def f(t, v):
+        v = v.astype(np.int64)
+        starts = np.array(vopt_boundaries(v, b))
+        ends = np.append(starts[1:], len(v))
+        ps = np.concatenate(([0], np.cumsum(v)))
+        ps2 = np.concatenate(([0], np.cumsum(v * v)))
+        n = ends - starts
+        sv, s2 = ps[ends] - ps[starts], ps2[ends] - ps2[starts]
+        cost = (1000 * (n * s2 - sv * sv)) // n
+        return np.arange(1, len(n) + 1), t[starts], t[ends - 1], n, sv, s2, cost
+
+    fields = (
+        "bucket long, t_start long, t_end long, n long, sum_v long, sum2_v long, "
+        "cost_q3 long"
     )
-
-    def f(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        t = pdf[order_col].to_numpy(dtype=np.int64)
-        v = pdf[value_col].to_numpy(dtype=np.int64)
-        starts = vopt_boundaries(v, b)
-        ends = starts[1:] + [len(v)]
-        rows = {c: [] for c in ("bucket", "t_start", "t_end", "n",
-                                "sum_v", "sum2_v", "cost_q3")}
-        for bi, (s, e) in enumerate(zip(starts, ends), start=1):
-            seg = v[s:e]
-            length = int(e - s)
-            sv = int(seg.sum())
-            s2 = int((seg * seg).sum())
-            rows["bucket"].append(bi)
-            rows["t_start"].append(int(t[s]))
-            rows["t_end"].append(int(t[e - 1]))
-            rows["n"].append(length)
-            rows["sum_v"].append(sv)
-            rows["sum2_v"].append(s2)
-            rows["cost_q3"].append((1000 * (length * s2 - sv * sv)) // length)
-        return pd.DataFrame(
-            {**{c: [kv] * len(rows["bucket"])
-                for c, kv in zip(key_cols, keys)}, **rows}
-        )
-
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    return per_series(df, key_cols, order_col, [value_col], f, fields)

@@ -22,9 +22,9 @@ Exact construction over integer-valued points:
 Caller bound: (m * max|v|)^2 < 2^63 — bucketed count series by
 construction.
 
-Scale shape: one ``groupBy(keys).applyInPandas`` — one series per
-Arrow task (the grouped-S2G discipline); the transform is J ~ log2(m)
-vectorized halvings.
+Scale shape: one :func:`dads_spark.groups.per_series` kernel call per
+series behind ``mapInArrow`` (the grouped-S2G discipline); the
+transform is J ~ log2(m) vectorized halvings.
 
 Reference analog: none; spec source is §2.3 (tier summaries) beside
 vopt_histogram and the PLA/LTTB downsamplers.
@@ -33,8 +33,9 @@ vopt_histogram and the PLA/LTTB downsamplers.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..groups import per_series
 
 __all__ = ["haar_topk_grouped", "haar_coefficients"]
 
@@ -72,27 +73,12 @@ def haar_topk_grouped(
 ) -> DataFrame:
     """Per-series top-k Haar synopsis: (keys..., rank, level, pos,
     coef, energy), ranked by (energy desc, level asc, pos asc)."""
-    out_schema = ", ".join(
-        [f"{c} string" for c in key_cols]
-        + ["rank long", "level long", "pos long", "coef long",
-           "energy long"]
-    )
 
-    def f(keys, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        v = pdf[value_col].to_numpy(dtype=np.int64)
-        coeffs = haar_coefficients(v)
+    def f(_, v):
+        coeffs = haar_coefficients(v.astype(np.int64))
         coeffs.sort(key=lambda r: (-r[3], r[0], r[1]))
         top = coeffs[:k]
-        return pd.DataFrame(
-            {
-                **{c: [kv] * len(top) for c, kv in zip(key_cols, keys)},
-                "rank": list(range(1, len(top) + 1)),
-                "level": [r[0] for r in top],
-                "pos": [r[1] for r in top],
-                "coef": [r[2] for r in top],
-                "energy": [r[3] for r in top],
-            }
-        )
+        return np.arange(1, len(top) + 1), *zip(*top)
 
-    return df.groupBy(*key_cols).applyInPandas(f, out_schema)
+    fields = "rank long, level long, pos long, coef long, energy long"
+    return per_series(df, key_cols, order_col, [value_col], f, fields)

@@ -875,7 +875,7 @@ def main() -> None:
 
     # --- A48: acf_period — one shuffle into one Arrow kernel ----------------
     p48 = plan_of(em.queries()["acf_period"](spark, sf_dir))
-    assert "FlatMapGroupsInPandas" in p48  # the per-series lag-dot kernel
+    assert "MapInArrow" in p48  # the per-series lag-dot kernel
     assert "BatchEvalPython" not in p48  # Arrow-batched, never per-row
     assert "BroadcastExchange" in p48  # the global-span one-row join
     n_shuffles48 = sum(
@@ -888,10 +888,10 @@ def main() -> None:
         "PASS — hourly counts reduce with map-side partials, the global "
         "grid span joins as a broadcast one-row relation (no second scan "
         "of the facts), and the O(n*B) exact-integer lag products run in "
-        "ONE FlatMapGroupsInPandas batch per series — the matrix-profile "
+        "ONE MapInArrow kernel call per series — the matrix-profile "
         "parallelism unit; <=2 hash exchanges end to end",
         "\n".join(l for l in p48.splitlines()
-                  if "Exchange" in l or "FlatMapGroupsInPandas" in l
+                  if "Exchange" in l or "MapInArrow" in l
                   or "Aggregate" in l)[:600],
     ))
 
@@ -1221,16 +1221,16 @@ def main() -> None:
 
     # --- A66: mann_kendall — one shuffle into one Arrow kernel ---------------
     p66 = plan_of(em.queries()["mann_kendall"](spark, sf_dir))
-    assert "FlatMapGroupsInPandas" in p66
+    assert "MapInArrow" in p66
     assert "Join" not in p66 and "CartesianProduct" not in p66
     sections.append((
         "A66 mann_kendall: O(n log n) kernel, never the O(n^2) pair join",
-        "PASS — the trend test is one series-key shuffle into one Arrow "
-        "applyInPandas stage (the Fenwick walk); the O(n^2) pairwise "
+        "PASS — the trend test is one series-key shuffle into one "
+        "MapInArrow stage (the Fenwick walk); the O(n^2) pairwise "
         "self-join exists ONLY as the DuckDB oracle definition — the "
         "engine plan contains no join at all",
         "\n".join(l for l in p66.splitlines()
-                  if "FlatMap" in l or "Exchange" in l or "Aggregate" in l)[:600],
+                  if "MapInArrow" in l or "Exchange" in l or "Aggregate" in l)[:600],
     ))
 
     # --- A67: duration_above — window + decomposable sum, zero Python --------
@@ -1270,16 +1270,16 @@ def main() -> None:
 
     # --- A69: pla_segments — lossy codec at the series grain -----------------
     p69 = plan_of(em.queries()["pla_segments"](spark, sf_dir))
-    assert "FlatMapGroupsInPandas" in p69
+    assert "MapInArrow" in p69
     assert "Join" not in p69
     sections.append((
         "A69 pla_segments: swing-filter PLA is one kernel per series",
         "PASS — hourly rollup (map-side partial agg) feeds one "
-        "series-key shuffle into one Arrow applyInPandas stage running "
+        "series-key shuffle into one MapInArrow stage running "
         "the O(n) cone walk; segments out, no join, no second shuffle — "
         "the same grouped-kernel layout as the S2G scorer",
         "\n".join(l for l in p69.splitlines()
-                  if "FlatMap" in l or "Exchange" in l or "Aggregate" in l)[:600],
+                  if "MapInArrow" in l or "Exchange" in l or "Aggregate" in l)[:600],
     ))
 
     # --- A70: wet_export — per-shard offset window, zero Python --------------
@@ -1656,12 +1656,12 @@ def main() -> None:
     p85a = plan_of(em.queries()["isotonic"](spark, sf_dir))
     p85b = plan_of(em.queries()["heaps_growth"](spark, sf_dir))
     p85c = plan_of(em.queries()["pref_winrate"](spark, sf_dir))
-    assert "FlatMapGroupsInPandas" in p85a, (
-        "PAV is the legitimate applyInPandas case (sequential per-group fit)"
+    assert "MapInArrow" in p85a, (
+        "PAV is a per-series kernel (sequential per-group fit)"
     )
     # explain prints top-down: the Python stage must sit ABOVE (i.e.
     # execute after) the aggregation that collapses the corpus
-    assert p85a.index("FlatMapGroupsInPandas") < p85a.index("HashAggregate"), (
+    assert p85a.index("MapInArrow") < p85a.index("HashAggregate"), (
         "the corpus must collapse to (group, level) aggregates BEFORE Python"
     )
     for p, nm in ((p85b, "heaps_growth"), (p85c, "pref_winrate")):
@@ -1675,7 +1675,7 @@ def main() -> None:
         "A85 PAV after aggregation, growth as conditional sums, pairs keyed",
         "PASS — isotonic pools score ties in a hash aggregation FIRST, "
         "so the Arrow PAV stage sees |groups| x |levels| rows, not the "
-        "corpus (the one legitimate applyInPandas shape: an "
+        "corpus (the per-series kernel shape: an "
         "order-dependent sequential fit per group); heaps_growth "
         "computes every checkpoint as conditional sums inside two "
         "single-row aggregates (k cutoffs = k columns, one doc pass + "
@@ -1683,7 +1683,7 @@ def main() -> None:
         "the end; pref_winrate is one hash agg on the canonical pair "
         "with the Wilson bound in pure codegen",
         "\n".join(l for l in (p85a + "\n" + p85b).splitlines()
-                  if "Aggregate" in l or "FlatMap" in l)[:400],
+                  if "Aggregate" in l or "MapInArrow" in l)[:400],
     ))
 
     # --- A86: seasonal_strength / croston / html_tables -----------------------
@@ -1693,10 +1693,10 @@ def main() -> None:
     for py_op in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
         assert py_op not in p86a, f"seasonal_strength plan contains {py_op}"
         assert py_op not in p86c, f"html_tables plan contains {py_op}"
-    assert "FlatMapGroupsInPandas" in p86b, (
+    assert "MapInArrow" in p86b, (
         "croston is a per-series sequential recursion (Arrow kernel)"
     )
-    assert p86b.index("FlatMapGroupsInPandas") < p86b.index("HashAggregate"), (
+    assert p86b.index("MapInArrow") < p86b.index("HashAggregate"), (
         "the purchase stream must collapse to nonzero day buckets first"
     )
     assert "Exchange" not in p86c and "Join" not in p86c, (
@@ -1715,7 +1715,7 @@ def main() -> None:
         "html_tables is three nested posexplode regex levels in "
         "codegen with zero exchanges — linear in corpus bytes",
         "\n".join(l for l in (p86b + "\n" + p86c).splitlines()
-                  if "FlatMap" in l or "Aggregate" in l or "Generate" in l)[:400],
+                  if "MapInArrow" in l or "Aggregate" in l or "Generate" in l)[:400],
     ))
 
     # --- A87: funnel_windowed / retention_cost --------------------------------
@@ -2310,7 +2310,7 @@ def main() -> None:
         "the integer rule tests are pure codegen — no Python"
     )
     for p, name in ((p106b, "seasonal_esd"), (p106c, "vopt_histogram")):
-        assert "FlatMapGroupsInPandas" in p, f"{name}: not Arrow-grouped"
+        assert "MapInArrow" in p, f"{name}: not Arrow-grouped"
         assert "BatchEvalPython" not in p, f"{name}: per-row Python leaked"
         assert n_exchanges(p) <= 2, f"{name}: too many shuffles"
     sections.append((
@@ -2318,10 +2318,10 @@ def main() -> None:
         "PASS — control_chart's four rule tests are integer window "
         "predicates inside codegen over ONE keyed window exchange after "
         "the rollup; seasonal_esd and vopt_histogram are single "
-        "FlatMapGroupsInPandas stages (one series = one Arrow task, the "
+        "MapInArrow stages (one series = one kernel call, the "
         "grouped-S2G discipline), zero per-row Python anywhere",
         "\n".join(l for l in (p106a + p106b + p106c).splitlines()
-                  if "Exchange" in l or "FlatMapGroups" in l
+                  if "Exchange" in l or "MapInArrow" in l
                   or "Window" in l)[:600],
     ))
 

@@ -3,14 +3,17 @@
 Each operator routed through ``dads_spark.groups`` is checked on a string
 key and on a long key: output key types equal input key types, the
 executed plan runs one ``MapInArrow`` and no pandas node, and every output
-row equals the operator's NumPy kernel applied to each series (exact
-``==``). Gap-fill and blob encoding have no kernel-level function, so the
-pandas paths they replaced are kept below as their reference. The frame
-holds a null key and series that span many 3-row Arrow batches.
+row equals the operator's NumPy kernel, or its scalar oracle, applied to
+each series (exact ``==``). Gap-fill and blob encoding have no kernel-level
+function, so the pandas paths they replaced are kept below as their
+reference. The frame holds a null key and series that span many 3-row
+Arrow batches; its ``n`` column is the integral ``w`` as a long, the input
+of the integer kernels.
 """
 
 from __future__ import annotations
 
+import math
 from collections import Counter
 
 import numpy as np
@@ -19,20 +22,47 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from dads_spark.compress import (
+    compressed_tier_roundtrip,
+    pla_segments_grouped,
+    simple8b_tier_roundtrip,
+)
 from dads_spark.compress.blobstore import compressed_tier_blobs
+from dads_spark.compress.pla import swing_segments
 from dads_spark.fixtures import benchmark_series
+from dads_spark.ops import isotonic_fit
+from dads_spark.ops.calibrate import _pav_blocks
 from dads_spark.ops.sketch import digest, digest_quantiles
+from dads_spark.oracles import haar_topk_oracle, seasonal_esd_oracle, vopt_oracle
 from dads_spark.rollup import (
+    acf_dominant_period,
+    asap_smooth_params,
     auto_penalty,
+    croston_grouped,
+    cusum_grouped,
     discords_grouped,
+    ewma_smooth,
     gap_fill_linear,
     gap_fill_locf,
+    haar_topk_grouped,
+    holt_residuals_grouped,
+    holt_winters_grouped,
+    lttb_downsample,
+    mann_kendall_grouped,
     matrix_profile_grouped,
     motifs_grouped,
+    pattern_topk,
     pelt_changepoints,
     pelt_grouped,
+    seasonal_esd_grouped,
+    theil_sen_grouped,
+    vopt_histogram_grouped,
 )
+from dads_spark.rollup.downsample import asap_window_search, lttb_indices
+from dads_spark.rollup.forecast import croston, cusum_changepoints, holt_forecast, holt_winters
 from dads_spark.rollup.matrixprofile import matrix_profile, top_discords, top_motifs
+from dads_spark.rollup.patterns import pattern_topk_kernel
+from dads_spark.rollup.trend import mann_kendall_stats, theil_sen_slope
 from dads_spark.s2g import S2GParams, s2g_oracle
 from dads_spark.s2g.discord import (
     discord_series_grouped,
@@ -52,6 +82,8 @@ PROBS = [0.1, 0.5, 0.9]
 LENGTHS = {"a": 200, "b": 120, None: 150, "c": 12}  # "c" is too short for most kernels
 LONG_KEYS = {"a": 1, "b": 2, "c": 3, None: None}
 T0 = pd.Timestamp("2024-01-01")
+H_MAX = max(n + n // 10 for n in LENGTHS.values()) - 1  # the frame's last hour offset
+PATTERN = np.sin(np.linspace(0.0, 2.0 * np.pi, 12))
 
 
 @pytest.fixture(scope="module")
@@ -71,10 +103,20 @@ def series():
 @pytest.fixture(scope="module")
 def frames(spark, series):
     pdf = pd.concat(
-        pd.DataFrame({"k": key, "ts": T0 + pd.to_timedelta(h, unit="h"), "v": v, "w": w})
+        pd.DataFrame(
+            {
+                "k": key,
+                "ts": T0 + pd.to_timedelta(h, unit="h"),
+                "h": h,
+                "v": v,
+                "w": w,
+                "n": w.astype(np.int64),
+            }
+        )
         for key, (h, v, w) in series.items()
     ).sample(frac=1.0, random_state=5)
-    df = spark.createDataFrame(pdf, "k string, ts timestamp, v double, w double").repartition(3)
+    schema = "k string, ts timestamp, h long, v double, w double, n long"
+    df = spark.createDataFrame(pdf, schema).repartition(3)
     as_long = F.expr("CASE k WHEN 'a' THEN 1 WHEN 'b' THEN 2 WHEN 'c' THEN 3 END")
     return {"string": df, "long": df.withColumn("k", as_long.cast("long"))}
 
@@ -142,37 +184,175 @@ def _quantiles(x):
     return list(zip(PROBS, qs.tolist()))
 
 
+# The kernels below take a series' (hour offsets, v, w); w is integral.
+
+
+def _ts(h):
+    return [(T0 + pd.Timedelta(hours=int(i))).to_pydatetime() for i in h]
+
+
+def _holt_winters(h, v, w):
+    fc, resid = holt_winters(v)
+    ok = np.flatnonzero(np.isfinite(fc))
+    return zip(ok.tolist(), v[ok], fc[ok], resid[ok])
+
+
+def _holt_residuals(h, v, w):
+    fc, resid = holt_forecast(v)
+    ok = np.isfinite(resid)
+    sel = np.flatnonzero(ok & (np.abs(resid) > 2.5 * resid[ok].std()))
+    return zip(sel.tolist(), v[sel], fc[sel], resid[sel])
+
+
+def _croston(h, v, w):
+    size, interval, rate = croston(w, h)
+    return [(len(w), size, interval, rate)] if np.isfinite(rate) else []
+
+
+def _lttb(h, v, w):
+    idx = lttb_indices(T0.value + h * 3_600_000_000_000, v, 40)  # epoch ns
+    return zip(_ts(h[idx]), v[idx])
+
+
+def _ewma(h, v, w):
+    ew = pd.Series(v).ewm(alpha=0.3, adjust=True).mean().to_numpy()
+    return zip(_ts(h), v, ew, np.abs(v - ew))
+
+
+def _asap(h, v, w):
+    def q6(x):
+        return int(np.sign(x) * np.floor(abs(x) * 1e6 + 0.5))
+
+    counts = w[w > 0]  # hour doc counts: each row is repeated w times
+    win, rough, kurt = asap_window_search(counts)
+    return [(len(counts), win, q6(rough), q6(kurt))]
+
+
+def _isotonic(h, v, w):
+    # x = w (tied values pool), y = h
+    xs, inv = np.unique(w.astype(np.int64), return_inverse=True)
+    ns = np.bincount(inv)
+    ys = np.bincount(inv, weights=h).astype(np.int64)
+    rows = []
+    for x, n, y, (s, d) in zip(xs, ns, ys, _pav_blocks(xs, ns, ys)):
+        g = math.gcd(s, d)
+        num, den = (s // g, d // g) if s else (0, 1)
+        q6 = (10**6 * num) // den + (1 if (10**6 * num) % den * 2 >= den else 0)
+        rows.append((x, n, y, num, den, q6))
+    return rows
+
+
+def _acf(h, v, w):
+    x = np.zeros(H_MAX + 1, np.int64)  # the dense grid spans every series' hours
+    x[h] = w
+    y = len(x) * x - x.sum()
+    nums = [int(y[:-lag] @ y[lag:]) for lag in range(2, 25)]
+    best = int(np.argmax(nums))
+    return [(len(x), 2 + best, nums[best], int(y @ y))]
+
+
+def _on_values(kernel):
+    return lambda h, v, w: kernel(v)
+
+
 KERNEL_OPS = {
     "score_series_grouped": (
         lambda df: score_series_grouped(df, ["k"], "ts", "v", PARAMS),
-        _scores,
+        _on_values(_scores),
     ),
     "graph_edges_grouped": (
         lambda df: graph_edges_grouped(df, ["k"], "ts", "v", PARAMS),
-        _edges,
+        _on_values(_edges),
     ),
     "discord_series_grouped": (
         lambda df: discord_series_grouped(df, ["k"], "ts", "v", m=M),
-        _drag,
+        _on_values(_drag),
     ),
-    "pelt_grouped": (lambda df: pelt_grouped(df, ["k"], "ts", "v"), _pelt),
+    "pelt_grouped": (lambda df: pelt_grouped(df, ["k"], "ts", "v"), _on_values(_pelt)),
     "matrix_profile_grouped": (
         lambda df: matrix_profile_grouped(df, ["k"], "ts", "v", M),
-        _profile,
+        _on_values(_profile),
     ),
     "discords_grouped": (
         lambda df: discords_grouped(df, ["k"], "ts", "v", m=M, k=2),
-        _discords,
+        _on_values(_discords),
     ),
     "motifs_grouped": (
         lambda df: motifs_grouped(df, ["k"], "ts", "v", m=M, k=2),
-        _motifs,
+        _on_values(_motifs),
     ),
-    "digest": (lambda df: digest(df, ["k"], "v"), _digest),
+    "digest": (lambda df: digest(df, ["k"], "v"), _on_values(_digest)),
     "digest_quantiles": (
         lambda df: digest_quantiles(digest(df, ["k"], "v"), ["k"], PROBS),
-        _quantiles,
+        _on_values(_quantiles),
     ),
+    "holt_winters_grouped": (
+        lambda df: holt_winters_grouped(df, ["k"], "ts", "v"),
+        _holt_winters,
+    ),
+    "holt_residuals_grouped": (
+        lambda df: holt_residuals_grouped(df, ["k"], "ts", "v", n_sigma=2.5),
+        _holt_residuals,
+    ),
+    "cusum_grouped": (
+        lambda df: cusum_grouped(df, ["k"], "ts", "v"),
+        _on_values(cusum_changepoints),
+    ),
+    "croston_grouped": (lambda df: croston_grouped(df, ["k"], "h", "w"), _croston),
+    "lttb_downsample": (lambda df: lttb_downsample(df, ["k"], "ts", "v", 40), _lttb),
+    "ewma_smooth": (lambda df: ewma_smooth(df, ["k"], "ts", "v", alpha=0.3), _ewma),
+    "asap_smooth_params": (
+        lambda df: asap_smooth_params(
+            df.withColumn("_", F.explode(F.array_repeat(F.lit(0), F.col("n").cast("int")))),
+            ["k"],
+            "ts",
+            None,
+        ),
+        _asap,
+    ),
+    "theil_sen_grouped": (
+        lambda df: theil_sen_grouped(df, ["k"], "h", "v"),
+        lambda h, v, w: [(len(v), *theil_sen_slope(h, v)[::-1])],
+    ),
+    "mann_kendall_grouped": (
+        lambda df: mann_kendall_grouped(df, ["k"], "ts", "n"),
+        lambda h, v, w: [(len(w), *mann_kendall_stats(w.astype(np.int64)))],
+    ),
+    "compressed_tier_roundtrip": (  # lossless: the output is the input
+        lambda df: compressed_tier_roundtrip(df, ["k"], "ts", "v", codec="chimp"),
+        lambda h, v, w: zip(_ts(h), v),
+    ),
+    "simple8b_tier_roundtrip": (
+        lambda df: simple8b_tier_roundtrip(df, ["k"], "ts", "n"),
+        lambda h, v, w: zip(_ts(h), w.astype(np.int64).tolist()),
+    ),
+    "pla_segments_grouped": (
+        lambda df: pla_segments_grouped(df, ["k"], "h", "n", eps=3),
+        lambda h, v, w: [(i, *seg) for i, seg in enumerate(swing_segments(h, w, 3))],
+    ),
+    "seasonal_esd_grouped": (
+        lambda df: seasonal_esd_grouped(df, ["k"], "h", "n"),
+        lambda h, v, w: seasonal_esd_oracle(h.tolist(), w.astype(np.int64).tolist()),
+    ),
+    "vopt_histogram_grouped": (
+        lambda df: vopt_histogram_grouped(df, ["k"], "h", "n", b=4),
+        lambda h, v, w: [
+            (b, h[s], h[e - 1], *rest) for b, s, e, *rest in vopt_oracle(w, b=4)
+        ],
+    ),
+    "haar_topk_grouped": (
+        lambda df: haar_topk_grouped(df, ["k"], "h", "n", k=6),
+        lambda h, v, w: [(r, *row) for r, row in enumerate(haar_topk_oracle(w, k=6), 1)],
+    ),
+    "acf_dominant_period": (
+        lambda df: acf_dominant_period(df, ["k"], "h", "n", lag_lo=2, lag_hi=24),
+        _acf,
+    ),
+    "pattern_topk": (
+        lambda df: pattern_topk(df, ["k"], "ts", "v", PATTERN.tolist(), k=3),
+        lambda h, v, w: [(r, *m) for r, m in enumerate(pattern_topk_kernel(v, PATTERN, 3), 1)],
+    ),
+    "isotonic_fit": (lambda df: isotonic_fit(df, ["k"], "n", "h"), _isotonic),
 }
 
 
@@ -301,7 +481,7 @@ def test_runner_keeps_key_type_and_matches_kernel(
         kernel = KERNEL_OPS[op][1]
         keys = LONG_KEYS if key_type == "long" else {k: k for k in LONG_KEYS}
         want = Counter(
-            (keys[key], *row) for key, (_, v, _) in series.items() for row in kernel(v)
+            (keys[key], *row) for key, (h, v, w) in series.items() for row in kernel(h, v, w)
         )
     else:
         want = _rows(_reference_paths()[op](df))

@@ -80,6 +80,19 @@ def test_token_bucket_repartition_invariant(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def test_token_bucket_keeps_long_key(spark):
+    # the bucket key keeps its input type; a long key runs the same
+    # buckets as its string form
+    rows = [(f"{i % 3}", i, (i * 7) % 20 * 1_000_000) for i in range(30)]
+    by_str = token_bucket(_req(spark, rows), "host", "ts", "req_id", cap=2, rate_num=1)
+    long_req = _req(spark, rows).withColumn("host", F.col("host").cast("long"))
+    by_long = token_bucket(long_req, "host", "ts", "req_id", cap=2, rate_num=1)
+    assert Counter((str(r[0]), *r[1:]) for r in by_long.collect()) == Counter(
+        map(tuple, by_str.collect())
+    )
+    assert by_long.schema["key"].dataType.simpleString() == "bigint"
+
+
 def test_token_bucket_rejects_bad_params(spark):
     with pytest.raises(ValueError):
         token_bucket(_req(spark, [("h", 0, 0)]), "host", "ts", "req_id",
