@@ -7,10 +7,14 @@ committed tier.
 Design: a stage is written exactly once, as the next version of its table
 in a :class:`~dads_spark.checkpoint.snapshots.SnapshotStore`; that
 snapshot commit IS the checkpoint. The commit then writes a manifest
-``<root>/_manifest/stage=<name>/part-0.parquet`` holding one row per output
-partition: (partition_id, row_count, stage, input_fingerprint,
-committed_at), taken from the snapshot entry's ``partition_rows`` with
-pyarrow — no second Spark pass over the data.
+``<root>/_manifest/stage=<name>/part-0.parquet`` holding one row per write
+task: (partition_id, row_count, stage, input_fingerprint, committed_at).
+``partition_id`` is the task's part number (the ``NNNNN`` of the
+``part-NNNNN-…`` files it wrote) and ``row_count`` the rows those files
+hold, both from the snapshot entry's ``partition_rows``, which the commit
+read from the parquet footers. The manifest is written with pyarrow — no
+Spark pass over the data after the write, and the committed output that
+:meth:`CheckpointManager.commit` returns reads with the logged schema.
 
 ``input_fingerprint`` is a stable hash of the stage's declared inputs
 (paths + parameters), so resuming with *changed* inputs invalidates the

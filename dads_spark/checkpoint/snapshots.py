@@ -14,6 +14,12 @@ essentials (README "Iceberg proper" documents the swap path):
   (``os.replace`` of a temp file) — the single pointer swap that makes a
   commit visible all-or-nothing. Single-writer (one maintenance job owns
   a store), many-reader;
+- each entry carries the metadata a reader or a lineage manifest needs,
+  so neither scans data files for it (the Delta/Iceberg table-log idea):
+  per-file row counts taken from the written files' parquet footers, and
+  the table's schema, which :meth:`SnapshotStore.read` hands to the
+  parquet reader instead of inferring it (an entry without one still
+  infers). A commit is then one Spark job, the write, and a read none;
 - ``vacuum(keep_last=K)`` deletes data directories no kept snapshot
   references — the retention engine's GC step after compaction /
   re-publish, without which a daily-published 100 TB tier doubles its
@@ -33,7 +39,9 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["SnapshotStore"]
 
@@ -110,6 +118,12 @@ class SnapshotStore:
         of the log's history never references it, and numbering around it
         keeps ``errorifexists`` from tripping on the retry).
 
+        The write is the commit's only Spark job. The entry's lineage
+        (``partition_rows``: rows per write task, keyed by the part number
+        of its ``part-NNNNN-…`` files; ``row_count``: their sum) comes from
+        the parquet footers of the files just written, and ``schema`` is
+        ``df.schema`` as JSON, so :meth:`read` skips schema inference.
+
         ``audit`` enables write-audit-publish: a callable receiving the
         STAGED (already written, not yet published) DataFrame; if it
         raises, the log is never swapped — readers keep serving the prior
@@ -122,27 +136,16 @@ class SnapshotStore:
         version = max([floor] + self._stray_versions(table)) + 1
         path = self._data_path(table, version)
         df.write.mode("errorifexists").parquet(path)
-        staged = self.spark.read.parquet(path)
+        schema = df.schema
         if audit is not None:
             try:
-                audit(staged)
+                audit(self.spark.read.schema(schema).parquet(path))
             except Exception as e:
                 raise ValueError(
                     f"audit rejected {table!r} v{version} (left staged, "
                     f"unpublished): {e}"
                 ) from e
-        # per-partition lineage (north rule: every committed stage records
-        # partition row counts) — file-level here, since a published
-        # version's partitions ARE its files
-        from pyspark.sql import functions as F
-
-        per_part = {
-            str(r["p"]): r["n"]
-            for r in staged.withColumn("p", F.spark_partition_id())
-            .groupBy("p")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        per_part = _footer_rows(path)
         self._append(
             {
                 "table": table,
@@ -150,6 +153,7 @@ class SnapshotStore:
                 "path": path,
                 "row_count": sum(per_part.values()),
                 "partition_rows": per_part,
+                "schema": schema.json(),
                 "note": note,
                 "committed_at": time.time(),
                 **(extra or {}),
@@ -159,7 +163,9 @@ class SnapshotStore:
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
         """The table at ``version`` (time travel), or at the latest
-        snapshot. Raises if the version was never committed or vacuumed."""
+        snapshot. Raises if the version was never committed or vacuumed.
+        The schema comes from the entry, so the read starts no Spark job;
+        an entry without one (written before the log carried it) infers."""
         entry = self.entry(table, version)
         if entry is None:
             raise ValueError(
@@ -171,13 +177,17 @@ class SnapshotStore:
             raise ValueError(
                 f"snapshot {table!r} v{entry['version']} was vacuumed (data gone)"
             )
-        df = self.spark.read.parquet(entry["path"])
+        schema = _entry_schema(entry)
+        df = self._parquet(entry["path"], schema)
         if entry.get("delete_path"):
-            from pyspark.sql import functions as F
-
-            dels = self.spark.read.parquet(entry["delete_path"])
-            df = df.join(F.broadcast(dels), entry["delete_keys"], "left_anti")
+            keys = entry["delete_keys"]
+            dels = self._parquet(entry["delete_path"], _key_schema(schema, keys))
+            df = df.join(F.broadcast(dels), keys, "left_anti")
         return df
+
+    def _parquet(self, path: str, schema: StructType | None) -> DataFrame:
+        reader = self.spark.read
+        return (reader if schema is None else reader.schema(schema)).parquet(path)
 
     def diff(
         self,
@@ -198,8 +208,6 @@ class SnapshotStore:
         two 10^12-doc-derived tiers shuffles tier rows only. This is the
         incremental-consumer primitive: downstream jobs read the change
         set instead of re-scanning the new version."""
-        from pyspark.sql import functions as F
-
         old = self.read(table, v_from)
         new = self.read(table, v_to)
         val_cols = [c for c in old.columns if c not in key_cols]
@@ -236,8 +244,6 @@ class SnapshotStore:
         (copy-on-write; readers pinned to older versions are untouched).
         The anti-join keys on the (small) delta side, so the base scan
         streams against a broadcast."""
-        from pyspark.sql import functions as F
-
         base = self.read(table)
         survivors = base.join(
             F.broadcast(delta.select(*key_cols).distinct()), key_cols, "left_anti"
@@ -274,21 +280,25 @@ class SnapshotStore:
         compaction that materializes the survivors and drops the
         sidecar reference.
         """
-        from pyspark.sql import functions as F
-
         entry = self.entry(table)
         if entry is None:
             raise ValueError(f"no snapshots for table {table!r}")
         prev = entry["version"]
         if entry.get("delete_path") and entry["delete_keys"] != key_cols:
             raise ValueError("stacked MOR deletes must share key columns")
-        pending = keys.select(*key_cols).distinct()
+        schema = _entry_schema(entry)
+        key_schema = _key_schema(schema, key_cols)
+        # the sidecar is written with the base's key types, so a read can
+        # declare them instead of inferring
+        pending = keys.select(
+            *key_cols
+            if key_schema is None
+            else [F.col(f.name).cast(f.dataType) for f in key_schema.fields]
+        ).distinct()
         if entry.get("delete_path"):
-            pending = (
-                pending.unionByName(
-                    self.spark.read.parquet(entry["delete_path"])
-                ).distinct()
-            )
+            pending = pending.unionByName(
+                self._parquet(entry["delete_path"], key_schema)
+            ).distinct()
         # fold orphan SIDECAR dirs into the version floor too: a crash
         # between the sidecar write below and the log append would
         # otherwise make the retry recompute the same version (no new
@@ -305,9 +315,9 @@ class SnapshotStore:
         )
         sidecar = os.path.join(self.root, table, f"_deletes_v{version}")
         pending.write.mode("errorifexists").parquet(sidecar)
-        base = self.spark.read.parquet(entry["path"])
+        base = self._parquet(entry["path"], schema)
         survivors = base.join(
-            F.broadcast(self.spark.read.parquet(sidecar)),
+            F.broadcast(self._parquet(sidecar, key_schema)),
             key_cols,
             "left_anti",
         ).count()
@@ -318,6 +328,7 @@ class SnapshotStore:
                 "path": entry["path"],
                 "row_count": survivors,
                 "partition_rows": {},
+                "schema": entry.get("schema"),
                 "note": note,
                 "committed_at": time.time(),
                 "delete_path": sidecar,
@@ -399,3 +410,27 @@ class SnapshotStore:
                 shutil.rmtree(s["path"])
                 removed.append(s["version"])
         return removed
+
+
+def _footer_rows(path: str) -> dict[str, int]:
+    """Rows per write task of a freshly written parquet directory, from the
+    file footers: Spark names a task's files ``part-NNNNN-…`` after its
+    partition number, and one task may write several files."""
+    rows: dict[str, int] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-"):
+            part = str(int(name.split("-")[1]))
+            n = pq.read_metadata(os.path.join(path, name)).num_rows
+            rows[part] = rows.get(part, 0) + n
+    return rows
+
+
+def _entry_schema(entry: dict) -> StructType | None:
+    logged = entry.get("schema")
+    return None if logged is None else StructType.fromJson(json.loads(logged))
+
+
+def _key_schema(schema: StructType | None, keys: list[str]) -> StructType | None:
+    if schema is None or not set(keys) <= set(schema.names):
+        return None
+    return StructType([schema[k] for k in keys])

@@ -14,17 +14,26 @@ Spark-native design: each pipeline stage runs under its own job group
 every job of that group from the driver's ``AppStatusStore`` (the same
 store that backs the UI/REST API — available with the UI disabled) and sums
 stage-level executor run time, task counts, and input/output/shuffle bytes
-into ONE metrics row per pipeline stage. ``write()`` persists the table
-next to the checkpoint manifests, giving the north rule's "per-partition
-lineage + metrics" pairing: the manifest carries lineage + row counts, this
-table carries durations + bytes.
+into ONE metrics row per pipeline stage. Group names repeat across
+collectors of one session (``dads_metrics::<stage>::<seq>``), so a row sums
+only the group's jobs that started after its stage was entered.
+
+``write()`` persists the table next to the checkpoint manifests, giving the
+north rule's "per-partition lineage + metrics" pairing: the manifest
+carries lineage + row counts, this table carries durations + bytes. It is
+one small file written with pyarrow (temp file + ``os.replace``, as the
+manifest is), so persisting the metrics starts no Spark job.
 """
 
 from __future__ import annotations
 
+import os
 import time
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 #: one row per pipeline stage
@@ -33,6 +42,12 @@ METRICS_SCHEMA = (
     "n_spark_stages int, n_stages_skipped int, n_tasks long, "
     "input_bytes long, output_bytes long, shuffle_read_bytes long, "
     "shuffle_write_bytes long, started_at double, error string"
+)
+_ARROW_TYPES = {
+    "string": pa.string(), "double": pa.float64(), "long": pa.int64(), "int": pa.int32()
+}
+_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in METRICS_SCHEMA.split(", "))]
 )
 
 
@@ -57,6 +72,10 @@ class StageMetricsCollector:
         sc = self.spark.sparkContext
         group = f"dads_metrics::{name}::{self._seq}"
         self._seq += 1
+        try:  # jobs an earlier collector ran under the same group name
+            prior = set(sc.statusTracker().getJobIdsForGroup(group))
+        except Exception as e:
+            prior = e
         sc.setJobGroup(group, f"dads_spark stage {name}")
         t0 = time.perf_counter()
         started = time.time()
@@ -69,22 +88,26 @@ class StageMetricsCollector:
             except Exception:
                 pass
             row = {"stage": name, "wall_sec": wall, "started_at": started}
-            row.update(self._group_stats(group))
+            row.update(self._group_stats(group, prior))
             self._rows.append(row)
 
-    def _group_stats(self, group: str) -> dict:
-        """Sum AppStatusStore stage metrics over every job in the group.
-        When any part of the status store cannot be read, the row is
-        flagged with ``error`` and its counters stay null — never zeros or
-        a partial sum."""
+    def _group_stats(self, group: str, prior: set[int] | Exception) -> dict:
+        """Sum AppStatusStore stage metrics over the group's jobs not in
+        ``prior``. When any part of the status store cannot be read, the
+        row is flagged with ``error`` and its counters stay null — never
+        zeros or a partial sum."""
         try:
-            return self._sum_group(group)
+            if isinstance(prior, Exception):
+                raise prior
+            return self._sum_group(group, prior)
         except Exception as e:  # e.g. a non-py4j backend, an evicted job
             return {"error": f"{type(e).__name__}: {e}"}
 
-    def _sum_group(self, group: str) -> dict:
+    def _sum_group(self, group: str, prior: set[int]) -> dict:
         sc = self.spark.sparkContext
-        job_ids = sc.statusTracker().getJobIdsForGroup(group)
+        job_ids = [
+            j for j in sc.statusTracker().getJobIdsForGroup(group) if j not in prior
+        ]
         store = sc._jsc.sc().statusStore()
         gw = sc._gateway
         empty_list = gw.jvm.java.util.ArrayList()
@@ -133,27 +156,31 @@ class StageMetricsCollector:
         )
 
     def write(self, ckpt_root: str) -> str:
-        """Persist the metrics table next to the checkpoint manifests.
+        """Persist the metrics table next to the checkpoint manifests, as
+        ``<ckpt_root>/_metrics/part-0.parquet``.
 
         Merges with any existing table: stages recomputed this run replace
         their prior rows; rows for stages this (resumed) run skipped are
         kept — after a partial resume the table still describes the whole
-        pipeline."""
-        import os
-
+        pipeline. A prior table without the ``error`` column reads it as
+        null. A directory Spark wrote (several part files) is read whole
+        and its files are removed after the swap, so no row is left twice;
+        once ``part-0.parquet`` exists it alone is the table."""
         path = os.path.join(ckpt_root, "_metrics")
-        new_df = self.to_df()
-        out = new_df
+        own = os.path.join(path, "part-0.parquet")
+        out = pa.Table.from_pylist(self._rows, schema=_ARROW_SCHEMA)
         if os.path.exists(path):  # first run: nothing to merge
-            prior = self.spark.read.parquet(path)
-            fresh = {r["stage"] for r in self._rows}
-            kept = prior.filter(~prior["stage"].isin(list(fresh)))
-            # a table written before the ``error`` column reads it as null
-            out = kept.unionByName(new_df, allowMissingColumns=True)
-        # tiny; staged in pandas so the overwrite never reads the files it
-        # is replacing
-        pdf = out.select(*new_df.columns).toPandas()
-        self.spark.createDataFrame(pdf, new_df.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
+            prior = pq.read_table(
+                own if os.path.exists(own) else path, schema=_ARROW_SCHEMA
+            )
+            fresh = pa.array([r["stage"] for r in self._rows], pa.string())
+            kept = prior.filter(pc.invert(pc.is_in(prior["stage"], value_set=fresh)))
+            out = pa.concat_tables([kept, out])
+        os.makedirs(path, exist_ok=True)
+        tmp = os.path.join(path, ".part-0.parquet.tmp")
+        pq.write_table(out, tmp)
+        os.replace(tmp, own)
+        for name in os.listdir(path):
+            if name != "part-0.parquet":
+                os.remove(os.path.join(path, name))
         return path

@@ -32,6 +32,25 @@ def test_collector_one_row_per_stage_with_spark_metrics(spark):
     assert "executor_run_ms" in df.columns
 
 
+def test_second_collector_counts_only_its_own_jobs(spark):
+    """Group names repeat across collectors in one session; a row must not
+    pick up the jobs an earlier collector ran under the same name."""
+    import uuid
+
+    name = f"same_stage_{uuid.uuid4().hex}"
+    rows = []
+    for _ in range(2):
+        mc = StageMetricsCollector(spark)
+        with mc.stage(name):
+            spark.range(0, 1000).collect()
+            spark.range(0, 2000).collect()
+        rows += mc.rows()
+    first, second = rows
+    assert first["n_jobs"] >= 2
+    assert second["n_jobs"] == first["n_jobs"]
+    assert second["n_tasks"] == first["n_tasks"]
+
+
 def test_unreadable_status_store_flags_row_not_zeros(spark, tmp_path, monkeypatch):
     """A failed measurement is flagged in its row, never written as 0."""
     mc = StageMetricsCollector(spark)
@@ -74,6 +93,25 @@ def test_metrics_merge_reads_table_without_error_column(spark, tmp_path):
     got = {r["stage"]: r for r in spark.read.parquet(f"{tmp_path}/_metrics").collect()}
     assert set(got) == {"old_stage", "new_stage"}
     assert got["old_stage"]["error"] is None and got["old_stage"]["n_tasks"] >= 1
+
+
+def test_metrics_merge_replaces_spark_written_part_files(spark, tmp_path):
+    """A table Spark wrote as several part files merges without leaving
+    any of its rows twice, and a stage re-run replaces its old row."""
+    old = StageMetricsCollector(spark)
+    for name in ("a", "b", "c"):
+        with old.stage(name):
+            spark.range(0, 100).collect()
+    old.to_df().repartition(3).write.parquet(f"{tmp_path}/_metrics")
+    mc = StageMetricsCollector(spark)
+    with mc.stage("b"):
+        spark.range(0, 100).collect()
+    mc.write(str(tmp_path))
+    mc.write(str(tmp_path))
+    got = spark.read.parquet(f"{tmp_path}/_metrics").collect()
+    assert sorted(r["stage"] for r in got) == ["a", "b", "c"]
+    b = next(r for r in got if r["stage"] == "b")
+    assert b["started_at"] == mc.rows()[0]["started_at"]
 
 
 def test_job_persists_metrics_next_to_manifests(spark, tmp_path):
