@@ -7,10 +7,13 @@ Layout
 ------
 - ``s2g``        : the Series2Graph anomaly pipeline — a pure-NumPy oracle
                    (``s2g.core`` / ``s2g.oracle``) plus the distributed Spark
-                   implementation (``s2g.pipeline``) built on applyInPandas.
+                   implementation (``s2g.pipeline``), whose slice stages
+                   run behind ``groupBy().applyInArrow``.
 - ``groups``     : the whole-group ``mapInArrow`` runner that the per-series
                    operators (grouped S2G, discords, PELT, gap-fill, blob
-                   encoding, matrix profile) and the t-digest merges run on.
+                   encoding, matrix profile) and the t-digest merges run on,
+                   and ``per_group``, the ``applyInArrow`` boundary of the
+                   slice-keyed stages (sliced S2G, embedding PCA).
 - ``rollup``     : per-key series derivation, hour/day/week continuous
                    aggregates, linear-interpolation gap-fill.
 - ``compress``   : Gorilla XOR float compression + delta-of-delta timestamps

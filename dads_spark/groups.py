@@ -17,6 +17,12 @@ isotonic calibration.
 Key columns keep the type they have in the input: the runner reads them
 from the input schema and takes the output keys from the input rows, so no
 kernel names a key type.
+
+:func:`per_group` is the other boundary, for work keyed by a slice id (the
+slice-parallel S2G stages, the embedding TSQR): ``groupBy().applyInArrow``
+keeps an exchange the caller fixed with ``repartition(P, key)``, one task
+per slice, where :func:`map_key_runs`' own ``repartition(*keys)`` may be
+coalesced by AQE into fewer tasks than slices.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
 
-__all__ = ["key_groups", "keyed_schema", "map_key_runs", "per_series"]
+__all__ = ["key_groups", "keyed_schema", "map_key_runs", "per_group", "per_series"]
 
 
 def key_groups(t: pa.Table, key_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
@@ -120,3 +126,21 @@ def per_series(
     values = [F.col(c).cast("double").alias(c) for c in value_cols]
     rows = df.select(*key_cols, order_col, *values)
     return map_key_runs(rows, key_cols, series, schema, order_col)
+
+
+def per_group(df: DataFrame, key: str, fn, fields: str) -> DataFrame:
+    """``df.groupBy(key).applyInArrow``: ``fn(key value, table)`` gets one
+    group as a ``pa.Table`` (possibly of many chunks, in arrival order) and
+    returns one array per field of the DDL string ``fields``, each cast to
+    its declared type; NaN becomes null, as it did across the pandas
+    boundary. ``run`` stays unannotated: PySpark infers the eval type from
+    type hints and fails on ``pa.Table`` ones."""
+    schema = to_arrow_schema(DataType.fromDDL(fields))
+
+    def run(k, t):
+        cols = fn(k[0].as_py(), t)
+        return pa.Table.from_arrays(
+            [pa.array(c, f.type, from_pandas=True) for c, f in zip(cols, schema)], schema=schema
+        )
+
+    return df.groupBy(key).applyInArrow(run, fields)

@@ -5,8 +5,8 @@ pipeline wants: project every vector onto the top-k principal axes
 (dedup diagnostics, cluster plots, whitening before ANN).
 
 Distribution shape (the reference's own): per-slice column means +
-centered QR run in parallel (one applyInPandas over a DETERMINISTIC
-id%P slicing, rows QR'd in vec_id order so the result is a pure
+centered QR run in parallel (one groupBy().applyInArrow over a
+DETERMINISTIC id%P slicing, rows QR'd in vec_id order so the result is a pure
 function of the input set, not its partitioning); the driver receives
 P tiny (mean, R) pairs — KB-scale, the reference's master sync — does
 the weighted-mean correction stack + TSQR tree reduction + SVD, and
@@ -30,24 +30,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..groups import per_group
+
 __all__ = ["embedding_pca", "pca_components"]
-
-
-def _slice_stats(pdf: pd.DataFrame, id_col: str, vec_col: str) -> pd.DataFrame:
-    pdf = pdf.sort_values(id_col, kind="mergesort")
-    mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-    mean = mat.mean(axis=0)
-    r = np.linalg.qr(mat - mean, mode="r")
-    return pd.DataFrame(
-        {
-            "slice": [int(pdf["_slice"].iloc[0])],
-            "n": [int(mat.shape[0])],
-            "d": [int(mat.shape[1])],
-            "r_rows": [int(r.shape[0])],
-            "mean": [mean.tobytes()],
-            "r": [r.tobytes()],
-        }
-    )
 
 
 def pca_components(
@@ -67,17 +52,16 @@ def pca_components(
         F.col(id_col), F.col(vec_col), (F.col(id_col) % n_slices).alias("_slice")
     )
 
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _slice_stats(pdf, id_col, vec_col)
+    def stats(sl, t):
+        t = t.take(np.argsort(t.column(id_col).to_numpy(), kind="stable"))
+        mat = np.array(list(t.column(vec_col).to_numpy()), dtype=np.float64)
+        mean = mat.mean(axis=0)
+        r = np.linalg.qr(mat - mean, mode="r")
+        return [sl], [mat.shape[0]], [mat.shape[1]], [r.shape[0]], [mean.tobytes()], [r.tobytes()]
 
-    rows = (
-        sliced.groupBy("_slice")
-        .applyInPandas(
-            stats,
-            "slice long, n long, d int, r_rows int, mean binary, r binary",
-        )
-        .collect()  # P tiny (mean, R) pairs — the reference's master sync
-    )
+    rows = per_group(
+        sliced, "_slice", stats, "slice long, n long, d int, r_rows int, mean binary, r binary"
+    ).collect()  # P tiny (mean, R) pairs — the reference's master sync
     rows.sort(key=lambda r: r["slice"])
     d = rows[0]["d"]
     means = [np.frombuffer(r["mean"], dtype=np.float64) for r in rows]

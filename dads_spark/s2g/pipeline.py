@@ -26,8 +26,10 @@ that point locally — window sums are per-window independent
 sequential cross-partition dependency entirely. The oracle computes the
 padded projection the same way, so parity is by construction.
 
-No per-row Python anywhere: the slice stages are Arrow-batched pandas
-functions and the grouped operators run behind ``mapInArrow``, all over
+No per-row Python and no pandas anywhere: the slice stages run behind
+``groupBy().applyInArrow`` (``dads_spark.groups.per_group``) on the slice
+or segment key, over the explicit ``repartition`` the slice plan fixes, and
+the grouped operators run behind ``mapInArrow``; all of them call
 NumPy-vectorized kernels.
 """
 
@@ -36,11 +38,11 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..groups import per_series
+from ..groups import per_group, per_series
 from . import core
 from .params import S2GParams
 
@@ -62,8 +64,9 @@ _SCORES_SCHEMA = "slice_id long, score_pos long, raw_score double, is_tail boole
 _FINAL_SCHEMA = "window_idx long, score double"
 
 
-def _series_values(pdf: pd.DataFrame) -> np.ndarray:
-    return pdf.sort_values("pos")["value"].to_numpy(dtype=np.float64)
+def _sorted(t: pa.Table, *by: str) -> pa.Table:
+    """``t`` in stable order of the columns ``by``, the first one major."""
+    return t.take(np.lexsort([t.column(c).to_numpy() for c in reversed(by)]))
 
 
 def sliced_series(
@@ -125,23 +128,23 @@ def run_s2g_distributed(
     distributed plan by the engine's core tested invariant
     (tests/test_s2g_spark.py: distributed == oracle at equal slicing).
     Pass ``small_series_threshold=0`` to force the distributed plan.
+
+    The distributed plan releases its intermediate caches once the score
+    summary is collected. The raw per-slice scores stay cached, because the
+    returned frame reads them; ``spark.catalog.clearCache()`` releases them.
     """
     if n is None:
         n = series_df.count()
     if n <= small_series_threshold:
         from .oracle import s2g_oracle
 
-        x = (
-            series_df.orderBy("idx")
-            .toPandas()["value"]
-            .to_numpy(dtype=np.float64)
-        )
+        x = series_df.orderBy("idx").toArrow().column("value").to_numpy().astype(np.float64)
         scores = s2g_oracle(x, params, n_slices=n_slices, slices=slices).scores
         return spark.createDataFrame(
-            pd.DataFrame(
+            pa.table(
                 {
                     "window_idx": np.arange(len(scores), dtype=np.int64),
-                    "score": scores,
+                    "score": pa.array(scores, from_pandas=True),
                 }
             ),
             _FINAL_SCHEMA,
@@ -155,25 +158,14 @@ def run_s2g_distributed(
 
     # ---- stage 1: local PCA (means + centered QR per slice) ----------------
     # reference: PCACalculatorControl.java:95-99
-    def stage1(pdf: pd.DataFrame) -> pd.DataFrame:
-        p: S2GParams = b_params.value
-        sid = int(pdf["slice_id"].iloc[0])
-        vals = _series_values(pdf)
+    def stage1(sid, t):
+        vals = _sorted(t, "pos").column("value").to_numpy()
         if b_first.value[sid] > 0:
             vals = vals[1:]  # drop the boundary-recompute extra value
-        r_mat, mean, n_rows, vmin, vmax = core.pca_local(vals, p)
-        return pd.DataFrame(
-            {
-                "slice_id": [sid],
-                "r_flat": [r_mat.ravel().tolist()],
-                "mean": [mean.tolist()],
-                "n_rows": [n_rows],
-                "vmin": [vmin],
-                "vmax": [vmax],
-            }
-        )
+        r_mat, mean, n_rows, vmin, vmax = core.pca_local(vals, b_params.value)
+        return [sid], [r_mat.ravel()], [mean], [n_rows], [vmin], [vmax]
 
-    local_rows = tagged.groupBy("slice_id").applyInPandas(stage1, _STAGE1_SCHEMA).collect()
+    local_rows = per_group(tagged, "slice_id", stage1, _STAGE1_SCHEMA).collect()
     local_rows.sort(key=lambda r: r["slice_id"])
     d = params.d
     pca = core.finalize_pca(
@@ -191,13 +183,12 @@ def run_s2g_distributed(
     # ---- stage 2: projection + intersections --------------------------------
     # reference: DimensionReductionReceiverControl.java:99-154,
     #            Calculate.java:204-259, IntersectionWorkFactory.java
-    def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage2(sid, t):
         p: S2GParams = b_params.value
         v, rot, mean, minrec, maxrec = b_pca.value
         pca_l = core.PCAResult(v, rot, mean, minrec, maxrec)
-        sid = int(pdf["slice_id"].iloc[0])
         first_subseq = b_first.value[sid]
-        vals = _series_values(pdf)
+        vals = _sorted(t, "pos").column("value").to_numpy()
         proj, first_padded = core.padded_projection(vals, first_subseq, pca_l, p)
         unpadded = proj[:, 1:] if first_subseq > 0 else proj
         maxabs = core.max_abs(unpadded)
@@ -207,44 +198,18 @@ def run_s2g_distributed(
         order = np.argsort(creation, kind="stable")
         segs, dists, creation, subseqs = segs[order], dists[order], creation[order], subseqs[order]
         n_int = len(segs)
-        frames = [
-            pd.DataFrame(
-                {
-                    "slice_id": np.full(n_int, sid, dtype=np.int64),
-                    "kind": np.zeros(n_int, dtype=np.int32),
-                    "segment": segs.astype(np.int32),
-                    "dist": dists,
-                    "creation_idx": creation,
-                    "subseq": subseqs,
-                }
-            ),
-            pd.DataFrame(
-                {
-                    "slice_id": [sid],
-                    "kind": [1],
-                    "segment": [-1],
-                    "dist": [maxabs],
-                    "creation_idx": [0],
-                    "subseq": [0],
-                }
-            ),
-        ]
-        if n_int > 0:
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "slice_id": [sid],
-                        "kind": [2],
-                        "segment": [int(segs[-1])],
-                        "dist": [float(dists[-1])],
-                        "creation_idx": [0],
-                        "subseq": [0],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
+        k = min(n_int, 1)  # one kind-2 row (the last intersection), if any
+        zeros = np.zeros(1 + k, dtype=np.int64)
+        return (
+            np.full(n_int + 1 + k, sid),
+            np.concatenate([np.zeros(n_int, dtype=np.int32), [1], np.full(k, 2)]),
+            np.concatenate([segs, [-1], segs[n_int - k:]]),
+            np.concatenate([dists, [maxabs], dists[n_int - k:]]),
+            np.concatenate([creation, zeros]),
+            np.concatenate([subseqs, zeros]),
+        )
 
-    inter = tagged.groupBy("slice_id").applyInPandas(stage2, _INTERSECT_SCHEMA).cache()
+    inter = per_group(tagged, "slice_id", stage2, _INTERSECT_SCHEMA).cache()
 
     # coordinator: global max-abs * 1.2 -> shared density grid; also grab the
     # per-slice last intersections (boundary-node chain) in the same pass
@@ -258,28 +223,19 @@ def run_s2g_distributed(
 
     # ---- stage 3: per-segment KDE (shuffle intersections by segment) --------
     # reference: NodeCreationWorkerControl.java:308-391, DensityEstimatorControl
-    def kde(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["segment"].iloc[0])
-        pdf = pdf.sort_values(["slice_id", "creation_idx"], kind="stable")
-        nodes = core.kde_nodes(pdf["dist"].to_numpy(), b_grid.value)
-        return pd.DataFrame(
-            {
-                "segment": np.full(len(nodes), seg, dtype=np.int32),
-                "node_idx": np.arange(len(nodes), dtype=np.int32),
-                "node_value": nodes,
-            }
-        )
+    def kde(seg, t):
+        dists = _sorted(t, "slice_id", "creation_idx").column("dist").to_numpy()
+        nodes = core.kde_nodes(dists, b_grid.value)
+        return np.full(len(nodes), seg), np.arange(len(nodes)), nodes
 
-    node_rows = (
+    segments = (
         inter.filter(F.col("kind") == 0)
         # prune before the segment shuffle: the KDE needs only these four
         # columns (slice_id/creation_idx fix the bit-exact summation order)
         .select("slice_id", "segment", "dist", "creation_idx")
         .repartition(params.S, "segment")
-        .groupBy("segment")
-        .applyInPandas(kde, _NODES_SCHEMA)
-        .collect()
     )
+    node_rows = per_group(segments, "segment", kde, _NODES_SCHEMA).collect()
     nodes_by_segment = [np.empty(0) for _ in range(params.S)]
     for seg in range(params.S):
         vals = sorted((r["node_idx"], r["node_value"]) for r in node_rows if r["segment"] == seg)
@@ -309,12 +265,11 @@ def run_s2g_distributed(
 
     # ---- stage 4: edge-creation walk -----------------------------------------
     # reference: GraphPartitionCreator.java:22-76
-    def walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = int(pdf["slice_id"].iloc[0])
-        pdf = pdf.sort_values("creation_idx", kind="stable")
-        segs = pdf["segment"].to_numpy(dtype=np.int64)
-        dists = pdf["dist"].to_numpy()
-        subseqs = pdf["subseq"].to_numpy(dtype=np.int64)
+    def walk(sid, t):
+        t = _sorted(t, "creation_idx")
+        segs = t.column("segment").to_numpy().astype(np.int64)
+        dists = t.column("dist").to_numpy()
+        subseqs = t.column("subseq").to_numpy()
         node_idx = core.match_nodes(dists, segs, b_nodes.value)
         local_from, local_to = b_ranges.value[sid]
         walk_first = local_from - 1 if local_from > 0 else local_from
@@ -334,26 +289,11 @@ def run_s2g_distributed(
             # reference: OverlappingEdgeCreationOrderMessage)
             n_slots = grp[-1] + 1
             is_tail = grp >= n_slots - (p.ell - 1)
-        return pd.DataFrame(
-            {
-                "slice_id": np.full(n_e, sid, dtype=np.int64),
-                "slot": slot_arr,
-                "pos": pos,
-                "from_seg": fs.astype(np.int32),
-                "from_idx": fi.astype(np.int32),
-                "to_seg": ts_.astype(np.int32),
-                "to_idx": ti.astype(np.int32),
-                "is_tail": is_tail,
-            }
-        )
+        return np.full(n_e, sid), slot_arr, pos, fs, fi, ts_, ti, is_tail
 
-    edges_df = (
-        inter.filter(F.col("kind") == 0)
-        .drop("kind")  # prune the constant column from the walk shuffle
-        .groupBy("slice_id")
-        .applyInPandas(walk, _EDGES_SCHEMA)
-        .cache()
-    )
+    # prune the constant column from the walk shuffle
+    walked = inter.filter(F.col("kind") == 0).drop("kind")
+    edges_df = per_group(walked, "slice_id", walk, _EDGES_SCHEMA).cache()
 
     # ---- graph merge (Catalyst-native partial/final count agg) + degrees -----
     # reference: Graph.java:25-90, GraphMergerControl.java:72-85
@@ -392,18 +332,14 @@ def run_s2g_distributed(
     # ---- stage 5: path scoring ------------------------------------------------
     # reference: ScoringWorkerControl.java:225-294; summands via vectorized
     # sorted-key lookup, scoring via the flat-array smart walk
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(sid, t):
         p: S2GParams = b_params.value
         lookup = b_graph.value
-        sid = int(pdf["slice_id"].iloc[0])
-        pdf = pdf.sort_values(["slot", "pos"], kind="stable")
-        slots = pdf["slot"].to_numpy(dtype=np.int64)
+        t = _sorted(t, "slot", "pos")
+        slots = t.column("slot").to_numpy()
+        edges = ("from_seg", "from_idx", "to_seg", "to_idx")
         summ = core.edge_summands_vectorized(
-            pdf["from_seg"].to_numpy(np.int64),
-            pdf["from_idx"].to_numpy(np.int64),
-            pdf["to_seg"].to_numpy(np.int64),
-            pdf["to_idx"].to_numpy(np.int64),
-            lookup,
+            *(t.column(c).to_numpy().astype(np.int64) for c in edges), lookup
         )
         starts = (
             np.concatenate([[0], np.nonzero(np.diff(slots))[0] + 1])
@@ -425,16 +361,9 @@ def run_s2g_distributed(
                 starts = np.concatenate([t_starts, starts + len(t_summ)])
         scores, _, _ = core.path_scores_smart_flat(summ, starts, p.ell)
         n_s = len(scores)
-        return pd.DataFrame(
-            {
-                "slice_id": np.full(n_s, sid, dtype=np.int64),
-                "score_pos": np.arange(n_s, dtype=np.int64),
-                "raw_score": scores,
-                "is_tail": np.arange(n_s) >= n_s - (p.m - 1),
-            }
-        )
+        return np.full(n_s, sid), np.arange(n_s), scores, np.arange(n_s) >= n_s - (p.m - 1)
 
-    raw = edges_df.groupBy("slice_id").applyInPandas(score, _SCORES_SCHEMA).cache()
+    raw = per_group(edges_df, "slice_id", score, _SCORES_SCHEMA).cache()
 
     # one pass: global min/max (exact decomposable agg), per-slice counts,
     # and the m-1 raw-score tails (flagged in the score UDF, KB-sized)
@@ -452,6 +381,9 @@ def run_s2g_distributed(
         )
         .collect()
     )
+    # raw is filled now; the returned frame reads only raw
+    for cached in (tagged, inter, edges_df):
+        cached.unpersist()
     if not summary:
         # no slice produced a full ell-window of slots: empty result
         # (the oracle path yields the same; the reference would stall)
@@ -476,12 +408,10 @@ def run_s2g_distributed(
 
     # ---- stage 6: normalization + running means --------------------------------
     # reference: ScoringWorkerControl.java:487-537
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
+    def finalize(sid, t):
         p: S2GParams = b_params.value
         g_min, g_max = b_minmax.value
-        sid = int(pdf["slice_id"].iloc[0])
-        pdf = pdf.sort_values("score_pos")
-        local = pdf["raw_score"].to_numpy()
+        local = _sorted(t, "score_pos").column("raw_score").to_numpy()
         prev_sid = b_prev.value.get(sid)
         if prev_sid is not None:
             overlap = np.asarray(b_score_tails.value.get(prev_sid, []), dtype=np.float64)
@@ -489,12 +419,9 @@ def run_s2g_distributed(
         else:
             scores_in = local
         means = core.running_means_smart(scores_in, g_min, g_max, p.m)
-        base = b_offsets.value[sid]
-        return pd.DataFrame(
-            {"window_idx": base + np.arange(len(means), dtype=np.int64), "score": means}
-        )
+        return b_offsets.value[sid] + np.arange(len(means)), means
 
-    return raw.groupBy("slice_id").applyInPandas(finalize, _FINAL_SCHEMA)
+    return per_group(raw, "slice_id", finalize, _FINAL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

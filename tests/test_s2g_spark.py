@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -17,35 +19,74 @@ def series():
     return benchmark_series(1500, seed=11)
 
 
-def test_distributed_bit_parity(spark, series):
-    df = spark.createDataFrame(
+def _series_df(spark, series):
+    return spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(series)], "idx long, value double"
     )
-    for p in (1, 4):
-        out = (
-            # threshold=0: force the DISTRIBUTED plan (the adaptive
-            # small-input path would trivially compare oracle to oracle)
-            run_s2g_distributed(
-                spark, df, PARAMS, n_slices=p, n=len(series),
-                small_series_threshold=0,
-            )
-            .orderBy("window_idx")
-            .toPandas()
-        )
-        ora = s2g_oracle(series, PARAMS, n_slices=p)
-        assert len(out) == len(ora.scores)
-        assert (out["window_idx"].to_numpy() == np.arange(len(out))).all()
-        assert (out["score"].to_numpy() == ora.scores).all(), (
-            f"spark vs oracle not bit-identical at P={p}"
-        )
+
+
+def test_distributed_bit_parity(spark, series):
+    df = _series_df(spark, series)
+    # rerun with 7-row Arrow batches: every slice and segment group then
+    # reaches its stage as a table of many chunks
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    try:
+        for batch in (default, "7"):
+            spark.conf.set(key, batch)
+            for p in (1, 4):
+                out = (
+                    # threshold=0: force the DISTRIBUTED plan (the adaptive
+                    # small-input path would trivially compare oracle to oracle)
+                    run_s2g_distributed(
+                        spark, df, PARAMS, n_slices=p, n=len(series),
+                        small_series_threshold=0,
+                    )
+                    .orderBy("window_idx")
+                    .toPandas()
+                )
+                ora = s2g_oracle(series, PARAMS, n_slices=p)
+                assert len(out) == len(ora.scores)
+                assert (out["window_idx"].to_numpy() == np.arange(len(out))).all()
+                assert (out["score"].to_numpy() == ora.scores).all(), (
+                    f"spark vs oracle not bit-identical at P={p}"
+                )
+    finally:
+        spark.conf.set(key, default)
+
+
+def test_sliced_plan_is_arrow_over_a_fixed_slice_exchange(spark, series):
+    """Every slice stage crosses the Python boundary as Arrow, and the slice
+    exchange is the caller's P-way repartition, which AQE cannot coalesce."""
+    out = run_s2g_distributed(
+        spark, _series_df(spark, series), PARAMS, n_slices=4, n=len(series),
+        small_series_threshold=0,
+    )
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInArrow" in plan
+    assert "InPandas" not in plan
+    assert re.search(r"hashpartitioning\(slice_id#\d+L, 4\), REPARTITION_BY_NUM", plan)
+
+
+def test_sliced_run_keeps_only_its_result_cached(spark, series):
+    """A sliced run releases its intermediate caches; only the raw scores
+    the returned frame reads stay cached."""
+    df = _series_df(spark, series)
+    jsc = spark.sparkContext._jsc.sc()
+    cached = [len(jsc.getRDDStorageInfo())]
+    for _ in range(2):
+        run_s2g_distributed(
+            spark, df, PARAMS, n_slices=3, n=len(series), small_series_threshold=0
+        ).collect()
+        cached.append(len(jsc.getRDDStorageInfo()))
+    assert cached[1] - cached[0] <= 1 and cached[2] - cached[1] <= 1, cached
 
 
 def test_small_series_adaptive_path_identical(spark, series):
     """The adaptive small-input path must return exactly the distributed
     plan's rows (same schema, same bits)."""
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(series)], "idx long, value double"
-    )
+    df = _series_df(spark, series)
     fast = run_s2g_distributed(
         spark, df, PARAMS, n_slices=4, n=len(series)
     ).orderBy("window_idx").toPandas()
@@ -109,9 +150,7 @@ def test_distributed_heterogeneous_bit_parity(spark, series):
 
     plan = slice_bounds_weighted(len(series), [1.0, 2.0, 4.0], PARAMS.m)
     assert len(plan) == 3 and len({s.end - s.start for s in plan}) > 1
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(series)], "idx long, value double"
-    )
+    df = _series_df(spark, series)
     out = (
         run_s2g_distributed(
             spark, df, PARAMS, n_slices=len(plan), n=len(series),
