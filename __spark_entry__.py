@@ -2758,7 +2758,7 @@ def _stage_ann_pq_oracle(sf_dir: str, books) -> None:
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantized ANN (ops/quantize.py): the corpus is encoded to
-    8-byte PQ codes (one mapInPandas, materialize-once), queries scan the
+    8-byte PQ codes (one mapInArrow, materialize-once), queries scan the
     CODES table via ADC lookup tables with per-batch partial top-k.
     Driver-hash-gated against the scalar textbook encode+ADC loops in
     oracles.py (pq_topk_oracle) — same codebooks, bitwise accumulation
@@ -2835,7 +2835,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded spherical k-means cluster assignment over the embeddings
     table — the data-curation clustering pass (topic bucketing / diversity
     quotas). Driver-hash-gated against the local mirror; the trainer is the
-    IVF coarse quantizer's, the assignment one mapInPandas scan."""
+    IVF coarse quantizer's, the assignment one mapInArrow scan."""
     from dads_spark.ops import kmeans_assign
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -7829,7 +7829,7 @@ def _stage_sq8_oracle(spark: SparkSession, sf_dir: str) -> "object":
 def q_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 scalar-quantized ANN (ops/quantize.py:sq8_*): exact per-dim
     min/max codec (no sampling), 4x-compressed codes tier via one
-    mapInPandas, PURE-BIGINT dot-product scan with per-batch partial
+    mapInArrow, PURE-BIGINT dot-product scan with per-batch partial
     top-k — every rank and score pins bitwise against an independent
     scalar simulation (staged parquet oracle, the PQ lanes'
     discipline)."""

@@ -23,6 +23,12 @@ slice-parallel S2G stages, the embedding TSQR): ``groupBy().applyInArrow``
 keeps an exchange the caller fixed with ``repartition(P, key)``, one task
 per slice, where :func:`map_key_runs`' own ``repartition(*keys)`` may be
 coalesced by AQE into fewer tasks than slices.
+
+:func:`map_batches` is the row-batch boundary, for work with no key at all
+(the embedding operators: k-means assignment, cosine and ADC scans, PQ and
+SQ8 encoding, the PCA projection): ``mapInArrow`` hands each batch's
+columns over as NumPy arrays, a list column as one 2-D matrix
+(:func:`list_matrix`) rather than one Python object per row.
 """
 
 from __future__ import annotations
@@ -35,7 +41,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
 
-__all__ = ["key_groups", "keyed_schema", "map_key_runs", "per_group", "per_series"]
+__all__ = [
+    "key_groups",
+    "keyed_schema",
+    "list_matrix",
+    "map_batches",
+    "map_key_runs",
+    "per_group",
+    "per_series",
+]
 
 
 def key_groups(t: pa.Table, key_cols: list[str]) -> tuple[np.ndarray, np.ndarray]:
@@ -144,3 +158,55 @@ def per_group(df: DataFrame, key: str, fn, fields: str) -> DataFrame:
         )
 
     return df.groupBy(key).applyInArrow(run, fields)
+
+
+def list_matrix(col: pa.Array | pa.ChunkedArray, name: str) -> np.ndarray:
+    """A list column as a (rows, width) matrix of its value type. A null row
+    or rows of unequal length raise ``ValueError`` naming the column: a
+    matrix is never silently reshaped."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(f"column {name!r}: {col.null_count} null row(s), a matrix has none")
+    lengths = pc.list_value_length(col).to_numpy()
+    width = int(lengths[0]) if len(lengths) else 0
+    if (lengths != width).any():
+        raise ValueError(f"column {name!r}: rows of unequal length {sorted(set(lengths))}")
+    return pc.list_flatten(col).to_numpy(zero_copy_only=False).reshape(len(col), width)
+
+
+def _to_arrow(values, typ: pa.DataType) -> pa.Array:
+    """One output column as ``typ``; a 2-D array fills a list field row by row."""
+    if np.ndim(values) == 2:
+        n, width = np.shape(values)
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width)
+        flat = pa.array(np.ravel(values), typ.value_type, from_pandas=True)
+        return pa.ListArray.from_arrays(offsets, flat, type=typ)
+    return pa.array(values, typ, from_pandas=True)
+
+
+def map_batches(df: DataFrame, cols: list[str], fn, out_fields: str) -> DataFrame:
+    """``df.select(*cols).mapInArrow``: ``fn(*arrays)`` runs once per
+    non-empty Arrow batch on its columns, in ``cols`` order, as NumPy
+    arrays; a list column arrives as a 2-D matrix (:func:`list_matrix`).
+    It returns one array per field of the DDL string ``out_fields``, all
+    of one length, or None for no rows; a 2-D array fills a list field.
+    Each array is cast to its declared type; NaN becomes null, as it did
+    across the pandas boundary."""
+    schema = to_arrow_schema(DataType.fromDDL(out_fields))
+
+    def column(a: pa.Array, name: str) -> np.ndarray:
+        if pa.types.is_list(a.type):
+            return list_matrix(a, name)
+        return a.to_numpy(zero_copy_only=False)
+
+    def run(batches):
+        for b in batches:
+            if not b.num_rows:
+                continue
+            out = fn(*(column(a, name) for a, name in zip(b.columns, b.schema.names)))
+            if out is not None and len(out[0]):
+                arrays = [_to_arrow(c, f.type) for c, f in zip(out, schema)]
+                yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return df.select(*cols).mapInArrow(run, out_fields)

@@ -35,6 +35,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 #: one row per pipeline stage
 METRICS_SCHEMA = (
@@ -42,12 +44,6 @@ METRICS_SCHEMA = (
     "n_spark_stages int, n_stages_skipped int, n_tasks long, "
     "input_bytes long, output_bytes long, shuffle_read_bytes long, "
     "shuffle_write_bytes long, started_at double, error string"
-)
-_ARROW_TYPES = {
-    "string": pa.string(), "double": pa.float64(), "long": pa.int64(), "int": pa.int32()
-}
-_ARROW_SCHEMA = pa.schema(
-    [(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in METRICS_SCHEMA.split(", "))]
 )
 
 
@@ -64,6 +60,8 @@ class StageMetricsCollector:
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        self._schema = DataType.fromDDL(METRICS_SCHEMA)  # needs a live SparkContext
+        self._arrow = to_arrow_schema(self._schema)
         self._rows: list[dict] = []
         self._seq = 0
 
@@ -150,9 +148,8 @@ class StageMetricsCollector:
         return list(self._rows)
 
     def to_df(self) -> DataFrame:
-        cols = [c.split()[0] for c in METRICS_SCHEMA.split(", ")]
         return self.spark.createDataFrame(
-            [tuple(r.get(c) for c in cols) for r in self._rows], METRICS_SCHEMA
+            [tuple(r.get(c) for c in self._schema.names) for r in self._rows], self._schema
         )
 
     def write(self, ckpt_root: str) -> str:
@@ -168,10 +165,10 @@ class StageMetricsCollector:
         once ``part-0.parquet`` exists it alone is the table."""
         path = os.path.join(ckpt_root, "_metrics")
         own = os.path.join(path, "part-0.parquet")
-        out = pa.Table.from_pylist(self._rows, schema=_ARROW_SCHEMA)
+        out = pa.Table.from_pylist(self._rows, schema=self._arrow)
         if os.path.exists(path):  # first run: nothing to merge
             prior = pq.read_table(
-                own if os.path.exists(own) else path, schema=_ARROW_SCHEMA
+                own if os.path.exists(own) else path, schema=self._arrow
             )
             fresh = pa.array([r["stage"] for r in self._rows], pa.string())
             kept = prior.filter(pc.invert(pc.is_in(prior["stage"], value_set=fresh)))

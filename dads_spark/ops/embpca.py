@@ -26,11 +26,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..groups import per_group
+from ..groups import list_matrix, map_batches, per_group
 
 __all__ = ["embedding_pca", "pca_components"]
 
@@ -54,7 +53,7 @@ def pca_components(
 
     def stats(sl, t):
         t = t.take(np.argsort(t.column(id_col).to_numpy(), kind="stable"))
-        mat = np.array(list(t.column(vec_col).to_numpy()), dtype=np.float64)
+        mat = list_matrix(t.column(vec_col), vec_col).astype(np.float64)
         mean = mat.mean(axis=0)
         r = np.linalg.qr(mat - mean, mode="r")
         return [sl], [mat.shape[0]], [mat.shape[1]], [r.shape[0]], [mean.tobytes()], [r.tobytes()]
@@ -102,19 +101,10 @@ def embedding_pca(
 
     cols = [f"pc{i + 1}_q6" for i in range(k)]
 
-    def project(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            coords = (mat - total_mean) @ v
-            q = (np.sign(coords) * np.floor(np.abs(coords) * 1e6 + 0.5)).astype(
-                np.int64
-            )
-            out = {id_col: pdf[id_col]}
-            for i, c in enumerate(cols):
-                out[c] = q[:, i]
-            yield pd.DataFrame(out)
+    def project(ids, mat):
+        coords = (mat.astype(np.float64) - total_mean) @ v
+        q = np.sign(coords) * np.floor(np.abs(coords) * 1e6 + 0.5)
+        return [ids, *q.astype(np.int64).T]
 
     schema = f"{id_col} long, " + ", ".join(f"{c} long" for c in cols)
-    return embeddings.select(id_col, vec_col).mapInPandas(project, schema)
+    return map_batches(embeddings, [id_col, vec_col], project, schema)

@@ -41,9 +41,11 @@ semdedup shuffles once keyed by cluster id.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from ..groups import list_matrix, map_batches, per_group
 
 # Gopher A1.1 required stopwords ("the, be, to, of, and, that, have, with")
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -247,62 +249,49 @@ def semdedup(
 
     Plan shape: the trainer is the shared deterministic driver-sample
     spherical k-means (similarity._train_spherical_kmeans — centroids
-    broadcast via closure); ONE mapInPandas scan assigns clusters; one
-    shuffle keyed by cluster; per-cluster pairwise cosine inside
-    applyInPandas. The cluster bound is the scale argument: k grows with
+    broadcast via closure); ONE mapInArrow scan (``groups.map_batches``)
+    assigns clusters; one shuffle keyed by cluster; per-cluster pairwise
+    cosine inside ``groupBy().applyInArrow`` (``groups.per_group``). The
+    cluster bound is the scale argument: k grows with
     the corpus so the per-cluster candidate set stays bounded, exactly
     the role the band bucket plays in minhash_lsh_pairs — no all-pairs
     path exists. Comparisons quantize per-pair to integer micro-units
     BEFORE thresholding, so the drop set is partition-invariant.
     """
-    from .similarity import _train_spherical_kmeans
+    from .similarity import _train_spherical_kmeans, _unit_rows
 
     cent = _train_spherical_kmeans(
         embeddings, n_clusters, sample_size, kmeans_iters, seed, id_col, vec_col
     )
 
-    def assign(it):
-        for pdf in it:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-            cl = (mat @ cent.T).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster": cl.astype(np.int64),
-                    vec_col: pdf[vec_col],
-                }
-            )
+    def assign(ids, mat):
+        return [ids, (_unit_rows(mat.astype(np.float64)) @ cent.T).argmax(axis=1), mat]
 
-    dim_schema = f"{id_col} long, cluster long, {vec_col} array<float>"
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(assign, dim_schema)
+    assigned = map_batches(
+        embeddings,
+        [id_col, vec_col],
+        assign,
+        f"{id_col} long, cluster long, {vec_col} array<float>",
+    )
 
-    def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+    def dedup_cluster(cluster, t):
+        t = t.take(np.argsort(t.column(id_col).to_numpy(), kind="stable"))
+        ids = t.column(id_col).to_numpy()
+        mat = _unit_rows(list_matrix(t.column(vec_col), vec_col).astype(np.float64))
         cos_q6 = np.floor(mat @ mat.T * 1e6 + 0.5).astype(np.int64)
         n = len(ids)
         dropped = np.zeros(n, dtype=bool)
-        witness = np.full(n, -1, dtype=np.int64)
+        witness = np.zeros(n, dtype=np.int64)
         for i in range(1, n):
             hits = np.nonzero(cos_q6[i, :i] >= tau_q6)[0]
             if len(hits):
                 dropped[i] = True
                 witness[i] = ids[hits[0]]  # ids ascending -> smallest witness
-        out = pd.DataFrame(
-            {
-                id_col: ids,
-                "cluster": pdf["cluster"].to_numpy(dtype=np.int64),
-                "dropped": dropped,
-                "witness_id": witness,
-            }
-        )
-        out.loc[~out["dropped"], "witness_id"] = None
-        return out
+        return ids, np.full(n, cluster), dropped, pa.array(witness, mask=~dropped)
 
-    return assigned.groupBy("cluster").applyInPandas(
+    return per_group(
+        assigned,
+        "cluster",
         dedup_cluster,
         f"{id_col} long, cluster long, dropped boolean, witness_id long",
     )

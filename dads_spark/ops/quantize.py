@@ -12,12 +12,14 @@ a per-query lookup table of subspace dot products.
 Spark shape:
 - codebooks are trained on a deterministic hash-sample on the driver
   (tiny: m * ksub * dsub floats) and broadcast via task closure;
-- ``pq_encode`` is ONE mapInPandas over the corpus producing the codes
-  table — materialize it once, scan it forever (the compressed tier);
-- ``ann_pq_adc`` is ONE mapInPandas over the CODES table: per Arrow
+- ``pq_encode`` is ONE mapInArrow (``groups.map_batches``) over the
+  corpus producing the codes table — materialize it once, scan it forever
+  (the compressed tier);
+- ``ann_pq_adc`` is ONE mapInArrow over the CODES table: per Arrow
   batch, gather LUT entries and emit a partial top-k per query (the
-  ``knn_bruteforce`` survivor contract), then a final window ranks
-  batches x (k + ties) rows. No joins, no shuffle of the corpus.
+  ``knn_bruteforce`` survivor contract, ``similarity._partial_topk``),
+  then a final window ranks batches x (k + ties) rows. No joins, no
+  shuffle of the corpus.
 
 Determinism: sample, k-means init and iteration, encode argmin
 (first-min tie rule), LUT sums, and the 6dp quantized ranking are all
@@ -34,9 +36,13 @@ PQ is the codes-side complement the same tier needs).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from ..groups import map_batches
+from .similarity import _hash_sample, _partial_topk, _query_block, _train_spherical_kmeans, _unit_rows
+
+_ADC_FIELDS = "query_id long, neighbor_id long, score double, score_q6 long"
 
 __all__ = [
     "ann_ivf_pq",
@@ -48,20 +54,6 @@ __all__ = [
     "train_ivf_pq",
     "train_pq_codebooks",
 ]
-
-
-def _hash_sample(
-    embeddings: DataFrame, sample_size: int, id_col: str, vec_col: str
-) -> np.ndarray:
-    """Deterministic training sample: 1/64 xxhash64 stratum, ordered-limit
-    on the sliver (same shape as similarity._train_spherical_kmeans — no
-    global sort of the corpus)."""
-    base = embeddings.select(id_col, vec_col)
-    stratum = base.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(64)) == 0)
-    rows = stratum.orderBy(id_col).limit(sample_size).select(vec_col).collect()
-    if len(rows) < 64:
-        rows = base.orderBy(id_col).limit(sample_size).select(vec_col).collect()
-    return np.array([r[vec_col] for r in rows], dtype=np.float64)
 
 
 def train_pq_codebooks(
@@ -77,7 +69,7 @@ def train_pq_codebooks(
     """L2 k-means codebooks per subspace: (m, ksub, dim//m) float64.
     Deterministic: seeded init from the hash-sample, fixed iterations,
     empty clusters keep their previous centroid."""
-    X = _hash_sample(embeddings, sample_size, id_col, vec_col)
+    X = _hash_sample(embeddings, sample_size, 64, id_col, vec_col)
     return _kmeans_subspaces(X, m, ksub, iters, np.random.default_rng(seed))
 
 
@@ -127,16 +119,10 @@ def pq_encode(
     m = books.shape[0]
     schema = ", ".join([f"{id_col} long"] + [f"code_{s} int" for s in range(m)])
 
-    def f(it):
-        for pdf in it:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = encode_block(mat, books)
-            out = {id_col: pdf[id_col].to_numpy()}
-            for s in range(m):
-                out[f"code_{s}"] = codes[:, s].astype(np.int32)
-            yield pd.DataFrame(out)
+    def f(ids, mat):
+        return [ids, *encode_block(mat.astype(np.float64), books).T]
 
-    return embeddings.select(id_col, vec_col).mapInPandas(f, schema)
+    return map_batches(embeddings, [id_col, vec_col], f, schema)
 
 
 def ann_pq_adc(
@@ -149,70 +135,37 @@ def ann_pq_adc(
 ) -> DataFrame:
     """Approximate dot-product top-k over the CODES table via ADC:
     score(q, x) ~= sum_s <q_s, centroid_{code_s(x)}> — m lookups per
-    candidate. One mapInPandas scan emits per-batch partial top-k (ties
+    candidate. One mapInArrow scan emits per-batch partial top-k (ties
     at the quantized boundary kept); a final window ranks the survivors.
     Output: (query_id, neighbor_id, rank, score_q6, score) where
     score_q6 = sign*floor(|score|*1e6+0.5) — the exact integer key the
     per-batch cut, the final ranking, and the scalar oracle all share —
     and score is the raw approximate dot product."""
-    m, ksub, dsub = books.shape
-    # LUT[q, s, c] = <q_s, books[s, c]>, built with explicit sequential
-    # accumulation (NOT einsum/BLAS, whose summation order is unspecified)
-    # so the scalar oracle reproduces every entry bitwise; the table is
-    # tiny (nq*m*ksub) and built once, driver-side
-    qsub = q_mat.reshape(len(q_mat), m, dsub)
-    lut = np.empty((len(q_ids), m, ksub), dtype=np.float64)
-    for qi in range(len(q_ids)):
+    m = books.shape[0]
+    q_ids = np.asarray(q_ids)
+    lut = _build_lut(q_mat, books)
+
+    def f(ids, *codes):
+        # scores: (n, nq) built subspace-sequentially (matches the
+        # scalar oracle's accumulation order)
+        scores = np.zeros((len(ids), len(q_ids)), dtype=np.float64)
         for s in range(m):
-            for c in range(ksub):
-                acc = 0.0
-                for dd in range(dsub):
-                    acc += float(qsub[qi, s, dd]) * float(books[s, c, dd])
-                lut[qi, s, c] = acc
+            scores += lut[:, s, :][:, codes[s]].T
+        scores[ids[:, None] == q_ids[None, :]] = -np.inf  # no self-match
+        return _partial_topk(ids, q_ids, scores, k)
 
-    def f(it):
-        for pdf in it:
-            ids = pdf[id_col].to_numpy()
-            codes_mat = np.stack(
-                [pdf[f"code_{s}"].to_numpy() for s in range(m)], axis=1
-            )
-            # scores: (n, nq) built subspace-sequentially (matches the
-            # scalar oracle's accumulation order)
-            scores = np.zeros((len(ids), len(q_ids)), dtype=np.float64)
-            for s in range(m):
-                scores += lut[:, s, :][:, codes_mat[:, s]].T
-            key = np.sign(scores) * np.floor(np.abs(scores) * 1e6 + 0.5)
-            out_q, out_n, out_c, out_k = [], [], [], []
-            for qi in range(len(q_ids)):
-                valid = ids != q_ids[qi]
-                kq, kid, kc = key[valid, qi], ids[valid], scores[valid, qi]
-                if len(kq) > k:
-                    kth = np.partition(kq, len(kq) - k)[len(kq) - k]
-                    keep = kq >= kth
-                    kid, kc, kq = kid[keep], kc[keep], kq[keep]
-                out_q.append(np.full(len(kid), q_ids[qi]))
-                out_n.append(kid)
-                out_c.append(kc)
-                out_k.append(kq.astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "score": np.concatenate(out_c),
-                    "score_q6": np.concatenate(out_k),
-                }
-            )
+    flat = map_batches(
+        codes, [id_col, *(f"code_{s}" for s in range(m))], f, _ADC_FIELDS
+    )
+    return _rank_score_q6(flat, k)
 
-    flat = codes.mapInPandas(
-        f, "query_id long, neighbor_id long, score double, score_q6 long"
-    )
-    # final ranking uses the SAME sign*floor(|x|*1e6+0.5) integer key as
-    # the per-batch cut (NOT F.round, whose HALF_UP on the shortest
-    # decimal repr can disagree at representation boundaries) — the key
-    # the scalar oracle ranks and emits with
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_q6").desc(), F.col("neighbor_id")
-    )
+
+def _rank_score_q6(flat: DataFrame, k: int) -> DataFrame:
+    """Final per-query top-k over ADC survivor rows. It ranks by the SAME
+    sign*floor(|x|*1e6+0.5) integer key as the per-batch cut and the scalar
+    oracle (NOT F.round, whose HALF_UP on the shortest decimal repr can
+    disagree at representation boundaries), ties by id."""
+    w = W.partitionBy("query_id").orderBy(F.col("score_q6").desc(), F.col("neighbor_id"))
     return (
         flat.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -221,9 +174,10 @@ def ann_pq_adc(
 
 
 def _build_lut(q_mat: np.ndarray, books: np.ndarray) -> np.ndarray:
-    """Sequentially-accumulated <q_s, centroid> lookup tables (nq, m,
-    ksub) — loop-built so the scalar oracle reproduces entries bitwise
-    (see ann_pq_adc's inline note)."""
+    """LUT[q, s, c] = <q_s, books[s, c]>, shape (nq, m, ksub), built with
+    explicit sequential accumulation (NOT einsum/BLAS, whose summation
+    order is unspecified) so the scalar oracle reproduces every entry
+    bitwise; the table is tiny and built once, driver-side."""
     m, ksub, dsub = books.shape
     qsub = q_mat.reshape(len(q_mat), m, dsub)
     lut = np.empty((len(q_mat), m, ksub), dtype=np.float64)
@@ -253,13 +207,10 @@ def train_ivf_pq(
     (x_norm - cell centroid) — residual coding is what lets 8-byte codes
     stay accurate once the coarse term absorbs cluster structure.
     Returns (centroids (n_cells, dim), books (m, ksub, dim//m))."""
-    from .similarity import _train_spherical_kmeans
-
     cent = _train_spherical_kmeans(
         embeddings, n_cells, sample_size, iters, seed, id_col, vec_col
     )
-    X = _hash_sample(embeddings, sample_size, id_col, vec_col)
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    Xn = _unit_rows(_hash_sample(embeddings, sample_size, 64, id_col, vec_col))
     R = Xn - cent[(Xn @ cent.T).argmax(axis=1)]
     books = _kmeans_subspaces(R, m, ksub, iters, np.random.default_rng(seed + 1))
     return cent, books
@@ -288,7 +239,7 @@ def ann_ivf_pq(
 
         score(q, x) ~= <q, c_cell(x)> + sum_s <q_s, books[s, code_s(x)]>
 
-    ONE mapInPandas scan does assign + residual-encode + probe-mask +
+    ONE mapInArrow scan does assign + residual-encode + probe-mask +
     ADC + per-batch partial top-k (tie-safe 6dp cut, the knn_bruteforce
     survivor contract); the final window ranks skinny survivor rows.
     Deterministic end-to-end; pinned bitwise by the staged
@@ -297,90 +248,27 @@ def ann_ivf_pq(
     cent, books = model or train_ivf_pq(
         embeddings, n_cells, m, ksub, sample_size, iters, seed, id_col, vec_col
     )
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([int(r[id_col]) for r in qrows], dtype=np.int64)
-    q_raw = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_mat = q_raw / np.maximum(np.linalg.norm(q_raw, axis=1, keepdims=True), 1e-30)
+    q_ids, q_raw = _query_block(embeddings, query_ids, id_col, vec_col)
+    q_mat = _unit_rows(q_raw)
     qc = q_mat @ cent.T  # (nq, n_cells) coarse term
     probe_mask = np.zeros((n_cells, len(q_ids)), dtype=bool)
     for qi in range(len(q_ids)):
         for c in np.argsort(-qc[qi])[:n_probe]:
             probe_mask[int(c), qi] = True
     lut = _build_lut(q_mat, books)
-    dsub = books.shape[2]
 
-    def score(it):
-        for pdf in it:
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-30
-            )
-            cells = (mat @ cent.T).argmax(axis=1)
-            codes = encode_block(mat - cent[cells], books)
-            scores = qc[:, cells].T.copy()  # (n, nq) coarse term
-            for s in range(m):
-                scores += lut[:, s, :][:, codes[:, s]].T
-            allowed = probe_mask[cells]
-            allowed &= ids[:, None] != q_ids[None, :]
-            scores = np.where(allowed, scores, -np.inf)
-            out_q, out_n, out_c, out_k = [], [], [], []
-            for qi in range(len(q_ids)):
-                col = scores[:, qi]
-                finite = np.isfinite(col)
-                key = np.where(
-                    finite,
-                    np.sign(col) * np.floor(np.abs(col) * 1e6 + 0.5),
-                    -np.inf,
-                )
-                fkey = key[finite]
-                if len(fkey) > k:
-                    kth = np.partition(fkey, len(fkey) - k)[len(fkey) - k]
-                    keep = np.nonzero(key >= kth)[0]
-                else:
-                    keep = np.nonzero(finite)[0]
-                if len(keep):
-                    out_q.append(np.full(len(keep), q_ids[qi]))
-                    out_n.append(ids[keep])
-                    out_c.append(col[keep])
-                    out_k.append(key[keep].astype(np.int64))
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "score": np.concatenate(out_c),
-                        "score_q6": np.concatenate(out_k),
-                    }
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "query_id": [],
-                        "neighbor_id": [],
-                        "score": [],
-                        "score_q6": [],
-                    }
-                )
+    def score(ids, mat):
+        mat = _unit_rows(mat.astype(np.float64))
+        cells = (mat @ cent.T).argmax(axis=1)
+        codes = encode_block(mat - cent[cells], books)
+        scores = qc[:, cells].T.copy()  # (n, nq) coarse term
+        for s in range(m):
+            scores += lut[:, s, :][:, codes[:, s]].T
+        allowed = probe_mask[cells] & (ids[:, None] != q_ids[None, :])
+        return _partial_topk(ids, q_ids, np.where(allowed, scores, -np.inf), k)
 
-    flat = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, score double, score_q6 long"
-    )
-    # rank by the SAME integer key as the per-batch cut and the scalar
-    # oracle (sign*floor(|x|*1e6+0.5)); F.round on the double can flip at
-    # representation boundaries — a latent flake in a bitwise-gated lane
-    w = W.partitionBy("query_id").orderBy(
-        F.col("score_q6").desc(), F.col("neighbor_id")
-    )
-    return (
-        flat.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score_q6", "score")
-    )
+    flat = map_batches(embeddings, [id_col, vec_col], score, _ADC_FIELDS)
+    return _rank_score_q6(flat, k)
 
 
 # ---------------------------------------------------------------------------
@@ -420,20 +308,15 @@ def sq8_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """One mapInPandas over the corpus -> (id, codes array<long>); the
+    """One mapInArrow over the corpus -> (id, codes array<long>); the
     4x-compressed tier, materialized once and scanned forever."""
-    schema = f"{id_col} long, codes array<bigint>"
 
-    def enc(batches):
-        for pdf in batches:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = _sq8_codes(mat, lo, hi)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(),
-                 "codes": list(codes)}
-            )
+    def enc(ids, mat):
+        return [ids, _sq8_codes(mat.astype(np.float64), lo, hi)]
 
-    return embeddings.select(id_col, vec_col).mapInPandas(enc, schema)
+    return map_batches(
+        embeddings, [id_col, vec_col], enc, f"{id_col} long, codes array<bigint>"
+    )
 
 
 def ann_sq8(
@@ -452,24 +335,19 @@ def ann_sq8(
     one window ranks batches x k survivors."""
     qcodes = _sq8_codes(queries.astype(np.float64), lo, hi)
     nq = len(qcodes)
-    schema = "query_id long, vec_id long, score long"
 
-    def scan(batches):
-        for pdf in batches:
-            mat = np.array(list(pdf["codes"]), dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
-            out = {"query_id": [], "vec_id": [], "score": []}
-            for qi in range(nq):
-                s = mat @ qcodes[qi]
-                take = min(k, len(s))
-                # partial top-k by (-score, id): stable and tie-correct
-                order = np.lexsort((ids, -s))[:take]
-                out["query_id"].extend([qi] * take)
-                out["vec_id"].extend(ids[order].tolist())
-                out["score"].extend(s[order].tolist())
-            yield pd.DataFrame(out)
+    def scan(ids, mat):
+        scores = mat @ qcodes.T  # (n, nq), exact int64
+        take = min(k, len(ids))
+        # per query, the partial top-k by (-score, id): stable and tie-correct
+        top = np.array([np.lexsort((ids, -s))[:take] for s in scores.T], dtype=np.int64)
+        top = top.reshape(nq, take)
+        q = np.repeat(np.arange(nq), take)
+        return [q, ids[top].ravel(), scores[top, np.arange(nq)[:, None]].ravel()]
 
-    partial = codes_df.mapInPandas(scan, schema)
+    partial = map_batches(
+        codes_df, [id_col, "codes"], scan, "query_id long, vec_id long, score long"
+    )
     w = W.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("vec_id")
     )

@@ -1,8 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: the exact baseline. The query set is broadcast;
-  scores are computed in one vectorized matmul per Arrow batch; top-k via a
-  window rank. O(n_vectors * n_queries) FLOPs, embarrassingly parallel, no
+  scores are computed in one vectorized matmul per Arrow batch
+  (``groups.map_batches``); each batch keeps a tie-safe partial top-k
+  (:func:`_partial_topk`, shared with the PQ scans) and a window ranks the
+  survivors. O(n_vectors * n_queries) FLOPs, embarrassingly parallel, no
   shuffle until the (tiny) per-query top-k aggregation.
 - LSH-bucketed ANN: random-hyperplane signatures, candidates = same-bucket
   vectors across any of B bands; exact cosine re-rank of candidates. The
@@ -12,15 +14,53 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..groups import map_batches
+
+
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+
 
 def _cosine_block(mat: np.ndarray, queries: np.ndarray) -> np.ndarray:
-    mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    qn = queries / np.maximum(np.linalg.norm(queries, axis=1, keepdims=True), 1e-30)
-    return mn @ qn.T
+    return _unit_rows(mat) @ _unit_rows(queries).T
+
+
+def _partial_topk(ids: np.ndarray, q_ids: np.ndarray, scores: np.ndarray, k: int):
+    """One batch's per-query survivors. ``scores`` is (rows, queries), -inf
+    where a pair may not match. The cut is on the HALF_UP 6dp key
+    sign*floor(|x|*1e6+0.5), the quantization F.round applies in the final
+    window (np.round is half-to-even and can disagree at rounding ties),
+    and it keeps every tie at the k-th key, so the global top-k by
+    (key desc, id asc) is always a subset of the union of the batches'
+    survivors. Returns (query_id, neighbor_id, score, key), query-major."""
+    finite = np.isfinite(scores)
+    key = np.where(finite, np.sign(scores) * np.floor(np.abs(scores) * 1e6 + 0.5), -np.inf)
+    n = len(scores)
+    kth = np.partition(key, n - k, axis=0)[n - k] if n > k else -np.inf
+    q, r = np.nonzero((finite & (key >= kth)).T)
+    return q_ids[q], ids[r], scores[r, q], key[r, q].astype(np.int64)
+
+
+def _query_block(embeddings: DataFrame, query_ids: list[int], id_col: str, vec_col: str):
+    """The query ids and their vectors (float64), collected once — tiny, and
+    closed over, so they reach executors with the task."""
+    rows = embeddings.filter(F.col(id_col).isin(query_ids)).select(id_col, vec_col).collect()
+    q_ids = np.array([r[id_col] for r in rows], dtype=np.int64)
+    return q_ids, np.array([r[vec_col] for r in rows], dtype=np.float64)
+
+
+def _rank_q6(flat: DataFrame, k: int) -> DataFrame:
+    """Final per-query top-k over survivor rows, on the 6dp-rounded cosine
+    with a deterministic id tiebreak."""
+    w = W.partitionBy("query_id").orderBy(F.round("cosine", 6).desc(), F.col("neighbor_id"))
+    return (
+        flat.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
+    )
 
 
 def _partial_topk_scores(
@@ -35,34 +75,13 @@ def _partial_topk_scores(
     block: each batch emits at most nq x (k + ties) survivor rows — the
     global top-k by (round(cosine, 6) desc, id asc) is provably a subset."""
 
-    def scores(it):
-        for pdf in it:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            cos = _cosine_block(mat, q_mat)  # (batch, nq)
-            # HALF_UP 6dp key, matching F.round's ordering downstream
-            key = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5)
-            out_q, out_n, out_c = [], [], []
-            for qi in range(len(q_ids)):
-                valid = ids != q_ids[qi]  # exclude self BEFORE the cut
-                kq, kid, kc = key[valid, qi], ids[valid], cos[valid, qi]
-                if len(kq) > k:
-                    kth = np.partition(kq, len(kq) - k)[len(kq) - k]
-                    keep = kq >= kth  # ties included: never cuts a true winner
-                    kid, kc = kid[keep], kc[keep]
-                out_q.append(np.full(len(kid), q_ids[qi]))
-                out_n.append(kid)
-                out_c.append(kc)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
+    def scores(ids, mat):
+        cos = _cosine_block(mat.astype(np.float64), q_mat)  # (batch, nq)
+        cos[ids[:, None] == q_ids[None, :]] = -np.inf  # exclude self BEFORE the cut
+        return _partial_topk(ids, q_ids, cos, k)[:3]
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        scores, "query_id long, neighbor_id long, cosine double"
+    return map_batches(
+        embeddings, [id_col, vec_col], scores, "query_id long, neighbor_id long, cosine double"
     )
 
 
@@ -85,25 +104,28 @@ def knn_bruteforce(
     candidate rows of a query into one task — the global top-k is always a
     subset of the per-batch top-k union.
     """
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    flat = _partial_topk_scores(embeddings, q_ids, q_mat, k, id_col, vec_col)
+    q_ids, q_mat = _query_block(embeddings, query_ids, id_col, vec_col)
     # rank on the QUANTIZED cosine so the ordering (and the top-k boundary)
     # is reproducible across engines computing the dot product in different
     # summation orders (sub-1e-6 differences quantize away)
-    w = W.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        flat.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank_q6(_partial_topk_scores(embeddings, q_ids, q_mat, k, id_col, vec_col), k)
+
+
+def _hash_sample(
+    embeddings: DataFrame, sample_size: int, min_rows: int, id_col: str, vec_col: str
+) -> np.ndarray:
+    """Deterministic training sample (float64 rows): pre-filter to a ~1/64
+    xxhash64 stratum so the ordered limit (per-partition top-k + driver
+    merge) scans a sliver of the table instead of feeding ALL n ids through
+    a top-k at 10^9-vector scale; fall back to the unfiltered ordered limit
+    only when the stratum holds fewer than ``min_rows`` rows (tiny tables).
+    Both paths are pure functions of the ids."""
+    base = embeddings.select(id_col, vec_col)
+    stratum = base.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(64)) == 0)
+    rows = stratum.orderBy(id_col).limit(sample_size).select(vec_col).collect()
+    if len(rows) < min_rows:
+        rows = base.orderBy(id_col).limit(sample_size).select(vec_col).collect()
+    return np.array([r[vec_col] for r in rows], dtype=np.float64)
 
 
 def _train_spherical_kmeans(
@@ -115,23 +137,11 @@ def _train_spherical_kmeans(
     id_col: str,
     vec_col: str,
 ) -> np.ndarray:
-    """Deterministic spherical k-means centroids on the driver.
-
-    Deterministic hash-sample for training: pre-filter to a ~1/64 hash
-    stratum so the ordered limit (per-partition top-k + driver merge) scans
-    a sliver of the table instead of feeding ALL n ids through a top-k at
-    10^9-vector scale; falls back to the unfiltered ordered limit only when
-    the stratum is too thin to train (tiny tables). Both paths are pure
-    functions of the ids. Centroids are tiny and broadcast to every task.
-    """
+    """Deterministic spherical k-means centroids on the driver, trained on
+    the hash sample (:func:`_hash_sample`; at least 4 rows a cell).
+    Centroids are tiny and broadcast to every task."""
     rng = np.random.default_rng(seed)
-    base = embeddings.select(id_col, vec_col)
-    stratum = base.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(64)) == 0)
-    sample = stratum.orderBy(id_col).limit(sample_size).select(vec_col).collect()
-    if len(sample) < max(n_cells * 4, 64):
-        sample = base.orderBy(id_col).limit(sample_size).select(vec_col).collect()
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    X = _unit_rows(_hash_sample(embeddings, sample_size, max(n_cells * 4, 64), id_col, vec_col))
     cent = X[rng.choice(len(X), size=n_cells, replace=False)]
     for _ in range(kmeans_iters):  # spherical k-means (cosine geometry)
         assign = (X @ cent.T).argmax(axis=1)
@@ -157,7 +167,7 @@ def kmeans_assign(
     The data-curation clustering pass an LLM-corpus pipeline runs over
     embeddings (topic bucketing, diversity sampling, per-cluster quotas):
     seeded spherical k-means trained on a deterministic driver sample
-    (same trainer as the IVF coarse quantizer), then ONE mapInPandas scan
+    (same trainer as the IVF coarse quantizer), then ONE mapInArrow scan
     assigns each vector its argmax-cosine centroid. sim_q6 is the cosine
     to the assigned centroid in micro-units (tie-free quantization).
     At warehouse scale the cluster id becomes a partition/bucket column.
@@ -166,23 +176,14 @@ def kmeans_assign(
         embeddings, n_clusters, sample_size, kmeans_iters, seed, id_col, vec_col
     )
 
-    def assign(it):
-        for pdf in it:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-            cos = mat @ cent.T
-            cl = cos.argmax(axis=1)
-            best = cos[np.arange(len(cl)), cl]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster": cl.astype(np.int64),
-                    "sim_q6": np.floor(best * 1e6 + 0.5).astype(np.int64),
-                }
-            )
+    def assign(ids, mat):
+        cos = _unit_rows(mat.astype(np.float64)) @ cent.T
+        cl = cos.argmax(axis=1)
+        best = cos[np.arange(len(cl)), cl]
+        return [ids, cl, np.floor(best * 1e6 + 0.5).astype(np.int64)]
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, cluster long, sim_q6 long"
+    return map_batches(
+        embeddings, [id_col, vec_col], assign, f"{id_col} long, cluster long, sim_q6 long"
     )
 
 
@@ -190,21 +191,16 @@ def _exact_rerank(pairs: DataFrame, k: int) -> DataFrame:
     """Exact cosine over (query_id, neighbor_id, nvec, qvec) candidate rows,
     then per-query top-k with a deterministic id tiebreak."""
 
-    def rerank(it):
-        for pdf in it:
-            a = np.array(list(pdf["nvec"]), dtype=np.float64)
-            b = np.array(list(pdf["qvec"]), dtype=np.float64)
-            an = a / np.maximum(np.linalg.norm(a, axis=1, keepdims=True), 1e-30)
-            bn = b / np.maximum(np.linalg.norm(b, axis=1, keepdims=True), 1e-30)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "cosine": (an * bn).sum(axis=1),
-                }
-            )
+    def rerank(q, n, a, b):
+        cos = (_unit_rows(a.astype(np.float64)) * _unit_rows(b.astype(np.float64))).sum(axis=1)
+        return [q, n, cos]
 
-    scored = pairs.mapInPandas(rerank, "query_id long, neighbor_id long, cosine double")
+    scored = map_batches(
+        pairs,
+        ["query_id", "neighbor_id", "nvec", "qvec"],
+        rerank,
+        "query_id long, neighbor_id long, cosine double",
+    )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -248,75 +244,24 @@ def ann_ivf(
     cent = _train_spherical_kmeans(
         embeddings, n_cells, sample_size, kmeans_iters, seed, id_col, vec_col
     )
-
-    qrows = (
-        embeddings.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    qids = np.array([int(r[id_col]) for r in qrows], dtype=np.int64)
-    qmat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30)
+    qids, qmat = _query_block(embeddings, query_ids, id_col, vec_col)
+    qmat = _unit_rows(qmat)
     # probe_mask[c, q] = cell c is among query q's n_probe nearest cells
     probe_mask = np.zeros((n_cells, len(qids)), dtype=bool)
     for qi in range(len(qids)):
         for c in np.argsort(-(cent @ qmat[qi]))[:n_probe]:
             probe_mask[int(c), qi] = True
 
-    def score(it):
-        out = {"query_id": [], "neighbor_id": [], "cosine": []}
-        for pdf in it:
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-            cells = (mat @ cent.T).argmax(axis=1)
-            cos = mat @ qmat.T  # batch x queries
-            allowed = probe_mask[cells]  # batch x queries
-            allowed &= ids[:, None] != qids[None, :]  # no self-match
-            cos = np.where(allowed, cos, -np.inf)
-            for qi in range(len(qids)):
-                col = cos[:, qi]
-                # per-batch partial cut on the HALF_UP 6dp key — the same
-                # quantization F.round applies in the final window (NumPy's
-                # np.round is half-to-even, which can disagree at rounding-
-                # tie boundaries) — and ties at the k-th key are kept, so
-                # the global top-k is provably a subset of the survivors
-                finite = np.isfinite(col)
-                key = np.where(
-                    finite, np.sign(col) * np.floor(np.abs(col) * 1e6 + 0.5), -np.inf
-                )
-                fkey = key[finite]
-                if len(fkey) > k:
-                    kth = np.partition(fkey, len(fkey) - k)[len(fkey) - k]
-                    keep = np.nonzero(key >= kth)[0]
-                else:
-                    keep = np.nonzero(finite)[0]
-                if len(keep):
-                    out["query_id"].append(np.full(len(keep), qids[qi]))
-                    out["neighbor_id"].append(ids[keep])
-                    out["cosine"].append(col[keep])
-        if out["query_id"]:
-            yield pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
-        else:
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int64"),
-                    "neighbor_id": pd.Series(dtype="int64"),
-                    "cosine": pd.Series(dtype="float64"),
-                }
-            )
+    def score(ids, mat):
+        mat = _unit_rows(mat.astype(np.float64))
+        allowed = probe_mask[(mat @ cent.T).argmax(axis=1)]  # batch x queries
+        allowed &= ids[:, None] != qids[None, :]  # no self-match
+        return _partial_topk(ids, qids, np.where(allowed, mat @ qmat.T, -np.inf), k)[:3]
 
-    scored = embeddings.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cosine double"
+    scored = map_batches(
+        embeddings, [id_col, vec_col], score, "query_id long, neighbor_id long, cosine double"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank_q6(scored, k)
 
 
 def ann_lsh(
@@ -340,23 +285,20 @@ def ann_lsh(
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_bands, n_planes, dim))
 
-    def signatures(it):
-        for pdf in it:
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            rows = {id_col: [], "band": [], "bucket": []}
-            for band in range(n_bands):
-                proj = mat @ planes[band].T > 0
-                bucket = np.packbits(proj, axis=1, bitorder="little")[:, :2]
-                code = bucket[:, 0].astype(np.int64) + (
-                    bucket[:, 1].astype(np.int64) << 8 if bucket.shape[1] > 1 else 0
-                )
-                rows[id_col].extend(pdf[id_col].tolist())
-                rows["band"].extend([band] * len(pdf))
-                rows["bucket"].extend(code.tolist())
-            yield pd.DataFrame(rows)
+    def signatures(ids, mat):
+        mat = mat.astype(np.float64)
+        codes = []
+        for band in range(n_bands):
+            bucket = np.packbits(mat @ planes[band].T > 0, axis=1, bitorder="little")[:, :2]
+            codes.append(
+                bucket[:, 0].astype(np.int64)
+                + (bucket[:, 1].astype(np.int64) << 8 if bucket.shape[1] > 1 else 0)
+            )
+        bands = np.repeat(np.arange(n_bands, dtype=np.int32), len(ids))
+        return [np.tile(ids, n_bands), bands, np.concatenate(codes)]
 
-    sigs = embeddings.select(id_col, vec_col).mapInPandas(
-        signatures, f"{id_col} long, band int, bucket long"
+    sigs = map_batches(
+        embeddings, [id_col, vec_col], signatures, f"{id_col} long, band int, bucket long"
     )
     q_sigs = sigs.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), "band", "bucket"

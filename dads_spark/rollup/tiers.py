@@ -27,8 +27,6 @@ _OFFSET_US = {"hour": 0, "day": 0, "week": 345_600_000_000}
 #: cascade order
 TIER_ORDER = ["hour", "day", "week"]
 
-_METRICS = ["doc_count", "value_sum", "value_min", "value_max"]
-
 
 def bucket_expr(ts_col: str, tier: str):
     """UTC tier-bucket truncation via integer epoch arithmetic.
@@ -45,6 +43,29 @@ def bucket_expr(ts_col: str, tier: str):
     return F.timestamp_micros(bucket_us.cast("long")).alias("bucket_ts")
 
 
+def _raw_aggs(value_col: str | None) -> list:
+    """The tier aggregates over raw rows: count, sum, min, max of the value
+    (of 0.0 when ``value_col`` is None)."""
+    val = F.col(value_col) if value_col else F.lit(0.0)
+    return [
+        F.count(F.lit(1)).alias("doc_count"),
+        F.sum(val).alias("value_sum"),
+        F.min(val).alias("value_min"),
+        F.max(val).alias("value_max"),
+    ]
+
+
+def _merge_aggs() -> list:
+    """The tier aggregates over partial tiers, exact for the decomposable
+    set: sum of counts, sum of sums, min of mins, max of maxs."""
+    return [
+        F.sum("doc_count").alias("doc_count"),
+        F.sum("value_sum").alias("value_sum"),
+        F.min("value_min").alias("value_min"),
+        F.max("value_max").alias("value_max"),
+    ]
+
+
 def rollup_from_raw(
     df: DataFrame,
     key_cols: list[str],
@@ -54,24 +75,13 @@ def rollup_from_raw(
 ) -> DataFrame:
     """Bucket raw rows into a tier: (keys..., bucket_ts, doc_count,
     value_sum/min/max). ``value_col=None`` aggregates octet counts only."""
-    val = F.col(value_col) if value_col else F.lit(0.0)
-    return df.groupBy(*key_cols, bucket_expr(ts_col, tier)).agg(
-        F.count(F.lit(1)).alias("doc_count"),
-        F.sum(val).alias("value_sum"),
-        F.min(val).alias("value_min"),
-        F.max(val).alias("value_max"),
-    )
+    return df.groupBy(*key_cols, bucket_expr(ts_col, tier)).agg(*_raw_aggs(value_col))
 
 
 def cascade(tier_df: DataFrame, key_cols: list[str], to_tier: str) -> DataFrame:
     """Roll a finer tier up to a coarser one (exact: sums of sums, min of
     mins, max of maxs)."""
-    return tier_df.groupBy(*key_cols, bucket_expr("bucket_ts", to_tier)).agg(
-        F.sum("doc_count").alias("doc_count"),
-        F.sum("value_sum").alias("value_sum"),
-        F.min("value_min").alias("value_min"),
-        F.max("value_max").alias("value_max"),
-    )
+    return tier_df.groupBy(*key_cols, bucket_expr("bucket_ts", to_tier)).agg(*_merge_aggs())
 
 
 def salted_rollup(
@@ -101,21 +111,10 @@ def salted_rollup(
             F.lit(salt_buckets),
         ),
     )
-    val = F.col(value_col) if value_col else F.lit(0.0)
-    phase1 = salted.groupBy(
-        *key_cols, bucket_expr(ts_col, tier), "_salt"
-    ).agg(
-        F.count(F.lit(1)).alias("doc_count"),
-        F.sum(val).alias("value_sum"),
-        F.min(val).alias("value_min"),
-        F.max(val).alias("value_max"),
+    phase1 = salted.groupBy(*key_cols, bucket_expr(ts_col, tier), "_salt").agg(
+        *_raw_aggs(value_col)
     )
-    return phase1.groupBy(*key_cols, "bucket_ts").agg(
-        F.sum("doc_count").alias("doc_count"),
-        F.sum("value_sum").alias("value_sum"),
-        F.min("value_min").alias("value_min"),
-        F.max("value_max").alias("value_max"),
-    )
+    return phase1.groupBy(*key_cols, "bucket_ts").agg(*_merge_aggs())
 
 
 def merge_tier(existing: DataFrame, delta: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -124,16 +123,7 @@ def merge_tier(existing: DataFrame, delta: DataFrame, key_cols: list[str]) -> Da
     sum-of-sums / sum-of-counts / min-of-mins / max-of-maxs per
     (keys, bucket). Rows for buckets present in only one side pass through
     unchanged."""
-    return (
-        existing.unionByName(delta)
-        .groupBy(*key_cols, "bucket_ts")
-        .agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("value_sum").alias("value_sum"),
-            F.min("value_min").alias("value_min"),
-            F.max("value_max").alias("value_max"),
-        )
-    )
+    return existing.unionByName(delta).groupBy(*key_cols, "bucket_ts").agg(*_merge_aggs())
 
 
 def incremental_refresh(

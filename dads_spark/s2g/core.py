@@ -697,24 +697,6 @@ def edge_walk_arrays(
     return slots[order], fs[order], fi[order], ts[order], ti[order]
 
 
-def merge_edges(edge_lists: Sequence[Sequence[tuple[int, int, int, int, int]]]):
-    """Merged weighted graph + per-slot edge-creation order.
-
-    reference: Graph.java:25-90 (weight = number of creations) and
-    GraphMergerControl.java:72-85 (master sums weights across workers).
-    Returns (weights: dict[edge_key -> int], slot_order: dict[slot -> list[edge_key]])
-    with edge_key = (from_seg, from_idx, to_seg, to_idx).
-    """
-    weights: dict[tuple[int, int, int, int], int] = {}
-    slot_order: dict[int, list[tuple[int, int, int, int]]] = {}
-    for edges in edge_lists:
-        for slot, fs, fi, ts, ti in edges:
-            key = (fs, fi, ts, ti)
-            weights[key] = weights.get(key, 0) + 1
-            slot_order.setdefault(slot, []).append(key)
-    return weights, slot_order
-
-
 def node_degrees(weights: dict) -> dict:
     """Distinct-edge degrees: +1 for from, +1 for to, per unique edge
     (self-loops therefore count twice). reference: Calculate.java:488-507."""
@@ -728,25 +710,6 @@ def node_degrees(weights: dict) -> dict:
 # ---------------------------------------------------------------------------
 # path scoring (reference: ScoringWorkerControl.java:225-294)
 # ---------------------------------------------------------------------------
-
-def slot_summands(
-    ordered_slot_edges: Sequence[Sequence[tuple[int, int, int, int]]],
-    weights: dict,
-    degrees: dict,
-) -> list[np.ndarray]:
-    """Per-slot summand arrays: weight(edge) * (degree(from) - 1).
-
-    reference: ScoringWorkerControl.java:279-294 (addSummands).
-    """
-    out = []
-    for slot_edges in ordered_slot_edges:
-        vals = [
-            float(weights[key]) * (degrees[(key[0], key[1])] - 1)
-            for key in slot_edges
-        ]
-        out.append(np.asarray(vals, dtype=np.float64))
-    return out
-
 
 def encode_edge_keys(fs, fi, ts, ti) -> np.ndarray:
     """Pack an edge key (from_seg, from_idx, to_seg, to_idx) into one int64
@@ -774,10 +737,12 @@ def build_graph_lookup(weights: dict, degrees: dict):
 
 
 def edge_summands_vectorized(fs, fi, ts, ti, lookup) -> np.ndarray:
-    """summand = weight(edge) * (degree(from) - 1), vectorized.
+    """summand = weight(edge) * (degree(from) - 1), vectorized
+    (reference: ScoringWorkerControl.java:279-294, addSummands).
 
-    Exact-product semantics identical to :func:`slot_summands` (float64
-    multiplication of the same integers is bit-exact regardless of path).
+    The weight is a float64 and the degree term an exact integer converted
+    to float64, so each summand is one correctly rounded float64 product of
+    two integers: bit-exact, whatever path computes it.
     """
     ekeys, w, nkeys, deg = lookup
     ek = encode_edge_keys(fs, fi, ts, ti)

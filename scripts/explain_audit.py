@@ -225,15 +225,15 @@ def main() -> None:
 
     # --- A12: single-scan IVF ANN ------------------------------------------
     p12 = plan_of(em.queries()["ann_ivf"](spark, sf_dir))
-    # formatted plans name each node once in the tree ("MapInPandas (2)")
+    # formatted plans name each node once in the tree ("MapInArrow (2)")
     # and once in the detail list; count tree nodes only
-    assert len(re.findall(r"MapInPandas \(\d+\)", p12)) == 1, (
+    assert len(re.findall(r"MapInArrow \(\d+\)", p12)) == 1, (
         "ann_ivf should be ONE Python scan"
     )
     assert "Join" not in p12, "ann_ivf rewrite must not join vectors"
     sections.append((
         "A12 ann_ivf single-scan shape",
-        "PASS — exactly one MapInPandas over the embeddings scan and zero "
+        "PASS — exactly one MapInArrow over the embeddings scan and zero "
         "joins: candidates score against the broadcast query matrix in the "
         "same pass that assigns cells; only partitions x queries x k rows "
         "reach the ranking window",
@@ -1504,14 +1504,14 @@ def main() -> None:
     # --- A80: ann_sq8 / watermark_tuning -------------------------------------
     p80a = plan_of(em.queries()["ann_sq8"](spark, sf_dir))
     p80b = plan_of(em.queries()["watermark_tuning"](spark, sf_dir))
-    assert "MapInPandas" in p80a, "sq8 encode/scan are Arrow-batch kernels"
+    assert "MapInArrow" in p80a, "sq8 encode/scan are Arrow-batch kernels"
     assert "CartesianProduct" not in p80a
     assert "Window" in p80a and "SinglePartition" not in p80b
     for py_op in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
         assert py_op not in p80b, f"watermark_tuning plan contains {py_op}"
     sections.append((
         "A80 sq8 partial top-k; watermark tuning shares one keyed window",
-        "PASS — ann_sq8 is two Arrow-batch mapInPandas stages (encode "
+        "PASS — ann_sq8 is two Arrow-batch mapInArrow stages (encode "
         "once -> the 4x tier; scan emits per-batch partial top-k) and a "
         "final window over batches x k survivors — the knn_bruteforce "
         "contract at a quarter the bytes; watermark_tuning evaluates "
@@ -1519,7 +1519,7 @@ def main() -> None:
         "(tuning N candidates costs one pass), no Python, no "
         "single-task collapse",
         "\n".join(l for l in (p80a + "\n" + p80b).splitlines()
-                  if "MapInPandas" in l or "Window" in l or "Exchange" in l)[:400],
+                  if "MapInArrow" in l or "Window" in l or "Exchange" in l)[:400],
     ))
 
     # --- A81: merkle_refresh / kmv_sliding / fetch_decision ------------------

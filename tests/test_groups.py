@@ -9,6 +9,10 @@ function, so the pandas paths they replaced are kept below as their
 reference. The frame holds a null key and series that span many 3-row
 Arrow batches; its ``n`` column is the integral ``w`` as a long, the input
 of the integer kernels.
+
+The row-batch runner ``map_batches`` is checked on its own: a list column
+arrives as a matrix, a matrix fills a list field, a null or ragged row is
+refused, and an empty input gives an empty typed frame.
 """
 
 from __future__ import annotations
@@ -18,9 +22,11 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from dads_spark.compress import (
     compressed_tier_roundtrip,
@@ -30,6 +36,7 @@ from dads_spark.compress import (
 from dads_spark.compress.blobstore import compressed_tier_blobs
 from dads_spark.compress.pla import swing_segments
 from dads_spark.fixtures import benchmark_series
+from dads_spark.groups import list_matrix, map_batches
 from dads_spark.ops import isotonic_fit
 from dads_spark.ops.calibrate import _pav_blocks
 from dads_spark.ops.sketch import digest, digest_quantiles
@@ -487,3 +494,53 @@ def test_runner_keeps_key_type_and_matches_kernel(
         want = _rows(_reference_paths()[op](df))
     assert got == want
     assert any(r[0] is None for r in got)  # the null key is one series
+
+
+# --- the row-batch runner --------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    rows = [(i, [float(i), 2.0 * i, -float(i)]) for i in range(20)]
+    return spark.createDataFrame(rows, "id long, v array<float>").repartition(2)
+
+
+def test_map_batches_list_column_is_a_matrix(spark, vectors, small_batches):
+    def fn(ids, mat):
+        n = np.full(len(ids), len(ids))
+        return [ids, mat, (2 * mat).astype(np.int64), n, np.full(len(ids), mat.ndim)]
+
+    out = map_batches(
+        vectors,
+        ["id", "v"],
+        fn,
+        "id long, v array<float>, twice array<bigint>, batch_rows long, ndim long",
+    )
+    assert out.schema["twice"].dataType == DataType.fromDDL("array<bigint>")
+    got = {r["id"]: r for r in out.collect()}
+    want = {r["id"]: r["v"] for r in vectors.collect()}
+    assert sorted(got) == sorted(want)
+    for i, r in got.items():
+        assert r["v"] == want[i]  # the matrix row is the list row, exactly
+        assert r["twice"] == [2 * i, 4 * i, -2 * i]
+        assert r["ndim"] == 2
+    assert max(r["batch_rows"] for r in got.values()) == 3  # 3-row Arrow batches
+
+
+@pytest.mark.parametrize("bad", [None, [1.0, 2.0]], ids=["null", "ragged"])
+def test_map_batches_refuses_null_and_ragged_rows(spark, bad):
+    with pytest.raises(ValueError, match="'v'"):
+        list_matrix(pa.array([[1.0, 2.0, 3.0], bad]), "v")
+    df = spark.createDataFrame([(0, [1.0, 2.0, 3.0]), (1, bad)], "id long, v array<float>")
+    out = map_batches(df.coalesce(1), ["id", "v"], lambda ids, mat: [ids], "id long")
+    with pytest.raises(Exception, match="ValueError: column 'v'"):
+        out.collect()
+
+
+def test_map_batches_empty_input_gives_typed_empty_frame(spark, vectors):
+    ddl = "id long, v array<double>"
+    empty = map_batches(vectors.limit(0), ["id", "v"], lambda ids, mat: [ids, mat], ddl)
+    nothing = map_batches(vectors, ["id", "v"], lambda ids, mat: None, ddl)
+    for out in (empty, nothing):
+        assert out.schema == DataType.fromDDL(ddl)
+        assert out.collect() == []

@@ -9,16 +9,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from dads_spark.ops import (
+    ann_ivf,
     ann_lsh,
     attach_media_metadata,
     dedup_exact,
     doc_fingerprint,
+    embedding_pca,
     exact_duplicates,
     extract_features,
+    kmeans_assign,
     knn_bruteforce,
     language_id,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    semdedup,
     simhash64,
     text_quality,
     token_counts,
@@ -740,3 +744,82 @@ def test_png_rgba_and_corrupt(spark):
     assert got[1]["width"] == 7
     for bad in (2, 3, 4):
         assert got[bad]["width"] == -1
+
+
+# --- embedding operators on the Arrow runners ------------------------------
+
+
+def _queries(emb, ids):
+    rows = emb.filter(F.col("vec_id").isin(ids)).orderBy("vec_id").collect()
+    return (
+        np.array([r["vec_id"] for r in rows], dtype=np.int64),
+        np.array([r["embedding"] for r in rows], dtype=np.float64),
+    )
+
+
+def _pq_adc(emb):
+    from dads_spark.ops import ann_pq_adc, pq_encode, train_pq_codebooks
+
+    books = train_pq_codebooks(emb, m=4, ksub=8)
+    return ann_pq_adc(pq_encode(emb, books), books, *_queries(emb, [0, 1, 2]), k=5)
+
+
+def _sq8(emb):
+    from dads_spark.ops import ann_sq8, sq8_encode, sq8_train
+
+    lo, hi = sq8_train(emb, "embedding", dim=16)
+    return ann_sq8(sq8_encode(emb, lo, hi), _queries(emb, [0, 1, 2])[1], lo, hi, k=5)
+
+
+def _ivf_pq(emb):
+    from dads_spark.ops.quantize import ann_ivf_pq
+
+    return ann_ivf_pq(emb, [0, 1, 2], k=5, n_cells=4, n_probe=2, m=4, ksub=8)
+
+
+EMBEDDING_OPS = {
+    "knn_bruteforce": lambda emb: knn_bruteforce(emb, [0, 1, 2], k=5),
+    "ann_ivf": lambda emb: ann_ivf(emb, [0, 1, 2], k=5, n_cells=4, n_probe=2),
+    "ann_pq_adc": _pq_adc,
+    "ann_ivf_pq": _ivf_pq,
+    "ann_sq8": _sq8,
+}
+
+
+MOVED_OPS = {
+    **EMBEDDING_OPS,
+    "ann_lsh": lambda emb: ann_lsh(emb, [0, 1], k=5, n_planes=8, n_bands=3),
+    "kmeans_assign": lambda emb: kmeans_assign(emb, n_clusters=4),
+    "semdedup": lambda emb: semdedup(emb, n_clusters=4),
+    "embedding_pca": lambda emb: embedding_pca(emb, k=2, n_slices=3),
+}
+
+
+@pytest.mark.parametrize("op", sorted(MOVED_OPS))
+def test_embedding_ops_cross_as_arrow(spark, embeddings, op):
+    """Every embedding operator hands its batches to Python as Arrow: the
+    executed plan has a MapInArrow or FlatMapGroupsInArrow node and no
+    pandas node."""
+    out = MOVED_OPS[op](embeddings.select("vec_id", "embedding"))
+    assert out.count() > 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan or "FlatMapGroupsInArrow" in plan, plan
+    assert "InPandas" not in plan, plan
+
+
+@pytest.mark.parametrize("op", sorted(EMBEDDING_OPS))
+def test_partial_topk_is_batch_size_invariant(spark, embeddings, op):
+    """The shared per-batch cut keeps every true winner: 7-row Arrow
+    batches (many cuts a partition) give exactly the default-batch
+    output."""
+    emb = embeddings.select("vec_id", "embedding")
+    want = sorted(EMBEDDING_OPS[op](emb).collect())
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = sorted(EMBEDDING_OPS[op](emb).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    assert len(got) == 3 * 5
