@@ -28,10 +28,14 @@ retention store; a store needs a ranged read path, not just a codec).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType, TimestampType
@@ -41,6 +45,8 @@ from .deltadelta import decode_timestamps, encode_timestamps
 from .gorilla import decode_values, encode_values
 
 __all__ = ["compressed_tier_blobs", "write_compressed_tier", "read_compressed_tier"]
+
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def compressed_tier_blobs(
@@ -106,8 +112,11 @@ def read_compressed_tier(
     """Decode the blob store back to (keys..., ts, value) rows, restricted
     to [t0_us, t1_us) when given. The blob-level range filter is a plain
     column predicate — pushed to the parquet scan, pruning row groups
-    before any decode — and edge chunks are trimmed row-level after."""
-    blobs = spark.read.parquet(path)
+    before any decode — and edge chunks are trimmed row-level after.
+    The blob schema comes from a part file's footer, so building the
+    frame starts no Spark job."""
+    schema = _footer_schema(path)
+    blobs = (spark.read.schema(schema) if schema else spark.read).parquet(path)
     if t0_us is not None:
         blobs = blobs.filter(F.col("t_max_us") >= t0_us)
     if t1_us is not None:
@@ -157,3 +166,13 @@ def read_compressed_tier(
     if t1_us is not None:
         rows = rows.filter(t < t1_us)
     return rows
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema that the write stored in the first part file's
+    footer (an empty write still leaves one part file); None when the
+    path holds no such file, and the read then infers."""
+    parts = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+    meta = (pq.read_schema(parts[0]).metadata or {}) if parts else {}
+    row = meta.get(_ROW_METADATA)
+    return None if row is None else StructType.fromJson(json.loads(row))

@@ -251,7 +251,7 @@ def ann_ivf_pq(
     q_ids, q_raw = _query_block(embeddings, query_ids, id_col, vec_col)
     q_mat = _unit_rows(q_raw)
     qc = q_mat @ cent.T  # (nq, n_cells) coarse term
-    probe_mask = np.zeros((n_cells, len(q_ids)), dtype=bool)
+    probe_mask = np.zeros((cent.shape[0], len(q_ids)), dtype=bool)
     for qi in range(len(q_ids)):
         for c in np.argsort(-qc[qi])[:n_probe]:
             probe_mask[int(c), qi] = True
@@ -262,7 +262,7 @@ def ann_ivf_pq(
         cells = (mat @ cent.T).argmax(axis=1)
         codes = encode_block(mat - cent[cells], books)
         scores = qc[:, cells].T.copy()  # (n, nq) coarse term
-        for s in range(m):
+        for s in range(books.shape[0]):
             scores += lut[:, s, :][:, codes[:, s]].T
         allowed = probe_mask[cells] & (ids[:, None] != q_ids[None, :])
         return _partial_topk(ids, q_ids, np.where(allowed, scores, -np.inf), k)

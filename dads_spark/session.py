@@ -5,6 +5,13 @@ this engine assumes (AQE, Arrow, UTC) and ships ``dads_spark`` itself to the
 Python workers via ``addPyFile`` — the programmatic equivalent of
 ``spark-submit --py-files dads_spark.zip`` — so UDFs unpickle on executors
 that don't share the driver's working directory.
+
+On a ``local[...]`` master whose pyspark is installed outside
+``$SPARK_HOME``, the Python workers also get their own daemon,
+``dads_spark.pydaemon``: the JVM puts ``$SPARK_HOME``'s pyspark.zip first
+on every worker's path, and each task's ``importlib.invalidate_caches()``
+re-reads every zip on it (100-270 ms a task), so the daemon drops those
+entries and the workers import the driver's own pyspark.
 """
 
 from __future__ import annotations
@@ -13,7 +20,10 @@ import os
 import tempfile
 import zipfile
 
+import pyspark
 from pyspark.sql import SparkSession
+
+from .pydaemon import under_spark_home
 
 _PACKAGE_ROOT = os.path.dirname(os.path.abspath(__file__))
 
@@ -33,6 +43,21 @@ def package_zip(target_dir: str | None = None) -> str:
                 rel = os.path.join("dads_spark", os.path.relpath(full, _PACKAGE_ROOT))
                 zf.write(full, rel)
     return zip_path
+
+
+def _worker_conf(master: str, extra_conf: dict) -> dict:
+    """Daemon settings that make local workers import the driver's
+    pyspark; empty unless that pyspark lies outside ``$SPARK_HOME``."""
+    local = master == "local" or master.startswith("local[")
+    home = os.environ.get("SPARK_HOME")
+    if not (local and home) or under_spark_home(pyspark.__file__):
+        return {}
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [os.path.dirname(_PACKAGE_ROOT), extra_conf.get(key)]
+    return {
+        "spark.python.daemon.module": "dads_spark.pydaemon",
+        key: os.pathsep.join(p for p in paths if p),
+    }
 
 
 def get_spark(
@@ -68,7 +93,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in {**extra_conf, **_worker_conf(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -204,3 +204,29 @@ def test_ivf_pq_full_probe_recall_vs_exact(spark, emb_df, emb_pdf):
         hits += len(set(exact) & got[qi])
         total += 10
     assert hits / total >= 0.15
+
+
+def test_ivf_pq_scan_takes_shape_from_trained_model(spark, emb_df, emb_pdf):
+    # a model trained with m=4 subspaces and 4 cells, scanned with the
+    # default m=8 and n_cells=16: the scan follows the model, not the
+    # arguments it does not use
+    from dads_spark.oracles import pq_ivf_oracle
+    from dads_spark.ops.quantize import ann_ivf_pq, train_ivf_pq
+
+    cent, books = train_ivf_pq(emb_df, n_cells=4, m=4, ksub=8)
+    assert cent.shape[0] == 4 and books.shape[0] == 4
+    ids = emb_pdf["vec_id"].to_numpy()
+    vecs = np.array(list(emb_pdf["embedding"]), dtype=np.float64)
+    want = pq_ivf_oracle(ids, vecs, cent, books, [0, 1, 2], k=5, n_probe=2)
+
+    got_df = ann_ivf_pq(emb_df, [0, 1, 2], k=5, n_probe=2, model=(cent, books))
+    got = sorted(
+        (
+            r["query_id"],
+            r["neighbor_id"],
+            r["rank"],
+            int(np.sign(r["score"]) * np.floor(abs(r["score"]) * 1e6 + 0.5)),
+        )
+        for r in got_df.collect()
+    )
+    assert got == sorted(want)
