@@ -22,11 +22,16 @@ display projection. Equal-width binning over the baseline's [min, max]
 (ids clamped into [0, bins-1]) keeps bin assignment engine-portable,
 unlike percentile bins whose interpolation rules differ.
 
-Spark shape: histograms are groupBy counts with map-side partials — the
-shuffle carries (key, period, bin) count rows, never raw values; baseline
-bounds/histogram are broadcast (keys x bins rows). The (period x bin)
-comparison grid is built with ``sequence``+``explode`` on the tiny period
-table, so every downstream join is small-side-broadcast.
+Spark shape: each key's baseline is split off in one keyed pass. Windows
+over the keys find the key's first timestamp and its baseline value range,
+behind one hash exchange of the raw rows; every later aggregate and window
+is keyed on the keys plus more columns, so it adds no exchange and the plan
+has no join. The bin grid is one histogram aggregate in which each row
+votes 0/1 into every bin (``sequence``+``explode``), so it is complete
+without a join; baseline counts and totals are window sums over it. This
+suits a tier, whose rows per key are bounded: one key's rows meet in one
+task. The ks/mw value grid replicates the key's baseline value counts onto
+its period buckets and re-hashes on (key, bucket) before its windows.
 
 Reference analog: none; spec source is §2.4 (corpus-quality monitoring
 over time) + BASELINE.json:6 (per-tier series diagnostics).
@@ -41,6 +46,46 @@ from .tiers import bucket_expr
 __all__ = ["tv_drift", "psi_drift", "ks_drift", "mannwhitney_drift", "page_hinkley"]
 
 
+def _baseline_split(
+    df: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    baseline_days: int,
+    period: str,
+) -> DataFrame:
+    """Each row of ``df`` whose keys and timestamp are non-null, as
+    (keys..., bucket_ts, _v, v_lo, v_hi): ``_v`` is the value and
+    ``bucket_ts`` its ``period`` bucket, NULL on the key's baseline rows
+    (before its first ts + ``baseline_days``); v_lo/v_hi bound the
+    baseline's values. Every window is over the keys, so the split is one
+    hash exchange, and a later aggregate or window keyed on the keys plus
+    more columns adds none."""
+    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    keyed = W.partitionBy(*key_cols)
+    present = t_us.isNotNull()
+    for k in key_cols:
+        present = present & F.col(k).isNotNull()
+    rows = df.where(present).select(
+        *key_cols,
+        F.col(value_col).alias("_v"),
+        t_us.alias("_t_us"),
+        bucket_expr(ts_col, period),
+    )
+    is_base = F.col("_t_us") < F.min("_t_us").over(keyed) + F.lit(
+        baseline_days * 86_400_000_000
+    )
+    split = rows.select(
+        *key_cols, "_v", F.when(~is_base, F.col("bucket_ts")).alias("bucket_ts")
+    )
+    base_v = F.when(F.col("bucket_ts").isNull(), F.col("_v"))
+    return split.select(
+        "*",
+        F.min(base_v).over(keyed).alias("v_lo"),
+        F.max(base_v).over(keyed).alias("v_hi"),
+    )
+
+
 def _drift_grid(
     df: DataFrame,
     key_cols: list[str],
@@ -50,78 +95,85 @@ def _drift_grid(
     period: str,
     bins: int,
 ) -> DataFrame:
-    """Shared drift scaffolding: per-key baseline window + equal-width
-    baseline bins, period/baseline histograms, and the completed
-    (key, period-bucket, bin) grid with integer counts (n_i, m_i) and
-    totals (n_total, m_total). tv_drift and psi_drift are finalizers
-    over this grid."""
-    us_per_day = 86_400_000_000
-    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-
-    # per-key baseline window [first_ts, first_ts + baseline_days) and
-    # equal-width bin bounds from the baseline value range
-    bounds = df.groupBy(*key_cols).agg(F.min(t_us).alias("t0_us"))
-    with_t = df.join(F.broadcast(bounds), key_cols).withColumn("_t_us", t_us)
-    is_base = F.col("_t_us") < F.col("t0_us") + F.lit(baseline_days * us_per_day)
-    base_stats = (
-        with_t.filter(is_base)
-        .groupBy(*key_cols)
-        .agg(F.min(value_col).alias("v_lo"), F.max(value_col).alias("v_hi"))
-    )
-    binned = (
-        with_t.join(F.broadcast(base_stats), key_cols)
-        .withColumn(
-            "_bin",
-            # a constant baseline (v_hi == v_lo) degenerates to one bin —
-            # guard the width division (ANSI mode throws on /0)
-            F.when(F.col("v_hi") == F.col("v_lo"), F.lit(0)).otherwise(
-                F.least(
-                    F.lit(bins - 1),
-                    F.greatest(
-                        F.lit(0),
-                        F.floor(
-                            (F.col(value_col) - F.col("v_lo"))
-                            / ((F.col("v_hi") - F.col("v_lo")) / F.lit(float(bins)))
-                        ).cast("int"),
-                    ),
-                )
+    """The complete (keys..., bucket_ts, _bin) grid of the tv/psi/chi2/w1
+    finalizers: period counts n_i and baseline counts m_i over ``bins``
+    equal-width bins of the baseline range, with the totals n_total and
+    m_total. A key without baseline rows has no grid."""
+    lo, hi = F.col("v_lo"), F.col("v_hi")
+    # a constant baseline (v_hi == v_lo) degenerates to one bin — guard the
+    # width division (ANSI mode throws on /0); a null value lands in bin 0,
+    # because greatest skips nulls
+    hit = F.when(hi == lo, F.lit(0)).otherwise(
+        F.least(
+            F.lit(bins - 1),
+            F.greatest(
+                F.lit(0),
+                F.floor(
+                    (F.col("_v") - lo) / ((hi - lo) / F.lit(float(bins)))
+                ).cast("int"),
             ),
         )
-        .withColumn("_is_base", is_base)
+    )
+    # every row votes 0/1 into all bins, so the one histogram aggregate is
+    # the complete grid: bins empty on either side still contribute their
+    # |0*M - m_i*N| / |n_i*M - 0*N| terms
+    hist = (
+        _baseline_split(df, key_cols, ts_col, value_col, baseline_days, period)
+        .select(
+            *key_cols,
+            "bucket_ts",
+            hit.alias("_hit"),
+            F.explode(F.sequence(F.lit(0), F.lit(bins - 1))).alias("_bin"),
+        )
+        .groupBy(*key_cols, "bucket_ts", "_bin")
+        .agg(F.sum((F.col("_hit") == F.col("_bin")).cast("long")).alias("n_i"))
+    )
+    m_i = F.sum(F.when(F.col("bucket_ts").isNull(), F.col("n_i")))
+    per = W.partitionBy(*key_cols, "bucket_ts")
+    return (
+        hist.withColumn("m_i", m_i.over(W.partitionBy(*key_cols, "_bin")))
+        .withColumn("n_total", F.sum("n_i").over(per))
+        .withColumn("m_total", F.sum("m_i").over(per))
+        .where(F.col("bucket_ts").isNotNull() & (F.col("m_total") > 0))
     )
 
-    base_hist = (
-        binned.filter("_is_base")
-        .groupBy(*key_cols, "_bin")
-        .agg(F.count(F.lit(1)).alias("m_i"))
-    )
-    base_total = base_hist.groupBy(*key_cols).agg(F.sum("m_i").alias("m_total"))
 
-    per_hist = (
-        binned.filter(~F.col("_is_base"))
-        .groupBy(*key_cols, bucket_expr(ts_col, period), "_bin")
-        .agg(F.count(F.lit(1)).alias("n_i"))
+def _value_grid(
+    df: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    value_col: str,
+    baseline_days: int,
+    period: str,
+) -> DataFrame:
+    """The ks/mw evaluation points: per (keys..., bucket_ts, _v) the period
+    count _nd and the baseline count _nb, over the union of the bucket's
+    values and its key's baseline values. The replicated grid is
+    (baseline values x buckets) per key, so it is re-hashed on
+    (keys, bucket_ts) to spread a key's buckets over tasks."""
+    counts = (
+        _baseline_split(df, key_cols, ts_col, value_col, baseline_days, period)
+        .groupBy(*key_cols, "bucket_ts", "_v")
+        .agg(F.count(F.lit(1)).alias("_c"))
     )
-    per_total = per_hist.groupBy(*key_cols, "bucket_ts").agg(
-        F.sum("n_i").alias("n_total")
+    base = F.col("bucket_ts").isNull()
+    # each baseline count is replicated onto every period bucket of its key
+    buckets = F.collect_set("bucket_ts").over(W.partitionBy(*key_cols))
+    return (
+        counts.withColumn(
+            "_to", F.when(base, buckets).otherwise(F.array("bucket_ts"))
+        )
+        .select(
+            *key_cols,
+            F.explode("_to").alias("bucket_ts"),
+            "_v",
+            F.when(base, F.lit(0)).otherwise(F.col("_c")).alias("_nd"),
+            F.when(base, F.col("_c")).otherwise(F.lit(0)).alias("_nb"),
+        )
+        .repartition(*key_cols, "bucket_ts")
+        .groupBy(*key_cols, "bucket_ts", "_v")
+        .agg(F.sum("_nd").alias("_nd"), F.sum("_nb").alias("_nb"))
     )
-
-    # complete (key, period, bin) grid so bins empty on either side still
-    # contribute |0*M - m_i*N| / |n_i*M - 0*N| terms
-    grid = per_total.select(
-        *key_cols,
-        "bucket_ts",
-        "n_total",
-        F.explode(F.sequence(F.lit(0), F.lit(bins - 1))).alias("_bin"),
-    )
-    joined = (
-        grid.join(per_hist, [*key_cols, "bucket_ts", "_bin"], "left")
-        .join(F.broadcast(base_hist), [*key_cols, "_bin"], "left")
-        .join(F.broadcast(base_total), key_cols)
-        .withColumn("n_i", F.coalesce("n_i", F.lit(0)))
-        .withColumn("m_i", F.coalesce("m_i", F.lit(0)))
-    )
-    return joined
 
 
 def tv_drift(
@@ -189,9 +241,8 @@ def psi_drift(
     partition-invariant and oracle-pinnable. psi float = psi_q9 / 1e9 is
     a display projection.
 
-    Same plan shape as tv_drift: histograms with map-side partials over
-    (key, period, bin) count rows, baseline side broadcast, grid built
-    from sequence+explode on the tiny period table.
+    Same plan as tv_drift: the keyed baseline split and bin grid, then
+    one keyed aggregate.
     """
     joined = _drift_grid(
         df, key_cols, ts_col, value_col, baseline_days, period, bins
@@ -364,49 +415,17 @@ def ks_drift(
     right-continuous, so evaluating at each distinct observed value is
     exhaustive (between observations both ECDFs are constant).
 
-    Spark shape: raw values collapse to (key, side, value) COUNT rows
-    first (map-side partials — the shuffle never carries raw rows), the
-    per-key baseline value histogram is broadcast onto the per-period
-    value histograms, and the max is one windowed cumsum over the small
-    distinct-value grid.  At 100 TB the distinct-value grid per
-    (key, period) is the only state, bounded by value cardinality.
+    Spark shape: the keyed baseline split (one exchange of the raw rows),
+    then (key, bucket, value) COUNT rows, the key's baseline value counts
+    replicated onto its period buckets and re-hashed on (key, bucket), and
+    the max is one windowed cumsum over that distinct-value grid.  At
+    100 TB the distinct-value grid per (key, period) is the only state,
+    bounded by value cardinality.
 
     Reference analog: none; spec source is §2.4 (corpus-quality
     monitoring over time) + BASELINE.json:6 (per-tier diagnostics).
     """
-    us_per_day = 86_400_000_000
-    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    bounds = df.groupBy(*key_cols).agg(F.min(t_us).alias("t0_us"))
-    with_t = df.join(F.broadcast(bounds), key_cols).withColumn("_t_us", t_us)
-    is_base = F.col("_t_us") < F.col("t0_us") + F.lit(
-        baseline_days * us_per_day
-    )
-
-    # value-level histograms: baseline per key, and per (key, period)
-    base_vc = (
-        with_t.filter(is_base)
-        .groupBy(*key_cols, F.col(value_col).alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
-    per_vc = (
-        with_t.filter(~is_base)
-        .groupBy(*key_cols, bucket_expr(ts_col, period), F.col(value_col).alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_nd"))
-    )
-    buckets = per_vc.select(*key_cols, "bucket_ts").distinct()
-
-    # union of evaluation points: period values + the baseline histogram
-    # replicated onto each of the key's period buckets (broadcast — the
-    # baseline histogram is (keys x distinct values), sketch-sized)
-    pts = (
-        per_vc.join(
-            buckets.join(F.broadcast(base_vc), key_cols),
-            [*key_cols, "bucket_ts", "_v"],
-            "full",
-        )
-        .withColumn("_nd", F.coalesce("_nd", F.lit(0)).cast("long"))
-        .withColumn("_nb", F.coalesce("_nb", F.lit(0)).cast("long"))
-    )
+    pts = _value_grid(df, key_cols, ts_col, value_col, baseline_days, period)
     w = (
         W.partitionBy(*key_cols, "bucket_ts")
         .orderBy("_v")
@@ -555,42 +574,12 @@ def mannwhitney_drift(
     Caller bound: n*m*(N^3-N) < 2^63 — N up to ~40k rows per
     (key, bucket) at the tier grain; beyond that, pre-bucket values.
 
-    Spark shape: identical to ks_drift — raw rows collapse map-side to
-    value-count histograms, the per-key baseline histogram broadcasts
-    onto period buckets, one windowed cumsum over the merged
-    distinct-value grid, one keyed aggregate.
+    Spark shape: ks_drift's distinct-value grid, one windowed cumsum
+    over it, one keyed aggregate.
     """
-    us_per_day = 86_400_000_000
-    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    bounds = df.groupBy(*key_cols).agg(F.min(t_us).alias("t0_us"))
-    with_t = df.join(F.broadcast(bounds), key_cols).withColumn("_t_us", t_us)
-    is_base = F.col("_t_us") < F.col("t0_us") + F.lit(
-        baseline_days * us_per_day
-    )
-    base_vc = (
-        with_t.filter(is_base)
-        .groupBy(*key_cols, F.col(value_col).alias("_v"))
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
-    per_vc = (
-        with_t.filter(~is_base)
-        .groupBy(
-            *key_cols, bucket_expr(ts_col, period),
-            F.col(value_col).alias("_v"),
-        )
-        .agg(F.count(F.lit(1)).alias("_nd"))
-    )
-    buckets = per_vc.select(*key_cols, "bucket_ts").distinct()
-    pts = (
-        per_vc.join(
-            buckets.join(F.broadcast(base_vc), key_cols),
-            [*key_cols, "bucket_ts", "_v"],
-            "full",
-        )
-        .withColumn("_nd", F.coalesce("_nd", F.lit(0)).cast("long"))
-        .withColumn("_nb", F.coalesce("_nb", F.lit(0)).cast("long"))
-        .withColumn("_t", F.col("_nd") + F.col("_nb"))
-    )
+    pts = _value_grid(
+        df, key_cols, ts_col, value_col, baseline_days, period
+    ).withColumn("_t", F.col("_nd") + F.col("_nb"))
     w = (
         W.partitionBy(*key_cols, "bucket_ts")
         .orderBy("_v")
@@ -668,9 +657,8 @@ def wasserstein_drift(
     the numerator  sum_i |CN_i*M - CM_i*N|  is an exact integer, and
     the float w1 = numer/(N*M) is a display projection.
 
-    Plan shape: tv_drift's audited grid plus ONE window cumsum over
-    the (key, period, bin) relation — bins x periods rows, never the
-    raw table.
+    Plan shape: tv_drift's keyed grid plus ONE window cumsum over the
+    (key, period, bin) relation, keyed like the grid, so no exchange.
     """
     joined = _drift_grid(
         df, key_cols, ts_col, value_col, baseline_days, period, bins

@@ -33,7 +33,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..groups import per_series
+from ..groups import keyed_schema, per_series
 
 
 def theil_sen_slope(t_sec: np.ndarray, v: np.ndarray) -> tuple[float, int]:
@@ -164,9 +164,8 @@ def dtw_pairs_grouped(
                 rows, columns=["key_a", "key_b", "n_a", "n_b", "dtw"]
             )
 
-    return pairs.mapInPandas(
-        kernel, "key_a string, key_b string, n_a long, n_b long, dtw double"
-    )
+    out = keyed_schema(pairs, ["key_a", "key_b"], "n_a long, n_b long, dtw double")
+    return pairs.mapInPandas(kernel, out)
 
 
 def ols_trend_exact(

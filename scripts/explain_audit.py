@@ -488,21 +488,30 @@ def main() -> None:
                   if "Join" in l or "Exchange" in l or "HashAggregate" in l)[:600],
     ))
 
-    # --- A26: tv_drift — histogram shuffles carry (key,period,bin) rows -----
+    # --- A26: tv_drift — one keyed exchange, no join -------------------------
     p26 = plan_of(em.queries()["tv_drift"](spark, sf_dir))
     for py_op in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython",
                   "FlatMapGroupsInPandas"):
         assert py_op not in p26, f"tv_drift plan contains {py_op}"
-    assert "SortMergeJoin" not in p26, "drift joins must broadcast"
-    assert "HashAggregate" in p26
+    assert "Join" not in p26, "the bin grid is complete without a join"
+    assert len(re.findall(r"^\(\d+\) Exchange", p26, re.M)) == 1, (
+        "the baseline split's keyed exchange is the plan's only one"
+    )
+    assert "HashAggregate" in p26 and "Window" in p26
     sections.append((
-        "A26 tv_drift: histogram counts shuffle, raw values never do",
-        "PASS — baseline bounds/histogram and totals attach as broadcast "
-        "joins; every aggregation is HashAggregate with map-side partials, "
-        "so the wire carries (key, period, bin) count rows — at 10^12 rows "
-        "the drift check shuffles kilobytes per key, not values",
+        "A26 tv_drift: one keyed exchange, no join",
+        "PASS — each key's baseline splits off in one keyed pass: windows "
+        "over the key give its first timestamp and baseline value range, "
+        "one HashAggregate builds the complete (key, period, bin) grid "
+        "(each row votes into every bin), and baseline counts and totals "
+        "are window sums over it; every operator after the one "
+        "hashpartitioning(key) exchange is keyed on the key, so no join and "
+        "no second exchange. Raw rows cross that exchange, and one key's "
+        "rows meet in one task — sized for tiers, whose rows per key are "
+        "bounded",
         "\n".join(l for l in p26.splitlines()
-                  if "Join" in l or "Exchange" in l or "HashAggregate" in l)[:600],
+                  if "Join" in l or "Exchange" in l or "HashAggregate" in l
+                  or "Window" in l)[:600],
     ))
 
     # --- A27: pack_sequences — ONE window pass, all-JVM ---------------------
@@ -1860,26 +1869,29 @@ def main() -> None:
         assert "SinglePartition" not in p, (
             f"{nm} must stay keyed per series — no global window"
         )
-    assert "BroadcastHashJoin" in p92a, (
-        "the baseline value-histogram replicates via broadcast"
+    assert "Join" not in p92a, (
+        "the baseline value counts replicate onto the key's buckets "
+        "without a join"
     )
-    assert p92a.count("HashAggregate") >= 4, (
-        "raw values collapse to value-count rows map-side before any join"
+    assert len(re.findall(r"^\(\d+\) Exchange", p92a, re.M)) == 2, (
+        "one keyed exchange for the baseline split, one on (key, bucket) "
+        "for the replicated value grid"
     )
     assert "BroadcastHashJoin" in p92c, (
         "ts_features joins the key-level totals back via broadcast"
     )
     sections.append((
         "A92 KS on value histograms, PH/features windows stay keyed",
-        "PASS — ks_drift never shuffles raw rows: values collapse to "
-        "(key, side, value) COUNT rows with map-side partials, the "
-        "per-key baseline histogram broadcasts onto the period buckets, "
-        "and the ECDF max is one windowed cumsum over the distinct-value "
-        "grid; page_hinkley and ts_features run every window on the "
+        "PASS — ks_drift splits each key's baseline in one keyed pass, "
+        "collapses values to (key, bucket, value) COUNT rows, replicates "
+        "the baseline counts onto the key's period buckets and re-hashes "
+        "that grid on (key, bucket): two exchanges, no join; the ECDF "
+        "max is one windowed cumsum over the distinct-value grid; "
+        "page_hinkley and ts_features run every window on the "
         "series key (no SinglePartition anywhere) with the feature "
         "totals broadcast back",
         "\n".join(l for l in p92a.splitlines()
-                  if "Aggregate" in l or "Broadcast" in l or "Window" in l
+                  if "Aggregate" in l or "Exchange" in l or "Window" in l
                   )[:300],
     ))
 
@@ -2271,10 +2283,8 @@ def main() -> None:
             assert py_op not in p, f"{nm} plan contains {py_op}"
         assert "CartesianProduct" not in p, nm
         assert "SinglePartition" not in p, nm
-    assert "BroadcastHashJoin" in p105a, (
-        "the baseline value-histogram replicates onto period buckets "
-        "as a broadcast — the ks_drift shape (A92) reused by the rank "
-        "test"
+    assert "Join" not in p105a, (
+        "the rank test reuses ks_drift's join-free value grid (A92)"
     )
     assert p105b.count("+- Window") == 0, (
         "the Poisson finalizer is map-only on the comparison join — "
@@ -2283,8 +2293,8 @@ def main() -> None:
     sections.append((
         "A105 rank drift rides the ks grid, significance is map-only",
         "PASS — mannwhitney_drift reuses ks_drift's audited shape "
-        "(map-side value histograms, broadcast baseline, one windowed "
-        "cumsum over the merged distinct-value grid) with the doubled-"
+        "(keyed baseline split, value grid re-hashed on (key, bucket), one "
+        "windowed cumsum over the merged distinct-value grid) with the doubled-"
         "midrank aggregate in codegen; wow_significance adds its "
         "integer alert flag and z chain as a pure projection over the "
         "calendar comparison; seasonal_conformal stacks the conformal "

@@ -69,7 +69,12 @@ from dads_spark.rollup.downsample import asap_window_search, lttb_indices
 from dads_spark.rollup.forecast import croston, cusum_changepoints, holt_forecast, holt_winters
 from dads_spark.rollup.matrixprofile import matrix_profile, top_discords, top_motifs
 from dads_spark.rollup.patterns import pattern_topk_kernel
-from dads_spark.rollup.trend import mann_kendall_stats, theil_sen_slope
+from dads_spark.rollup.trend import (
+    dtw_banded,
+    dtw_pairs_grouped,
+    mann_kendall_stats,
+    theil_sen_slope,
+)
 from dads_spark.s2g import S2GParams, s2g_oracle
 from dads_spark.s2g.discord import (
     discord_series_grouped,
@@ -494,6 +499,24 @@ def test_runner_keeps_key_type_and_matches_kernel(
         want = _rows(_reference_paths()[op](df))
     assert got == want
     assert any(r[0] is None for r in got)  # the null key is one series
+
+
+@pytest.mark.parametrize("key_type", ["string", "long"])
+def test_dtw_pairs_keep_key_type(series, frames, key_type):
+    # series of unequal length are ragged list rows, so the pair kernel
+    # stays behind its own mapInPandas; the pair keys take the input's type
+    df = frames[key_type]
+    out = dtw_pairs_grouped(df, "k", "h", "v", band=10)
+    assert out.schema["key_a"].dataType == out.schema["key_b"].dataType == df.schema["k"].dataType
+    keys = LONG_KEYS if key_type == "long" else {k: k for k in LONG_KEYS}
+    vs = {keys[k]: v for k, (h, v, w) in series.items() if k is not None}
+    want = {
+        (a, b, len(vs[a]), len(vs[b]), dtw_banded(vs[a], vs[b], 10))
+        for a in vs
+        for b in vs
+        if a < b
+    }
+    assert {tuple(r) for r in out.collect()} == want
 
 
 # --- the row-batch runner --------------------------------------------------

@@ -1,4 +1,4 @@
-"""Sequence packing (ops/packing.py) and TV drift (rollup/drift.py)."""
+"""Sequence packing (ops/packing.py) and the drift family (rollup/drift.py)."""
 
 from __future__ import annotations
 
@@ -238,6 +238,183 @@ def test_wasserstein_vs_scalar_definition(spark):
     want = int(np.abs(cn * M - cm * N).sum())
     assert r["w1_numer"] == want and r["n_period"] == N
     assert r["n_baseline"] == M
+
+
+def _null_rows(spark):
+    # key "a": baseline values 0..6 one a day, then day 8 holds 1.0, 5.0 and
+    # a null value; plus a null-key series and a null-ts row of key "a"
+    day = 86_400
+    t0 = 1_699_920_000  # a UTC midnight
+    rows = [("a", t0 + d * day + 3600, float(d)) for d in range(7)]
+    rows += [("a", t0 + 8 * day + 3600 * i, v) for i, v in ((1, 1.0), (2, 5.0), (3, None))]
+    rows += [(None, t0 + 3600, 5.0), (None, t0 + 8 * day + 3600, 5.0), ("a", None, 3.0)]
+    return spark.createDataFrame(rows, "k string, s long, value double").select(
+        "k", F.timestamp_seconds("s").alias("ts"), "value"
+    )
+
+
+def test_drift_null_rows(spark):
+    """A null key or a null ts drops the row; a null value counts, in bin 0
+    of the bin grid and as the lowest evaluation point of the ECDFs."""
+    from dads_spark.rollup import ks_drift
+
+    src = _null_rows(spark)
+    bucket = 1_699_920_000 + 8 * 86_400
+    # bins of width 2 over [0, 6]: baseline m = [2, 2, 3], day 8 n = [2, 0, 1]
+    # (the null in bin 0): |2*7 - 2*3| + |0*7 - 2*3| + |1*7 - 3*3| = 16
+    tv = tv_drift(src, ["k"], "ts", "value", bins=3)
+    assert [tuple(r) for r in tv.select(
+        "k", F.unix_seconds("bucket_ts"), "tv_numer", "n_period", "n_baseline"
+    ).collect()] == [("a", bucket, 16, 3, 7)]
+    # ECDF points null, 0..6: the max |cn*7 - cm*3| is 8, at value 1
+    ks = ks_drift(src, ["k"], "ts", "value")
+    assert [tuple(r) for r in ks.select(
+        "k", F.unix_seconds("bucket_ts"), "ks_numer", "n_period", "n_baseline"
+    ).collect()] == [("a", bucket, 8, 3, 7)]
+
+
+def _join_drift_grid(df, key_cols, ts_col, value_col, baseline_days, period, bins):
+    """The bin grid as aggregates and broadcast joins: the reference for the
+    keyed split."""
+    from pyspark.sql.functions import broadcast
+
+    from dads_spark.rollup.tiers import bucket_expr
+
+    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    bounds = df.groupBy(*key_cols).agg(F.min(t_us).alias("t0_us"))
+    with_t = df.join(broadcast(bounds), key_cols).withColumn("_t_us", t_us)
+    is_base = F.col("_t_us") < F.col("t0_us") + F.lit(baseline_days * 86_400_000_000)
+    base_stats = (
+        with_t.filter(is_base)
+        .groupBy(*key_cols)
+        .agg(F.min(value_col).alias("v_lo"), F.max(value_col).alias("v_hi"))
+    )
+    width = (F.col("v_hi") - F.col("v_lo")) / F.lit(float(bins))
+    binned = (
+        with_t.join(broadcast(base_stats), key_cols)
+        .withColumn(
+            "_bin",
+            F.when(F.col("v_hi") == F.col("v_lo"), F.lit(0)).otherwise(
+                F.least(
+                    F.lit(bins - 1),
+                    F.greatest(
+                        F.lit(0),
+                        F.floor((F.col(value_col) - F.col("v_lo")) / width).cast("int"),
+                    ),
+                )
+            ),
+        )
+        .withColumn("_is_base", is_base)
+    )
+    base_hist = (
+        binned.filter("_is_base").groupBy(*key_cols, "_bin").agg(F.count(F.lit(1)).alias("m_i"))
+    )
+    base_total = base_hist.groupBy(*key_cols).agg(F.sum("m_i").alias("m_total"))
+    per_hist = (
+        binned.filter(~F.col("_is_base"))
+        .groupBy(*key_cols, bucket_expr(ts_col, period), "_bin")
+        .agg(F.count(F.lit(1)).alias("n_i"))
+    )
+    per_total = per_hist.groupBy(*key_cols, "bucket_ts").agg(F.sum("n_i").alias("n_total"))
+    grid = per_total.select(
+        *key_cols, "bucket_ts", "n_total",
+        F.explode(F.sequence(F.lit(0), F.lit(bins - 1))).alias("_bin"),
+    )
+    return (
+        grid.join(per_hist, [*key_cols, "bucket_ts", "_bin"], "left")
+        .join(broadcast(base_hist), [*key_cols, "_bin"], "left")
+        .join(broadcast(base_total), key_cols)
+        .withColumn("n_i", F.coalesce("n_i", F.lit(0)))
+        .withColumn("m_i", F.coalesce("m_i", F.lit(0)))
+    )
+
+
+def _join_value_grid(df, key_cols, ts_col, value_col, baseline_days, period):
+    """The ks/mw value grid as aggregates, a broadcast and a full join."""
+    from pyspark.sql.functions import broadcast
+
+    from dads_spark.rollup.tiers import bucket_expr
+
+    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    bounds = df.groupBy(*key_cols).agg(F.min(t_us).alias("t0_us"))
+    with_t = df.join(broadcast(bounds), key_cols).withColumn("_t_us", t_us)
+    is_base = F.col("_t_us") < F.col("t0_us") + F.lit(baseline_days * 86_400_000_000)
+    base_vc = (
+        with_t.filter(is_base)
+        .groupBy(*key_cols, F.col(value_col).alias("_v"))
+        .agg(F.count(F.lit(1)).alias("_nb"))
+    )
+    per_vc = (
+        with_t.filter(~is_base)
+        .groupBy(*key_cols, bucket_expr(ts_col, period), F.col(value_col).alias("_v"))
+        .agg(F.count(F.lit(1)).alias("_nd"))
+    )
+    buckets = per_vc.select(*key_cols, "bucket_ts").distinct()
+    return (
+        per_vc.join(
+            buckets.join(broadcast(base_vc), key_cols), [*key_cols, "bucket_ts", "_v"], "full"
+        )
+        .withColumn("_nd", F.coalesce("_nd", F.lit(0)).cast("long"))
+        .withColumn("_nb", F.coalesce("_nb", F.lit(0)).cast("long"))
+    )
+
+
+def _drift_family_events(spark):
+    # two key columns; "flat" has a constant baseline (one bin), "b" shifts
+    # past its baseline range after day 10; values tie (40 distinct)
+    sec = (F.col("id") * 7919) % (15 * 86_400)
+    keys = F.array(*map(F.lit, ["a", "b", "c", "flat"]))
+    k = F.element_at(keys, (F.col("id") % 4 + 1).cast("int"))
+    v = F.pmod(F.hash("id"), F.lit(40)) / 4.0
+    value = (
+        F.when((k == "flat") & (sec < 8 * 86_400), F.lit(5.0))
+        .when((k == "b") & (sec > 10 * 86_400), v + 12.0)
+        .otherwise(v)
+    )
+    return spark.range(3_000).select(
+        k.alias("k"),
+        (F.col("id") % 3).alias("g"),
+        F.timestamp_seconds(F.lit(1_704_067_200) + sec).alias("ts"),
+        value.alias("value"),
+    )
+
+
+def test_drift_family_equals_join_grids(spark, monkeypatch):
+    """All six drift operators give the outputs of the aggregate-and-join
+    grids they replaced, over 1 and 13 input partitions."""
+    from dads_spark.rollup import drift
+
+    src = _drift_family_events(spark)
+    ops = [
+        drift.tv_drift, drift.psi_drift, drift.chi2_drift,
+        drift.wasserstein_drift, drift.ks_drift, drift.mannwhitney_drift,
+    ]
+
+    def outputs():
+        return {
+            (op.__name__, n): sorted(
+                tuple(r) for r in op(src.repartition(n), ["k", "g"], "ts", "value").collect()
+            )
+            for op in ops
+            for n in (1, 13)
+        }
+
+    got = outputs()
+    monkeypatch.setattr(drift, "_drift_grid", _join_drift_grid)
+    monkeypatch.setattr(drift, "_value_grid", _join_value_grid)
+    want = outputs()
+    assert all(got[c] for c in got)
+    for case in want:
+        assert got[case] == want[case], case
+
+
+def test_bin_grid_is_one_keyed_exchange(spark):
+    out = tv_drift(_drift_events(spark, True), ["event_type"], "ts", "value")
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the final AQE plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan, plan
 
 
 def test_chunk_documents_overlap_and_stubs(spark):

@@ -140,6 +140,12 @@ def test_logged_schema_equals_inferred_for_every_stage(spark, clean):
         assert clean.store.read(t).schema == spark.read.parquet(entry["path"]).schema, t
 
 
+def test_count_drift_is_two_jobs(clean):
+    # the keyed baseline split has one shuffle: its map job and the write
+    n_jobs = {r["stage"]: r["n_jobs"] for r in clean.metrics.rows()}
+    assert n_jobs["count_drift"] == 2
+
+
 def test_pure_resume_starts_no_job(spark, pages, clean):
     job = PagesRollupJob(spark, clean.ckpt.root, s2g_params=PARAMS)
     assert _jobs(spark, lambda: job.run(pages, DESC)) == 0
