@@ -22,16 +22,18 @@ display projection. Equal-width binning over the baseline's [min, max]
 (ids clamped into [0, bins-1]) keeps bin assignment engine-portable,
 unlike percentile bins whose interpolation rules differ.
 
-Spark shape: each key's baseline is split off in one keyed pass. Windows
-over the keys find the key's first timestamp and its baseline value range,
-behind one hash exchange of the raw rows; every later aggregate and window
-is keyed on the keys plus more columns, so it adds no exchange and the plan
-has no join. The bin grid is one histogram aggregate in which each row
-votes 0/1 into every bin (``sequence``+``explode``), so it is complete
-without a join; baseline counts and totals are window sums over it. This
-suits a tier, whose rows per key are bounded: one key's rows meet in one
-task. The ks/mw value grid replicates the key's baseline value counts onto
-its period buckets and re-hashes on (key, bucket) before its windows.
+Spark shape: each key's baseline is split off in one keyed pass. A window
+over the keys finds the key's first timestamp, so the raw (key, ts, value)
+rows cross one hash exchange on the keys and each key's rows are split in
+one task; every later aggregate and window is keyed on the keys plus more
+columns, so it adds no exchange and the plan has no join. The bin grid is
+a (key, bucket, bin) count aggregate in which each count votes 0/1 into
+every bin, so it is complete without a join; baseline counts and totals
+are window sums over it. ks/mw read both ECDFs off windows over the (key,
+bucket, value) counts. The cost of the one pass: after the exchange a
+key's rows are worked in one task, so the split uses at most one core per
+key, and map-side partial aggregation cannot shrink the shuffle, because a
+row's side depends on its key's first timestamp.
 
 Reference analog: none; spec source is §2.4 (corpus-quality monitoring
 over time) + BASELINE.json:6 (per-tier series diagnostics).
@@ -55,14 +57,13 @@ def _baseline_split(
     period: str,
 ) -> DataFrame:
     """Each row of ``df`` whose keys and timestamp are non-null, as
-    (keys..., bucket_ts, _v, v_lo, v_hi): ``_v`` is the value and
-    ``bucket_ts`` its ``period`` bucket, NULL on the key's baseline rows
-    (before its first ts + ``baseline_days``); v_lo/v_hi bound the
-    baseline's values. Every window is over the keys, so the split is one
-    hash exchange, and a later aggregate or window keyed on the keys plus
-    more columns adds none."""
+    (keys..., bucket_ts, _v): ``_v`` is the value and ``bucket_ts`` its
+    ``period`` bucket, NULL on the key's baseline rows (before its first
+    ts + ``baseline_days``). The first ts is a window over the keys, so the
+    raw rows cross one hash exchange on the keys and each key's rows are
+    split in one task; a later aggregate or window keyed on the keys plus
+    more columns adds no exchange."""
     t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    keyed = W.partitionBy(*key_cols)
     present = t_us.isNotNull()
     for k in key_cols:
         present = present & F.col(k).isNotNull()
@@ -72,17 +73,11 @@ def _baseline_split(
         t_us.alias("_t_us"),
         bucket_expr(ts_col, period),
     )
-    is_base = F.col("_t_us") < F.min("_t_us").over(keyed) + F.lit(
-        baseline_days * 86_400_000_000
-    )
-    split = rows.select(
-        *key_cols, "_v", F.when(~is_base, F.col("bucket_ts")).alias("bucket_ts")
-    )
-    base_v = F.when(F.col("bucket_ts").isNull(), F.col("_v"))
-    return split.select(
-        "*",
-        F.min(base_v).over(keyed).alias("v_lo"),
-        F.max(base_v).over(keyed).alias("v_hi"),
+    is_base = F.col("_t_us") < F.min("_t_us").over(
+        W.partitionBy(*key_cols)
+    ) + F.lit(baseline_days * 86_400_000_000)
+    return rows.select(
+        *key_cols, F.when(~is_base, F.col("bucket_ts")).alias("bucket_ts"), "_v"
     )
 
 
@@ -114,19 +109,32 @@ def _drift_grid(
             ),
         )
     )
-    # every row votes 0/1 into all bins, so the one histogram aggregate is
-    # the complete grid: bins empty on either side still contribute their
-    # |0*M - m_i*N| / |n_i*M - 0*N| terms
-    hist = (
+    base_v = F.when(F.col("bucket_ts").isNull(), F.col("_v"))
+    keyed = W.partitionBy(*key_cols)
+    hits = (
         _baseline_split(df, key_cols, ts_col, value_col, baseline_days, period)
-        .select(
+        .withColumn("v_lo", F.min(base_v).over(keyed))
+        .withColumn("v_hi", F.max(base_v).over(keyed))
+        .groupBy(*key_cols, "bucket_ts", hit.alias("_hit"))
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+    # each (bucket, hit) count votes 0/1 into all bins, so the second
+    # aggregate is the complete grid: bins empty on either side still
+    # contribute their |0*M - m_i*N| / |n_i*M - 0*N| terms
+    hist = (
+        hits.select(
             *key_cols,
             "bucket_ts",
-            hit.alias("_hit"),
+            "_hit",
+            "_c",
             F.explode(F.sequence(F.lit(0), F.lit(bins - 1))).alias("_bin"),
         )
         .groupBy(*key_cols, "bucket_ts", "_bin")
-        .agg(F.sum((F.col("_hit") == F.col("_bin")).cast("long")).alias("n_i"))
+        .agg(
+            F.sum(
+                F.when(F.col("_hit") == F.col("_bin"), F.col("_c")).otherwise(0)
+            ).alias("n_i")
+        )
     )
     m_i = F.sum(F.when(F.col("bucket_ts").isNull(), F.col("n_i")))
     per = W.partitionBy(*key_cols, "bucket_ts")
@@ -138,7 +146,7 @@ def _drift_grid(
     )
 
 
-def _value_grid(
+def _value_points(
     df: DataFrame,
     key_cols: list[str],
     ts_col: str,
@@ -146,33 +154,43 @@ def _value_grid(
     baseline_days: int,
     period: str,
 ) -> DataFrame:
-    """The ks/mw evaluation points: per (keys..., bucket_ts, _v) the period
-    count _nd and the baseline count _nb, over the union of the bucket's
-    values and its key's baseline values. The replicated grid is
-    (baseline values x buckets) per key, so it is re-hashed on
-    (keys, bucket_ts) to spread a key's buckets over tasks."""
+    """The ks/mw evaluation points: one row per (keys..., bucket_ts, _v) of
+    a period bucket's distinct value, with its count _nd, the bucket's count
+    at or below it _cn and total _n, and the key's baseline count at it
+    _nb, at or below it _cm and in total _m, and the baseline tie term _tb
+    = sum(nb^3 - nb) over all baseline values. A null value sorts first.
+    Both ECDFs are read off windows over the (key, bucket, value) counts, so
+    the baseline is never copied onto the buckets."""
     counts = (
         _baseline_split(df, key_cols, ts_col, value_col, baseline_days, period)
         .groupBy(*key_cols, "bucket_ts", "_v")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-    base = F.col("bucket_ts").isNull()
-    # each baseline count is replicated onto every period bucket of its key
-    buckets = F.collect_set("bucket_ts").over(W.partitionBy(*key_cols))
+    nb = F.when(F.col("bucket_ts").isNull(), F.col("_c")).otherwise(F.lit(0))
+    by_v = W.partitionBy(*key_cols).orderBy("_v")
+    keyed = W.partitionBy(*key_cols)
+    per = W.partitionBy(*key_cols, "bucket_ts")
     return (
-        counts.withColumn(
-            "_to", F.when(base, buckets).otherwise(F.array("bucket_ts"))
-        )
-        .select(
+        counts.select(
             *key_cols,
-            F.explode("_to").alias("bucket_ts"),
+            "bucket_ts",
             "_v",
-            F.when(base, F.lit(0)).otherwise(F.col("_c")).alias("_nd"),
-            F.when(base, F.col("_c")).otherwise(F.lit(0)).alias("_nb"),
+            F.col("_c").alias("_nd"),
+            F.sum(nb).over(by_v.rangeBetween(W.currentRow, W.currentRow)).alias("_nb"),
+            F.sum(nb)
+            .over(by_v.rangeBetween(W.unboundedPreceding, W.currentRow))
+            .alias("_cm"),
+            F.sum(nb).over(keyed).alias("_m"),
+            F.sum(nb * nb * nb - nb).over(keyed).alias("_tb"),
         )
-        .repartition(*key_cols, "bucket_ts")
-        .groupBy(*key_cols, "bucket_ts", "_v")
-        .agg(F.sum("_nd").alias("_nd"), F.sum("_nb").alias("_nb"))
+        .where(F.col("bucket_ts").isNotNull())
+        .withColumn(
+            "_cn",
+            F.sum("_nd").over(
+                per.orderBy("_v").rowsBetween(W.unboundedPreceding, W.currentRow)
+            ),
+        )
+        .withColumn("_n", F.sum("_nd").over(per))
     )
 
 
@@ -412,43 +430,39 @@ def ks_drift(
 
     ``ks_numer`` (the integer max) and the totals pin the metric
     bit-for-bit; the float quotient is a display projection.  ECDFs are
-    right-continuous, so evaluating at each distinct observed value is
-    exhaustive (between observations both ECDFs are constant).
+    right-continuous and constant between observations, and on a stretch
+    of baseline-only values cn is fixed while cm grows, so the convex
+    |cn*M - cm*N| peaks at a stretch end: the max over the union of values
+    is the max, over the period's own values x, of the gap at x and the
+    gap just below x (cn(x) - nd(x), cm(x) - nb(x)).
 
-    Spark shape: the keyed baseline split (one exchange of the raw rows),
-    then (key, bucket, value) COUNT rows, the key's baseline value counts
-    replicated onto its period buckets and re-hashed on (key, bucket), and
-    the max is one windowed cumsum over that distinct-value grid.  At
-    100 TB the distinct-value grid per (key, period) is the only state,
-    bounded by value cardinality.
+    Spark shape: the keyed baseline split (one exchange of the raw rows,
+    each key's rows in one task), then (key, bucket, value) COUNT rows;
+    the baseline ECDF is a window over the key's counts ordered by value,
+    the period ECDF a windowed cumsum per (key, bucket), and the max one
+    keyed aggregate.  Beyond the split, the state per key is its distinct
+    (bucket, value) counts.
 
     Reference analog: none; spec source is §2.4 (corpus-quality
     monitoring over time) + BASELINE.json:6 (per-tier diagnostics).
     """
-    pts = _value_grid(df, key_cols, ts_col, value_col, baseline_days, period)
-    w = (
-        W.partitionBy(*key_cols, "bucket_ts")
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    pts = _value_points(
+        df, key_cols, ts_col, value_col, baseline_days, period
     )
-    wall = W.partitionBy(*key_cols, "bucket_ts").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    cum = pts.select(
-        *key_cols,
-        "bucket_ts",
-        F.sum("_nd").over(w).alias("_cn"),
-        F.sum("_nb").over(w).alias("_cm"),
-        F.sum("_nd").over(wall).alias("_n"),
-        F.sum("_nb").over(wall).alias("_m"),
-    )
+    gap = lambda cn, cm: F.abs(cn * F.col("_m") - cm * F.col("_n"))  # noqa: E731
     return (
-        cum.groupBy(*key_cols, "bucket_ts")
+        pts.groupBy(*key_cols, "bucket_ts")
         .agg(
             F.max("_n").alias("n_period"),
             F.max("_m").alias("n_baseline"),
             F.max(
-                F.abs(F.col("_cn") * F.col("_m") - F.col("_cm") * F.col("_n"))
+                F.greatest(
+                    gap(F.col("_cn"), F.col("_cm")),
+                    gap(
+                        F.col("_cn") - F.col("_nd"),
+                        F.col("_cm") - F.col("_nb"),
+                    ),
+                )
             ).alias("ks_numer"),
         )
         .select(
@@ -574,34 +588,25 @@ def mannwhitney_drift(
     Caller bound: n*m*(N^3-N) < 2^63 — N up to ~40k rows per
     (key, bucket) at the tier grain; beyond that, pre-bucket values.
 
-    Spark shape: ks_drift's distinct-value grid, one windowed cumsum
-    over it, one keyed aggregate.
+    Spark shape: ks_drift's evaluation points, one keyed aggregate.
+    Only a period value carries rank mass: with t = nd + nb and the
+    union's count at or below it cn + cm, 2U + n*(n+1) = sum nd*(2*(cn +
+    cm) - t + 1); the tie term adds each baseline-only value's nb^3 - nb
+    through the key's baseline total _tb.
     """
-    pts = _value_grid(
+    pts = _value_points(
         df, key_cols, ts_col, value_col, baseline_days, period
-    ).withColumn("_t", F.col("_nd") + F.col("_nb"))
-    w = (
-        W.partitionBy(*key_cols, "bucket_ts")
-        .orderBy("_v")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    cum = pts.select(
-        *key_cols,
-        "bucket_ts",
-        "_nd",
-        "_nb",
-        "_t",
-        F.sum("_t").over(w).alias("_ct"),
-    )
-    agg = cum.groupBy(*key_cols, "bucket_ts").agg(
+    t, nb = F.col("_nd") + F.col("_nb"), F.col("_nb")
+    agg = pts.groupBy(*key_cols, "bucket_ts").agg(
         F.sum("_nd").alias("n_period"),
-        F.sum("_nb").alias("n_baseline"),
+        F.max("_m").alias("n_baseline"),
         F.sum(
             F.col("_nd")
-            * (F.lit(2) * F.col("_ct") - F.col("_t") + F.lit(1))
+            * (F.lit(2) * (F.col("_cn") + F.col("_cm")) - t + F.lit(1))
         ).alias("_r2"),
-        F.sum(
-            F.col("_t") * F.col("_t") * F.col("_t") - F.col("_t")
+        (
+            F.sum(t * t * t - t - (nb * nb * nb - nb)) + F.max("_tb")
         ).alias("tie_term"),
     )
     n, m = F.col("n_period"), F.col("n_baseline")

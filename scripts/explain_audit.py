@@ -501,14 +501,15 @@ def main() -> None:
     sections.append((
         "A26 tv_drift: one keyed exchange, no join",
         "PASS — each key's baseline splits off in one keyed pass: windows "
-        "over the key give its first timestamp and baseline value range, "
-        "one HashAggregate builds the complete (key, period, bin) grid "
-        "(each row votes into every bin), and baseline counts and totals "
-        "are window sums over it; every operator after the one "
+        "over the key give its first timestamp and baseline range, the rows "
+        "collapse to (key, bucket, bin hit) counts, and a second "
+        "HashAggregate completes the (key, period, bin) grid (each count "
+        "votes into every bin); baseline counts and totals are windows. "
+        "Every operator after the one "
         "hashpartitioning(key) exchange is keyed on the key, so no join and "
-        "no second exchange. Raw rows cross that exchange, and one key's "
-        "rows meet in one task — sized for tiers, whose rows per key are "
-        "bounded",
+        "no second exchange. Raw (key, ts, value) rows cross that exchange "
+        "and one key's rows are split in one task, so the split uses at "
+        "most one core per key",
         "\n".join(l for l in p26.splitlines()
                   if "Join" in l or "Exchange" in l or "HashAggregate" in l
                   or "Window" in l)[:600],
@@ -1870,23 +1871,21 @@ def main() -> None:
             f"{nm} must stay keyed per series — no global window"
         )
     assert "Join" not in p92a, (
-        "the baseline value counts replicate onto the key's buckets "
-        "without a join"
+        "the baseline ECDF is a window over the key's value counts"
     )
-    assert len(re.findall(r"^\(\d+\) Exchange", p92a, re.M)) == 2, (
-        "one keyed exchange for the baseline split, one on (key, bucket) "
-        "for the replicated value grid"
+    assert len(re.findall(r"^\(\d+\) Exchange", p92a, re.M)) == 1, (
+        "the baseline split's keyed exchange is the plan's only one"
     )
     assert "BroadcastHashJoin" in p92c, (
         "ts_features joins the key-level totals back via broadcast"
     )
     sections.append((
         "A92 KS on value histograms, PH/features windows stay keyed",
-        "PASS — ks_drift splits each key's baseline in one keyed pass, "
-        "collapses values to (key, bucket, value) COUNT rows, replicates "
-        "the baseline counts onto the key's period buckets and re-hashes "
-        "that grid on (key, bucket): two exchanges, no join; the ECDF "
-        "max is one windowed cumsum over the distinct-value grid; "
+        "PASS — ks_drift splits each key's baseline in one keyed pass "
+        "and collapses values to (key, bucket, value) COUNT rows; the "
+        "baseline ECDF is a window over the key's counts ordered by value "
+        "and the period ECDF a windowed cumsum per (key, bucket), so the "
+        "baseline is never copied onto the buckets: one exchange, no join; "
         "page_hinkley and ts_features run every window on the "
         "series key (no SinglePartition anywhere) with the feature "
         "totals broadcast back",
@@ -2284,7 +2283,7 @@ def main() -> None:
         assert "CartesianProduct" not in p, nm
         assert "SinglePartition" not in p, nm
     assert "Join" not in p105a, (
-        "the rank test reuses ks_drift's join-free value grid (A92)"
+        "the rank test reuses ks_drift's join-free evaluation points (A92)"
     )
     assert p105b.count("+- Window") == 0, (
         "the Poisson finalizer is map-only on the comparison join — "
@@ -2293,8 +2292,8 @@ def main() -> None:
     sections.append((
         "A105 rank drift rides the ks grid, significance is map-only",
         "PASS — mannwhitney_drift reuses ks_drift's audited shape "
-        "(keyed baseline split, value grid re-hashed on (key, bucket), one "
-        "windowed cumsum over the merged distinct-value grid) with the doubled-"
+        "(keyed baseline split, both ECDFs as windows over the (key, "
+        "bucket, value) counts, one exchange) with the doubled-"
         "midrank aggregate in codegen; wow_significance adds its "
         "integer alert flag and z chain as a pure projection over the "
         "calendar comparison; seasonal_conformal stacks the conformal "

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
+from pyspark.sql import Window as W, functions as F
 
 from dads_spark.ops.packing import pack_sequences
 from dads_spark.rollup.drift import tv_drift
@@ -273,6 +274,37 @@ def test_drift_null_rows(spark):
     ).collect()] == [("a", bucket, 8, 3, 7)]
 
 
+def test_drift_null_values_merge(spark):
+    """Null values on both sides of a ks/mw split are one evaluation point,
+    the lowest, holding both sides' null counts."""
+    from dads_spark.rollup import ks_drift, mannwhitney_drift
+
+    day, t0 = 86_400, 1_699_920_000
+    # baseline: null, null, 1, 2 (M = 4); day 8: null, null, 3 (N = 3)
+    base = [(d, v) for d, v in ((0, None), (1, None), (2, 1.0), (3, 2.0))]
+    rows = [("a", t0 + d * day + 3600, v) for d, v in base]
+    rows += [("a", t0 + 8 * day + 3600 * i, v) for i, v in ((1, None), (2, None), (3, 3.0))]
+    src = spark.createDataFrame(rows, "k string, s long, value double").select(
+        "k", F.timestamp_seconds("s").alias("ts"), "value"
+    )
+    bucket = t0 + 8 * day
+    # points null (2, 2), 1, 2, 3 with (cn, cm) = (2, 2), (2, 3), (2, 4),
+    # (3, 4): max |cn*4 - cm*3| = 4 at value 2 (a null split into two points
+    # would reach 8 or 6)
+    ks = ks_drift(src, ["k"], "ts", "value")
+    assert [tuple(r) for r in ks.select(
+        "k", F.unix_seconds("bucket_ts"), "ks_numer", "n_period", "n_baseline"
+    ).collect()] == [("a", bucket, 4, 3, 4)]
+    # doubled ranks: the null tie group of 4 (ranks 1..4) gives the two
+    # period nulls 2*2.5 each, the 3 rank 7: 2U = 2*(2.5 + 2.5 + 7) - 3*4 = 12;
+    # tie term 4^3 - 4 = 60 (two groups of 2 would give 12)
+    mw = mannwhitney_drift(src, ["k"], "ts", "value")
+    assert [tuple(r) for r in mw.select(
+        "k", F.unix_seconds("bucket_ts"), "n_period", "n_baseline", "u2",
+        "tie_term", "z_q6",
+    ).collect()] == [("a", bucket, 3, 4, 12, 60, 0)]
+
+
 def _join_drift_grid(df, key_cols, ts_col, value_col, baseline_days, period, bins):
     """The bin grid as aggregates and broadcast joins: the reference for the
     keyed split."""
@@ -359,6 +391,41 @@ def _join_value_grid(df, key_cols, ts_col, value_col, baseline_days, period):
     )
 
 
+def _grid_ks(pts, key_cols):
+    """ks_drift's finalizer over the value grid: the ECDF gap at every point."""
+    w = W.partitionBy(*key_cols, "bucket_ts").orderBy("_v")
+    w = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    wall = W.partitionBy(*key_cols, "bucket_ts")
+    cum = pts.select(
+        *key_cols, "bucket_ts",
+        F.sum("_nd").over(w).alias("_cn"), F.sum("_nb").over(w).alias("_cm"),
+        F.sum("_nd").over(wall).alias("_n"), F.sum("_nb").over(wall).alias("_m"),
+    )
+    return cum.groupBy(*key_cols, "bucket_ts").agg(
+        F.max(F.abs(F.col("_cn") * F.col("_m") - F.col("_cm") * F.col("_n")))
+        .cast("long").alias("ks_numer"),
+        F.max("_n").alias("n_period"),
+        F.max("_m").alias("n_baseline"),
+    )
+
+
+def _grid_mw(pts, key_cols):
+    """mannwhitney_drift's doubled rank sum and tie term over the value grid."""
+    w = W.partitionBy(*key_cols, "bucket_ts").orderBy("_v")
+    w = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    t = F.col("_nd") + F.col("_nb")
+    cum = pts.select(*key_cols, "bucket_ts", "_nd", "_nb", t.alias("_t"),
+                     F.sum(t).over(w).alias("_ct"))
+    n = F.sum("_nd")
+    return cum.groupBy(*key_cols, "bucket_ts").agg(
+        n.alias("n_period"),
+        F.sum("_nb").alias("n_baseline"),
+        (F.sum(F.col("_nd") * (2 * F.col("_ct") - F.col("_t") + 1)) - n * (n + 1))
+        .alias("u2"),
+        F.sum(F.col("_t") * F.col("_t") * F.col("_t") - F.col("_t")).alias("tie_term"),
+    )
+
+
 def _drift_family_events(spark):
     # two key columns; "flat" has a constant baseline (one bin), "b" shifts
     # past its baseline range after day 10; values tie (40 distinct)
@@ -381,35 +448,47 @@ def _drift_family_events(spark):
 
 def test_drift_family_equals_join_grids(spark, monkeypatch):
     """All six drift operators give the outputs of the aggregate-and-join
-    grids they replaced, over 1 and 13 input partitions."""
+    grids they replaced, over 1 and 13 input partitions: the bin-grid
+    finalizers over the join grid, and ks/mw's integer columns against
+    their finalizers over the replicated value grid."""
     from dads_spark.rollup import drift
 
     src = _drift_family_events(spark)
-    ops = [
-        drift.tv_drift, drift.psi_drift, drift.chi2_drift,
-        drift.wasserstein_drift, drift.ks_drift, drift.mannwhitney_drift,
-    ]
+    keys = ["k", "g"]
+    bin_ops = [drift.tv_drift, drift.psi_drift, drift.chi2_drift, drift.wasserstein_drift]
+    ks_cols = [*keys, "bucket_ts", "ks_numer", "n_period", "n_baseline"]
+    mw_cols = [*keys, "bucket_ts", "n_period", "n_baseline", "u2", "tie_term"]
+
+    def rows(df, cols=None):
+        return sorted(tuple(r) for r in (df.select(*cols) if cols else df).collect())
 
     def outputs():
-        return {
-            (op.__name__, n): sorted(
-                tuple(r) for r in op(src.repartition(n), ["k", "g"], "ts", "value").collect()
-            )
-            for op in ops
-            for n in (1, 13)
-        }
+        out = {}
+        for n in (1, 13):
+            part = src.repartition(n)
+            for op in bin_ops:
+                out[op.__name__, n] = rows(op(part, keys, "ts", "value"))
+            out["ks", n] = rows(drift.ks_drift(part, keys, "ts", "value"), ks_cols)
+            out["mw", n] = rows(drift.mannwhitney_drift(part, keys, "ts", "value"), mw_cols)
+        return out
 
     got = outputs()
     monkeypatch.setattr(drift, "_drift_grid", _join_drift_grid)
-    monkeypatch.setattr(drift, "_value_grid", _join_value_grid)
     want = outputs()
+    for n in (1, 13):
+        pts = _join_value_grid(src.repartition(n), keys, "ts", "value", 7, "day")
+        want["ks", n] = rows(_grid_ks(pts, keys), ks_cols)
+        want["mw", n] = rows(_grid_mw(pts, keys), mw_cols)
     assert all(got[c] for c in got)
     for case in want:
         assert got[case] == want[case], case
 
 
-def test_bin_grid_is_one_keyed_exchange(spark):
-    out = tv_drift(_drift_events(spark, True), ["event_type"], "ts", "value")
+@pytest.mark.parametrize("op", ["tv_drift", "wasserstein_drift", "ks_drift", "mannwhitney_drift"])
+def test_drift_plan_is_one_keyed_exchange(spark, op):
+    from dads_spark.rollup import drift
+
+    out = getattr(drift, op)(_drift_events(spark, True), ["event_type"], "ts", "value")
     assert out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]  # the final AQE plan
